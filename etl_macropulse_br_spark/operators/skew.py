@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_macropulse_br_spark.sinks.writers import replace_table
+
 
 def salted_join(
     skewed: DataFrame,
@@ -92,40 +94,6 @@ def salted_join(
     return out.drop("__salt")
 
 
-def _table_location(spark: SparkSession, table: str) -> str:
-    """Warehouse directory a managed table of this name occupies.
-    Supports unqualified (default database) and ``db.table`` names —
-    the two shapes ``saveAsTable`` produces under the warehouse dir."""
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(
-        spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    ).path
-    parts = table.lower().split(".")
-    if len(parts) == 1:
-        return f"{warehouse}/{parts[0]}"
-    if len(parts) == 2:
-        return f"{warehouse}/{parts[0]}.db/{parts[1]}"
-    raise ValueError(f"unsupported table name {table!r}")
-
-
-def drop_table_and_location(spark: SparkSession, table: str) -> None:
-    """Drop a managed table and, ONLY when the catalog had no entry,
-    remove its orphaned warehouse directory. A fresh session's
-    in-memory catalog does not know tables a previous session wrote,
-    but their directories persist — a bare ``saveAsTable`` then fails
-    with LOCATION_ALREADY_EXISTS. When the catalog DOES know the
-    table, ``DROP TABLE`` itself removes the managed location, so no
-    out-of-band rmtree runs (r4 ADVICE: never rmtree a live table's
-    data directly)."""
-    import shutil
-
-    existed = spark.catalog.tableExists(table)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if not existed:
-        shutil.rmtree(_table_location(spark, table), ignore_errors=True)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -138,34 +106,18 @@ def write_bucketed(
     exchange-free. Replaces any prior table of the same name,
     including an orphaned location from an earlier session.
 
-    Replace is crash-safe: the previous location (live or orphaned)
-    is MOVED ASIDE, not deleted, before the new write; it is removed
-    only after ``saveAsTable`` succeeds and restored if the write
-    throws — a failed replacement never destroys the old data
+    The replace runs through :func:`sinks.writers.replace_table`:
+    the previous location is moved aside and restored if the write
+    throws, so a failed replacement never destroys the old data
     (r4 ADVICE)."""
-    import os
-    import shutil
-
-    spark = df.sparkSession
-    loc = _table_location(spark, table)
-    backup = None
-    if os.path.isdir(loc):
-        backup = f"{loc}.__replacing"
-        shutil.rmtree(backup, ignore_errors=True)  # stale crash leftover
-        os.rename(loc, backup)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")  # location already moved
-    try:
-        writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-        if sort_col:
-            writer = writer.sortBy(sort_col)
-        writer.format("parquet").saveAsTable(table)
-    except Exception:
-        if backup is not None:
-            shutil.rmtree(loc, ignore_errors=True)  # partial new write
-            os.rename(backup, loc)
-        raise
-    if backup is not None:
-        shutil.rmtree(backup, ignore_errors=True)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
+    if sort_col:
+        writer = writer.sortBy(sort_col)
+    replace_table(
+        df.sparkSession,
+        table,
+        lambda: writer.format("parquet").saveAsTable(table),
+    )
 
 
 def bucketed_join_is_shuffle_free(

@@ -1,24 +1,34 @@
 """Config-driven pipeline orchestrator — the engine's ``main``.
 
-Mirrors the reference lifecycle (``main.py:23-86``, SURVEY §3.1) as
-one lazy DataFrame DAG per zone, materialized only at sinks:
+Mirrors the reference lifecycle (``main.py:23-86``, SURVEY §3.1):
 
   config → extract (BCB loop, IBGE dim, ANP CSV) → silver → join →
-  gold → load (silver parquet ×3, partitioned gold ×2, catalog ×5) →
-  summary text.
+  gold (lazy plans) → sinks: bronze ×3, silver ×3, partitioned
+  gold ×2, catalog ×5 and the summary text, run CONCURRENTLY.
 
-Unlike the reference, nothing is eagerly materialized between steps;
-Catalyst sees the full plan from scan to sink. HTTP extracts accept
-an injectable ``fetch`` so tests (and offline runs) never hit the
-network.
+Extraction and the silver/gold plans are built on the caller's
+thread; the two silver frames every sink reads are persisted so the
+CSV parse runs once. Each sink call is then its own Spark job (or a
+few) over tiny data, so a run is mostly fixed per-job latency:
+:func:`_run_sinks` submits every call at once from a driver thread
+pool, and Spark's scheduler overlaps them on the idle cores. The
+caller's job group and local properties reach every sink job. All
+calls settle before one error names every failed sink, and
+``summary.md`` is written only when every sink succeeded. HTTP
+extracts accept an injectable ``fetch`` so tests (and offline runs)
+never hit the network.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from etl_macropulse_br_spark.operators.gold import build_gold_metrics
 from etl_macropulse_br_spark.operators.silver import (
@@ -45,6 +55,37 @@ from etl_macropulse_br_spark.sources.rest import (
     extract_bcb_many,
     extract_ibge_uf_dim,
 )
+
+
+def _run_sinks(
+    spark: SparkSession, calls: dict[str, Callable[[], object]]
+) -> dict[str, object]:
+    """Run every call on its own driver thread, so their Spark jobs
+    run concurrently, and return each call's result by name.
+
+    Each thread inherits the caller's local properties (job group,
+    scheduler pool) and session tags through
+    ``inheritable_thread_target``. Every call settles first; then ONE
+    error names every failed call, the pattern of
+    ``extract_bcb_many``."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(call))
+            for name, call in calls.items()
+        }
+    results: dict[str, object] = {}
+    failures: list[str] = []
+    for name, fut in futures.items():
+        try:
+            results[name] = fut.result()
+        except Exception as exc:  # noqa: BLE001 — settle all, report once
+            failures.append(f"{name}: {exc}")
+    if failures:
+        raise RuntimeError(
+            f"run_pipeline: {len(failures)}/{len(calls)} sinks failed — "
+            + "; ".join(failures)
+        )
+    return results
 
 
 @dataclass
@@ -77,23 +118,18 @@ def run_pipeline(
         if is_enabled_flag(r.get("enabled"))
     ]
 
-    # Extract → silver (one lazy DAG; bronze snapshots are the only
-    # mid-pipeline materialization, mirroring main.py:40,46,50).
+    # Extract → silver → gold as lazy plans; every sink, bronze
+    # snapshots included (main.py:40,46,50), runs in _run_sinks below.
     bcb_raw = extract_bcb_many(spark, enabled, start_date, end_date, fetch)
     uf_dim = extract_ibge_uf_dim(spark, fetch)
     anp_raw = read_csv_sep_fallback(spark, anp_path)
-
-    if write_outputs:
-        save_bronze(bcb_raw, os.path.join(data_dir, "bronze", "bcb_sgs"))
-        save_bronze(uf_dim, os.path.join(data_dir, "bronze", "ibge_uf"))
-        save_bronze(anp_raw, os.path.join(data_dir, "bronze", "anp_raw"))
 
     # (long-lived sessions release these via
     # operators.util.unpersist_candidates after consuming the result)
     from etl_macropulse_br_spark.operators.util import register_persisted
 
-    # the silver frames feed EVERY downstream action (bronze/silver/
-    # gold sinks, 5+ catalog registrations, the summary collect) —
+    # the silver frames feed EVERY downstream action (silver/gold
+    # sinks, 5 catalog registrations, the summary collects) —
     # without materialization each action re-runs the CSV scan +
     # header mapping + locale parsing + dedup window from source
     # (~8-10 full re-parses per run, r9 review fix); persisted, the
@@ -113,27 +149,39 @@ def run_pipeline(
         **gold,
     }
 
+    calls: dict[str, Callable[[], object]] = {}
     if write_outputs:
-        save_silver(bcb_silver, os.path.join(data_dir, "silver", "bcb_sgs"))
-        save_silver(anp_enriched, os.path.join(data_dir, "silver", "anp_prices"))
-        save_silver(uf_dim, os.path.join(data_dir, "silver", "dim_uf"))
-        write_parquet_partitioned(
-            gold["gold_bcb_monthly"],
-            os.path.join(data_dir, "gold", "gold_bcb_monthly"),
-            ["series_id"],
-        )
-        write_parquet_partitioned(
-            gold["gold_anp_monthly"],
-            os.path.join(data_dir, "gold", "gold_anp_monthly"),
-            ["uf_sigla"],
-        )
-
+        bronze = os.path.join(data_dir, "bronze")
+        silver = os.path.join(data_dir, "silver")
+        gold_dir = os.path.join(data_dir, "gold")
+        calls.update({
+            "bronze/bcb_sgs": partial(
+                save_bronze, bcb_raw, os.path.join(bronze, "bcb_sgs")),
+            "bronze/ibge_uf": partial(
+                save_bronze, uf_dim, os.path.join(bronze, "ibge_uf")),
+            "bronze/anp_raw": partial(
+                save_bronze, anp_raw, os.path.join(bronze, "anp_raw")),
+            "silver/bcb_sgs": partial(
+                save_silver, bcb_silver, os.path.join(silver, "bcb_sgs")),
+            "silver/anp_prices": partial(
+                save_silver, anp_enriched,
+                os.path.join(silver, "anp_prices")),
+            "silver/dim_uf": partial(
+                save_silver, uf_dim, os.path.join(silver, "dim_uf")),
+            "gold/gold_bcb_monthly": partial(
+                write_parquet_partitioned, gold["gold_bcb_monthly"],
+                os.path.join(gold_dir, "gold_bcb_monthly"), ["series_id"]),
+            "gold/gold_anp_monthly": partial(
+                write_parquet_partitioned, gold["gold_anp_monthly"],
+                os.path.join(gold_dir, "gold_anp_monthly"), ["uf_sigla"]),
+        })
     # Catalog registration so spark.sql over the same table names
     # works (S9/S11; scripts/query_duckdb.py parity).
     for name, df in tables.items():
-        load_table_replace(spark, df, name)
+        calls[f"table {name}"] = partial(load_table_replace, spark, df, name)
+    calls["summary"] = partial(build_summary_text, bcb_silver, anp_enriched)
 
-    summary = build_summary_text(bcb_silver, anp_enriched)
+    summary = _run_sinks(spark, calls)["summary"]
     if write_outputs:
         write_summary(summary, os.path.join(data_dir, "gold", "summary.md"))
 

@@ -9,6 +9,8 @@ Spark-first rewrites of ``extract.py:91-93`` (bronze snapshots),
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,23 +38,71 @@ def write_parquet_partitioned(
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(base_dir)
 
 
+def table_location(spark: SparkSession, table: str) -> str:
+    """Warehouse directory a managed table of this name occupies.
+    Supports unqualified (default database) and ``db.table`` names —
+    the two shapes ``saveAsTable`` produces under the warehouse dir."""
+    from urllib.parse import urlparse
+
+    warehouse = urlparse(
+        spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    ).path
+    parts = table.lower().split(".")
+    if len(parts) == 1:
+        return f"{warehouse}/{parts[0]}"
+    if len(parts) == 2:
+        return f"{warehouse}/{parts[0]}.db/{parts[1]}"
+    raise ValueError(f"unsupported table name {table!r}")
+
+
+def replace_table(
+    spark: SparkSession, table: str, save: Callable[[], None]
+) -> None:
+    """Run ``save`` (a ``saveAsTable(table)`` call) as a crash-safe
+    full replace of ``table``, including an orphaned location from an
+    earlier session.
+
+    A fresh session's in-memory catalog does not know the tables a
+    previous session wrote, but their directories persist, and a bare
+    ``saveAsTable`` then fails with LOCATION_ALREADY_EXISTS. So the
+    previous location (live or orphaned) is MOVED ASIDE, not deleted,
+    before the new write; it is removed only after ``save`` succeeds
+    and restored if ``save`` throws — a failed replacement never
+    destroys the old data, and its error propagates."""
+    loc = table_location(spark, table)
+    backup = None
+    if os.path.isdir(loc):
+        backup = f"{loc}.__replacing"
+        shutil.rmtree(backup, ignore_errors=True)  # stale crash leftover
+        os.rename(loc, backup)
+    try:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")  # location already moved
+        save()
+    except Exception:
+        if backup is not None:
+            shutil.rmtree(loc, ignore_errors=True)  # partial new write
+            os.rename(backup, loc)
+        raise
+    if backup is not None:
+        shutil.rmtree(backup, ignore_errors=True)
+
+
 def load_table_replace(
     spark: SparkSession, df: DataFrame, table: str
 ) -> None:
     """Idempotent full-replace table load (``load.py:18-28``).
 
     The reference creates-if-absent, deletes, and re-inserts into
-    DuckDB; the Spark-native equivalent is an overwrite
-    ``saveAsTable`` into the session catalog (or a temp view when no
-    warehouse is configured). MERGE-by-keys remains the incremental
-    path (``load.py:23`` TODO) — see plans/incremental.py.
+    DuckDB; the Spark-native equivalent is a ``saveAsTable`` into the
+    session catalog through :func:`replace_table`, so a rerun in a new
+    session replaces the table the last one left behind. Every write
+    error propagates; there is no fallback to a temporary view.
+    MERGE-by-keys remains the incremental path (``load.py:23`` TODO)
+    — see plans/incremental.py.
     """
-    df.createOrReplaceTempView(f"{table}__staging")
-    try:
-        df.write.mode("overwrite").saveAsTable(table)
-    except Exception:
-        # No writable warehouse (e.g. read-only FS): expose via view.
-        df.createOrReplaceTempView(table)
+    replace_table(
+        spark, table, lambda: df.write.mode("overwrite").saveAsTable(table)
+    )
 
 
 def write_summary(text: str, out_path: str) -> None:

@@ -10,8 +10,10 @@ import csv
 import io
 import json
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def read_csv_sep_fallback(
@@ -23,7 +25,9 @@ def read_csv_sep_fallback(
     header line on the driver (one tiny read) and pick the separator
     that yields the most columns — cheaper and more robust than
     re-reading the whole file per candidate, and the executor-side
-    scan happens exactly once.
+    scan happens exactly once. The same line gives the all-string
+    schema (:func:`_csv_header_schema`), so Spark runs no job to read
+    the header again.
     """
     if not os.path.exists(path):
         raise FileNotFoundError(
@@ -39,13 +43,54 @@ def read_csv_sep_fallback(
             f"ANP input at {path} is empty (no header line) — "
             "truncated or failed download?"
         )
-    best = max(seps, key=lambda s: len(next(csv.reader(io.StringIO(header), delimiter=s))))
+    # Spark's CSV reader skips a UTF-8 BOM and escapes quotes with a
+    # backslash, not by doubling them. A quoted name must close right
+    # before a separator: Spark keeps other quoting verbatim, which
+    # this parse does not reproduce.
+    header = header.removeprefix("\ufeff")
+    names = {
+        s: next(
+            csv.reader(
+                io.StringIO(header),
+                delimiter=s,
+                escapechar="\\",
+                doublequote=False,
+            )
+        )
+        for s in seps
+    }
+    best = max(seps, key=lambda s: len(names[s]))
+    case_sensitive = (
+        spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
+    )
     return (
-        spark.read.option("header", True)
+        spark.read.schema(_csv_header_schema(names[best], case_sensitive))
+        .option("header", True)
         .option("sep", best)
         .option("encoding", "UTF-8")
         .csv(path)
     )
+
+
+def _csv_header_schema(names: list[str], case_sensitive: bool) -> T.StructType:
+    """All-string schema Spark's CSV reader infers from a header row
+    (``CSVDataSource.makeSafeHeader``): an empty name becomes
+    ``_c<i>``, and a name that repeats (case-insensitively unless
+    ``case_sensitive``) becomes ``<name><i>``, ``i`` being its
+    position."""
+
+    def key(name: str) -> str:
+        return name if case_sensitive else name.lower()
+
+    seen = Counter(key(n) for n in names if n)
+    fields = []
+    for i, name in enumerate(names):
+        if not name:
+            name = f"_c{i}"
+        elif seen[key(name)] > 1:
+            name = f"{name}{i}"
+        fields.append(T.StructField(name, T.StringType()))
+    return T.StructType(fields)
 
 
 def read_series_config(path: str) -> list[dict]:

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 import json
 import logging
+import math
+import re
 from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
@@ -125,28 +127,60 @@ def extract_bcb_sgs_series(
     )
 
 
+_LONG_TEXT = re.compile(r"([+-]?\d+)(?:\.\d*)?")
+
+
+def _as_long(value: object) -> int | None:
+    """Driver-side twin of Spark's non-ANSI ``cast(... as long)`` for
+    the JSON scalars a payload carries: integers and booleans pass,
+    doubles and numeric strings (optional sign, surrounding blanks, a
+    fraction) truncate toward zero, anything else is NULL."""
+    if isinstance(value, int):
+        return int(value)
+    if isinstance(value, float):
+        return int(value) if math.isfinite(value) else None
+    if isinstance(value, str):
+        m = _LONG_TEXT.fullmatch(value.strip())
+        return int(m.group(1)) if m else None
+    return None
+
+
+def _as_string(value: object) -> str | None:
+    """Driver-side twin of ``cast(... as string)`` on an inferred JSON
+    scalar: strings pass, other scalars render as JSON text."""
+    if value is None or isinstance(value, str):
+        return value
+    return json.dumps(value)
+
+
 def extract_ibge_uf_dim(
     spark: SparkSession, fetch: FetchFn | None = None
 ) -> DataFrame:
     """IBGE states → 27-row dimension (``extract.py:50-68``).
 
     The reference flattens nested JSON with ``pd.json_normalize``;
-    Spark reads the nested struct natively and projects
-    ``regiao.nome`` directly.
+    the 27 records are typed on the driver and land in ONE
+    ``createDataFrame`` with the explicit schema — no schema-inference
+    job. A record without ``regiao`` gets a NULL ``regiao_nome``.
     """
     fetch = fetch or _default_fetch
     records = fetch(IBGE_URL)
-    if not records:
-        return spark.createDataFrame([], UF_DIM_SCHEMA)
-    raw = spark.read.json(
-        spark.sparkContext.parallelize([json.dumps(r) for r in records], 1)
-    )
-    return raw.select(
-        F.col("id").cast("long").alias("uf_id"),
-        F.col("sigla").cast("string").alias("uf_sigla"),
-        F.col("nome").cast("string").alias("uf_nome"),
-        F.col("regiao.nome").cast("string").alias("regiao_nome"),
-    )
+    rows = []
+    for r in records or []:
+        regiao = r.get("regiao")
+        rows.append(
+            (
+                _as_long(r.get("id")),
+                _as_string(r.get("sigla")),
+                _as_string(r.get("nome")),
+                _as_string(
+                    regiao.get("nome") if isinstance(regiao, dict) else None
+                ),
+            )
+        )
+    # one partition, as the former one-slice JSON read had: the dim's
+    # bronze, silver and catalog copies stay one file each
+    return spark.createDataFrame(rows, UF_DIM_SCHEMA).coalesce(1)
 
 
 BCB_MANY_RAW_SCHEMA = T.StructType(

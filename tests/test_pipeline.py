@@ -121,6 +121,210 @@ def test_run_pipeline_end_to_end(spark, workspace):
     assert n == 4
 
 
+# ---------------------------------------------------------------
+# concurrent sink stage
+
+
+def _run(spark, workspace):
+    return run_pipeline(
+        spark,
+        run_config_path=str(workspace / "inputs" / "run_config.json"),
+        series_config_path=str(workspace / "inputs" / "bcb_series.csv"),
+        data_dir=str(workspace / "data"),
+        fetch=fake_fetch,
+    )
+
+
+def _rows(df) -> list:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return (its result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_run_pipeline_failed_sink_is_named_and_blocks_summary(
+    spark, workspace, monkeypatch
+):
+    """One failing sink: every other sink still settles and writes,
+    the one error names the failed sink, and summary.md is not
+    written."""
+    import etl_macropulse_br_spark.plans.pipeline as pl
+
+    real = pl.write_parquet_partitioned
+
+    def flaky(df, base_dir, partition_cols):
+        if base_dir.endswith("gold_anp_monthly"):
+            raise OSError("disk full (injected)")
+        real(df, base_dir, partition_cols)
+
+    monkeypatch.setattr(pl, "write_parquet_partitioned", flaky)
+    with pytest.raises(RuntimeError) as ei:
+        _run(spark, workspace)
+    msg = str(ei.value)
+    assert "1/14 sinks failed" in msg
+    assert "gold/gold_anp_monthly: disk full (injected)" in msg
+
+    data = workspace / "data"
+    for out in ("bronze/bcb_sgs", "bronze/ibge_uf", "bronze/anp_raw",
+                "silver/bcb_sgs", "silver/anp_prices", "silver/dim_uf",
+                "gold/gold_bcb_monthly"):
+        assert (data / out / "_SUCCESS").exists(), out
+    assert not (data / "gold" / "gold_anp_monthly").exists()
+    assert not (data / "gold" / "summary.md").exists()
+    for table in ("silver_bcb_sgs", "silver_anp_prices", "dim_uf",
+                  "gold_bcb_monthly", "gold_anp_monthly"):
+        assert spark.catalog.getTable(table).tableType == "MANAGED"
+
+
+def test_run_pipeline_sink_jobs_carry_caller_job_group(spark, workspace):
+    """The caller's job group reaches the jobs every sink thread
+    submits: the run leaves no job outside the group."""
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    _, jobs = _jobs_in_group(
+        spark, "pipeline-sink-group", lambda: _run(spark, workspace)
+    )
+    # 8 parquet sinks and 5 table loads write at least one job each;
+    # the summary collects add more
+    assert len(jobs) >= 14
+    # the tracker may evict old jobs, never add ungrouped ones
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_run_pipeline_outputs_equal_result_tables(spark, workspace):
+    """Every parquet output and catalog table the concurrent sinks
+    write holds exactly the rows of its frame in ``result.tables``."""
+    result = _run(spark, workspace)
+    data = workspace / "data"
+    outputs = {
+        "silver/bcb_sgs": "silver_bcb_sgs",
+        "silver/anp_prices": "silver_anp_prices",
+        "silver/dim_uf": "dim_uf",
+        "bronze/ibge_uf": "dim_uf",
+        "gold/gold_bcb_monthly": "gold_bcb_monthly",
+        "gold/gold_anp_monthly": "gold_anp_monthly",
+    }
+    for out, name in outputs.items():
+        frame = result.tables[name]
+        written = spark.read.schema(frame.schema).parquet(str(data / out))
+        assert _rows(written.select(*frame.columns)) == _rows(frame), out
+    for name, frame in result.tables.items():
+        table = spark.table(name)
+        assert table.columns == frame.columns, name
+        assert _rows(table) == _rows(frame), name
+    assert (data / "gold" / "summary.md").read_text(
+        encoding="utf-8"
+    ) == result.summary_text
+
+
+def test_read_csv_header_schema_matches_spark_inference(spark, tmp_path):
+    """The header schema built on the driver names the columns exactly
+    as Spark's own header inference does (BOM, accented, duplicate,
+    empty and quoted names), and reading the header runs no job."""
+    from etl_macropulse_br_spark.sources.files import read_csv_sep_fallback
+
+    path = tmp_path / "anp.csv"
+    path.write_text(
+        "\ufeffEstado - Sigla;Município;MUNICÍPIO;;Produto;"
+        '"Valor; de Venda";produto;"Preço \\"médio\\"";\r\n'
+        "SP;São Paulo;x;vazio;GASOLINA;6,59;g;p;fim\r\n",
+        encoding="utf-8",
+    )
+    got, jobs = _jobs_in_group(
+        spark, "csv-header",
+        lambda: read_csv_sep_fallback(spark, str(path)),
+    )
+    assert jobs == []
+    want = (
+        spark.read.option("header", True)
+        .option("sep", ";")
+        .option("encoding", "UTF-8")
+        .csv(str(path))
+    )
+    assert got.columns == want.columns
+    assert got.columns[1:5] == ["Município1", "MUNICÍPIO2", "_c3", "Produto4"]
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_extract_ibge_uf_dim_matches_inferred_cast_path(spark):
+    """The driver-typed IBGE frame equals the former JSON-inference
+    path (``spark.read.json`` + casts) on a string ``id`` and a record
+    without ``regiao``, and building it runs no job."""
+    import json as _json
+
+    from pyspark.sql import functions as F
+
+    from etl_macropulse_br_spark.sources.rest import extract_ibge_uf_dim
+
+    payload = IBGE_PAYLOAD + [
+        {"id": "41", "sigla": "PR", "nome": "Paraná",
+         "regiao": {"id": 4, "nome": "Sul"}},
+        {"id": " 52 ", "sigla": "GO", "nome": "Goiás"},
+        {"id": 53.0, "sigla": "DF", "nome": None, "regiao": None},
+    ]
+    got, jobs = _jobs_in_group(
+        spark, "ibge-dim",
+        lambda: extract_ibge_uf_dim(spark, lambda url: payload),
+    )
+    assert jobs == []
+    raw = spark.read.json(
+        spark.sparkContext.parallelize([_json.dumps(r) for r in payload], 1)
+    )
+    want = raw.select(
+        F.col("id").cast("long").alias("uf_id"),
+        F.col("sigla").cast("string").alias("uf_sigla"),
+        F.col("nome").cast("string").alias("uf_nome"),
+        F.col("regiao.nome").cast("string").alias("regiao_nome"),
+    )
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert [r["uf_id"] for r in got.collect()] == [35, 13, 41, 52, 53]
+
+
+def test_load_table_replace_takes_over_orphaned_location(spark):
+    """A stale warehouse directory the catalog does not know (left by
+    an earlier session) is replaced: the table is MANAGED and holds
+    the new rows. Any other write error propagates; nothing falls
+    back to a temporary view."""
+    from etl_macropulse_br_spark.sinks.writers import (
+        load_table_replace,
+        table_location,
+    )
+
+    name = "orphan_replace_t"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    loc = table_location(spark, name)
+    os.makedirs(loc, exist_ok=True)
+    with open(os.path.join(loc, "part-00000-stale.parquet"), "wb") as f:
+        f.write(b"stale run-1 bytes")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
+    try:
+        load_table_replace(spark, df, name)
+        t = spark.catalog.getTable(name)
+        assert t.tableType == "MANAGED" and not t.isTemporary
+        assert _rows(spark.table(name)) == [(1, "a"), (2, "b")]
+        assert "part-00000-stale.parquet" not in os.listdir(loc)
+        assert not os.path.exists(f"{loc}.__replacing")
+        assert not spark.catalog.tableExists(f"{name}__staging")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+    with pytest.raises(Exception, match="(?i)schema|database|namespace"):
+        load_table_replace(spark, df, "no_such_db_x.orphan_t")
+    assert not spark.catalog.tableExists("orphan_t")
+
+
 def test_incremental_load(spark, tmp_path):
     import datetime
 

@@ -113,14 +113,14 @@ def test_write_bucketed_replace_is_crash_safe(spark):
     data restored, not destroyed (r4 ADVICE on skew.py)."""
     import os
 
-    from etl_macropulse_br_spark.operators.skew import _table_location
+    from etl_macropulse_br_spark.sinks.writers import table_location
 
     a = spark.range(0, 100).withColumn("v", F.col("id") * 2)
     try:
         write_bucketed(a, "bucketed_safe", "id", n_buckets=4)
     except Exception as e:
         pytest.skip(f"warehouse unavailable: {e}")
-    loc = _table_location(spark, "bucketed_safe")
+    loc = table_location(spark, "bucketed_safe")
     try:
         before = sorted(os.listdir(loc))
 

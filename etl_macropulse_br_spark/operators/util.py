@@ -2,8 +2,43 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def settle_all(
+    label: str,
+    noun: str,
+    calls: Iterable[tuple[str, Callable[[], object]]],
+    width: int,
+) -> list:
+    """Run the named calls on a pool of at most ``width`` threads and
+    return their results in call order.
+
+    Every call settles before any failure is reported, so one failing
+    call neither cancels its siblings nor hides a second failure. Then
+    ONE ``RuntimeError`` names every failed call, in call order:
+    ``"<label>: <failed>/<total> <noun> failed — <name>: <error>; ..."``.
+    """
+    calls = list(calls)
+    with ThreadPoolExecutor(max_workers=min(width, len(calls)) or 1) as pool:
+        futures = [(name, pool.submit(call)) for name, call in calls]
+    results: list = []
+    failures: list[str] = []
+    for name, fut in futures:
+        try:
+            results.append(fut.result())
+        except Exception as exc:  # noqa: BLE001 — settle all, report once
+            failures.append(f"{name}: {exc}")
+    if failures:
+        raise RuntimeError(
+            f"{label}: {len(failures)}/{len(calls)} {noun} failed — "
+            + "; ".join(failures)
+        )
+    return results
 
 
 def spread(df: DataFrame, min_factor: int = 1) -> DataFrame:

@@ -10,10 +10,12 @@ Extraction and the silver/gold plans are built on the caller's
 thread; the two silver frames every sink reads are persisted so the
 CSV parse runs once. Each sink call is then its own Spark job (or a
 few) over tiny data, so a run is mostly fixed per-job latency:
-:func:`_run_sinks` submits every call at once from a driver thread
-pool, and Spark's scheduler overlaps them on the idle cores. The
-caller's job group and local properties reach every sink job. All
-calls settle before one error names every failed sink, and
+``run_pipeline`` submits every call at once, one driver thread per
+call, and Spark's scheduler overlaps them on the idle cores. The
+caller's job group, local properties and session tags reach every
+sink job through ``inheritable_thread_target``. All calls settle
+before one error names every failed sink
+(:func:`~etl_macropulse_br_spark.operators.util.settle_all`), and
 ``summary.md`` is written only when every sink succeeded. HTTP
 extracts accept an injectable ``fetch`` so tests (and offline runs)
 never hit the network.
@@ -23,7 +25,6 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
 
@@ -37,6 +38,10 @@ from etl_macropulse_br_spark.operators.silver import (
     to_silver_bcb,
 )
 from etl_macropulse_br_spark.operators.summary import build_summary_text
+from etl_macropulse_br_spark.operators.util import (
+    register_persisted,
+    settle_all,
+)
 from etl_macropulse_br_spark.sinks.writers import (
     load_table_replace,
     save_bronze,
@@ -55,37 +60,6 @@ from etl_macropulse_br_spark.sources.rest import (
     extract_bcb_many,
     extract_ibge_uf_dim,
 )
-
-
-def _run_sinks(
-    spark: SparkSession, calls: dict[str, Callable[[], object]]
-) -> dict[str, object]:
-    """Run every call on its own driver thread, so their Spark jobs
-    run concurrently, and return each call's result by name.
-
-    Each thread inherits the caller's local properties (job group,
-    scheduler pool) and session tags through
-    ``inheritable_thread_target``. Every call settles first; then ONE
-    error names every failed call, the pattern of
-    ``extract_bcb_many``."""
-    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
-        futures = {
-            name: pool.submit(inheritable_thread_target(spark)(call))
-            for name, call in calls.items()
-        }
-    results: dict[str, object] = {}
-    failures: list[str] = []
-    for name, fut in futures.items():
-        try:
-            results[name] = fut.result()
-        except Exception as exc:  # noqa: BLE001 — settle all, report once
-            failures.append(f"{name}: {exc}")
-    if failures:
-        raise RuntimeError(
-            f"run_pipeline: {len(failures)}/{len(calls)} sinks failed — "
-            + "; ".join(failures)
-        )
-    return results
 
 
 @dataclass
@@ -119,14 +93,10 @@ def run_pipeline(
     ]
 
     # Extract → silver → gold as lazy plans; every sink, bronze
-    # snapshots included (main.py:40,46,50), runs in _run_sinks below.
+    # snapshots included (main.py:40,46,50), runs concurrently below.
     bcb_raw = extract_bcb_many(spark, enabled, start_date, end_date, fetch)
     uf_dim = extract_ibge_uf_dim(spark, fetch)
     anp_raw = read_csv_sep_fallback(spark, anp_path)
-
-    # (long-lived sessions release these via
-    # operators.util.unpersist_candidates after consuming the result)
-    from etl_macropulse_br_spark.operators.util import register_persisted
 
     # the silver frames feed EVERY downstream action (silver/gold
     # sinks, 5 catalog registrations, the summary collects) —
@@ -134,6 +104,8 @@ def run_pipeline(
     # header mapping + locale parsing + dedup window from source
     # (~8-10 full re-parses per run, r9 review fix); persisted, the
     # parse runs once and the sinks share it
+    # (long-lived sessions release these via
+    # operators.util.unpersist_candidates after consuming the result)
     bcb_silver = register_persisted(to_silver_bcb(bcb_raw))
     anp_silver = to_silver_anp(anp_raw)
     anp_enriched = register_persisted(
@@ -181,7 +153,16 @@ def run_pipeline(
         calls[f"table {name}"] = partial(load_table_replace, spark, df, name)
     calls["summary"] = partial(build_summary_text, bcb_silver, anp_enriched)
 
-    summary = _run_sinks(spark, calls)["summary"]
+    results = settle_all(
+        "run_pipeline",
+        "sinks",
+        [
+            (name, inheritable_thread_target(spark)(call))
+            for name, call in calls.items()
+        ],
+        width=len(calls),
+    )
+    summary = dict(zip(calls, results))["summary"]
     if write_outputs:
         write_summary(summary, os.path.join(data_dir, "gold", "summary.md"))
 

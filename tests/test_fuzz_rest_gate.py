@@ -1,10 +1,10 @@
-"""REST fan-out differential fuzz in the local gate (r14): one
-seed-deterministic round of tools/fuzz_rest.py's three-path
-equality check (serial ≡ concurrent ≡ distributed, happy path and
-skip-mode failures, adversarial payloads). A failure reproduces
-standalone with ``python tools/fuzz_rest.py 7 1`` (same
-string-seeded RNG derivation). The heavier multi-round runs stay
-tool-side, recorded in PLANS.md."""
+"""REST fan-out differential fuzz in the local gate: one
+seed-deterministic round of tools/fuzz_rest.py's check
+(``extract_bcb_many`` ≡ the serial per-series reference, in order, on
+adversarial control tables and payloads; random failures named
+exactly in the one raised error). A failure reproduces standalone
+with ``python tools/fuzz_rest.py 7 1`` (same string-seeded RNG
+derivation). The heavier multi-round runs stay tool-side."""
 
 from __future__ import annotations
 

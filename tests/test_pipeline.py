@@ -325,63 +325,15 @@ def test_load_table_replace_takes_over_orphaned_location(spark):
     assert not spark.catalog.tableExists("orphan_t")
 
 
-def test_incremental_load(spark, tmp_path):
-    import datetime
-
-    from etl_macropulse_br_spark.plans.incremental import incremental_load
-
-    sink = str(tmp_path / "gold_inc")
-    df1 = spark.createDataFrame(
-        [(11, datetime.date(2026, 1, 2), 13.15),
-         (11, datetime.date(2026, 1, 9), 13.25)],
-        ["series_id", "date", "value"],
-    )
-    assert incremental_load(spark, df1, sink, "date", ["series_id"]) == 2
-
-    # re-run with overlap: only the new date loads (idempotent)
-    df2 = spark.createDataFrame(
-        [(11, datetime.date(2026, 1, 9), 13.25),
-         (11, datetime.date(2026, 1, 16), 13.40)],
-        ["series_id", "date", "value"],
-    )
-    assert incremental_load(spark, df2, sink, "date", ["series_id"]) == 1
-    out = spark.read.parquet(sink)
-    assert out.count() == 3
-
-
-def test_incremental_load_does_not_leak_overwrite_mode(spark, tmp_path):
-    """r9 pin (VERDICT r8 What's wrong #1): incremental_load must NOT
-    mutate the session's partitionOverwriteMode — the dynamic mode is
-    a per-write option. After an incremental_load, a gold full-replace
-    via write_parquet_partitioned whose frame carries FEWER partitions
-    than on disk must actually drop the stale partition directory."""
-    import datetime
+def test_write_parquet_partitioned_drops_stale_partitions(spark, tmp_path):
+    """The partitioned gold sink is a full replace: a frame with fewer
+    partitions than on disk drops the stale partition directory."""
     import os
 
-    from etl_macropulse_br_spark.plans.incremental import incremental_load
     from etl_macropulse_br_spark.sinks.writers import (
         write_parquet_partitioned,
     )
 
-    before = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-
-    inc_sink = str(tmp_path / "gold_inc")
-    df = spark.createDataFrame(
-        [(11, datetime.date(2026, 1, 2), 13.15)],
-        ["series_id", "date", "value"],
-    )
-    assert incremental_load(spark, df, inc_sink, "date", ["series_id"]) == 1
-
-    # the session conf must be untouched by the incremental path
-    after = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    assert after.upper() == before.upper() == "STATIC"
-
-    # and the gold sink's full-replace contract must hold: write two
-    # partitions, then overwrite with one — the other must be GONE
     gold = str(tmp_path / "gold_full")
     two = spark.createDataFrame(
         [("a", 1.0), ("b", 2.0)], ["series_id", "value"]
@@ -756,12 +708,9 @@ def test_extract_bcb_many_fetches_run_concurrently(spark):
     assert df.count() == 16
 
 
-def test_extract_bcb_many_error_isolation(spark, caplog):
+def test_extract_bcb_many_error_isolation(spark):
     """All fetches settle before failures are reported: one raise
-    names EVERY failed series (a fail-fast would hide the second);
-    on_error='skip' warns and keeps the successes."""
-    import logging
-
+    names EVERY failed series (a fail-fast would hide the second)."""
     from etl_macropulse_br_spark.sources.rest import extract_bcb_many
 
     series = [(11, "ok1"), (666, "bad1"), (433, "ok2"), (667, "bad2")]
@@ -776,48 +725,9 @@ def test_extract_bcb_many_error_isolation(spark, caplog):
         extract_bcb_many(
             spark, series, "2025-12-01", "2026-01-31", fetch=flaky_fetch
         )
-    msg = str(ei.value)
-    assert "series 666" in msg and "series 667" in msg
-    assert "2/4" in msg
-
-    with caplog.at_level(logging.WARNING):
-        df = extract_bcb_many(
-            spark,
-            series,
-            "2025-12-01",
-            "2026-01-31",
-            fetch=flaky_fetch,
-            on_error="skip",
-        )
-        got = sorted(
-            (r["series_id"], r["series_name"]) for r in df.collect()
-        )
-    assert got == [(11, "ok1")] * 2 + [(433, "ok2")] * 2
-    assert any("666" in m and "667" in m for m in caplog.messages)
-
-    with pytest.raises(ValueError, match="on_error"):
-        extract_bcb_many(
-            spark, series, "2025-12-01", "2026-01-31",
-            fetch=flaky_fetch, on_error="ignore",
-        )
-
-    # r15: on_error='status' — marker rows in SERIES POSITION, error
-    # column as data, no raise/warn (API parity with the distributed
-    # path's lazy mode)
-    status = extract_bcb_many(
-        spark, series, "2025-12-01", "2026-01-31",
-        fetch=flaky_fetch, on_error="status",
-    )
-    assert "error" in status.columns
-    rows = status.collect()
-    assert [r["series_id"] for r in rows] == [11, 11, 666, 433, 433, 667]
-    assert [r["error"] is not None for r in rows] == [
-        False, False, True, False, False, True,
-    ]
-    assert all(
-        r["date"] is None and r["value"] is None
-        for r in rows
-        if r["error"] is not None
+    assert str(ei.value) == (
+        "extract_bcb_many: 2/4 series failed — series 666 ('bad1'): "
+        "boom 666; series 667 ('bad2'): boom 667"
     )
 
 
@@ -831,132 +741,12 @@ def test_extract_bcb_many_empty_series_list(spark):
     assert df.schema == BCB_SILVER_SCHEMA and df.count() == 0
 
 
-def test_extract_bcb_many_distributed_equals_driver_path(spark, caplog):
-    """Executor-side fan-out (SURVEY §2 S1's mapInPandas scale path,
-    r14): same typed rows as the driver-concurrent path — compared
-    as multisets (partitioned emission has no cross-task order) —
-    plus the empty-series shape and (r15) cross-task all-settle
-    failure aggregation in all three on_error modes."""
-    from etl_macropulse_br_spark.sources.rest import (
-        BCB_SILVER_SCHEMA,
-        extract_bcb_many,
-        extract_bcb_many_distributed,
-    )
-
-    series = [(11, "selic"), (433, "ipca"), (1, "cambio"), (189, "igpm")]
-
-    # self-contained closures: cloudpickle ships them to executor
-    # workers, which cannot import this test module by name
-    def fetch(url):
-        sid = int(url.split("bcdata.sgs.")[1].split("/")[0])
-        if sid == 1:
-            return []
-        return [
-            {"data": "02/01/2026", "valor": f"{sid},10"},
-            {"data": "09/01/2026", "valor": f"{sid},25"},
-        ]
-
-    driver_df = extract_bcb_many(
-        spark, series, "2025-12-01", "2026-01-31", fetch=fetch
-    )
-    dist_df = extract_bcb_many_distributed(
-        spark, series, "2025-12-01", "2026-01-31",
-        fetch=fetch, series_per_task=2,
-    )
-    assert dist_df.schema == driver_df.schema
-    assert sorted(map(tuple, dist_df.collect())) == sorted(
-        map(tuple, driver_df.collect())
-    )
-
-    # empty series list -> typed empty frame
-    empty = extract_bcb_many_distributed(
-        spark, [], "2025-12-01", "2026-01-31", fetch=fetch
-    )
-    assert empty.schema == BCB_SILVER_SCHEMA and empty.count() == 0
-
-    # per-task error isolation: the failing task's error names its
-    # failed series; on_error='skip' keeps the successes
-    def flaky(url):
-        sid = int(url.split("bcdata.sgs.")[1].split("/")[0])
-        if sid in (433, 189):
-            raise ConnectionError(f"boom {sid}")
-        return [
-            {"data": "02/01/2026", "valor": f"{sid},10"},
-            {"data": "09/01/2026", "valor": f"{sid},25"},
-        ]
-
-    # r15 (VERDICT r14 What's missing #2): failures travel as marker
-    # rows and aggregate DRIVER-side across every task — one raise at
-    # call time naming EVERY failed series (parity with the driver
-    # path), with series_per_task=1 forcing the failures into
-    # different tasks
-    with pytest.raises(RuntimeError) as ei:
-        extract_bcb_many_distributed(
-            spark, series, "2025-12-01", "2026-01-31",
-            fetch=flaky, series_per_task=1,
-        )
-    msg = str(ei.value)
-    assert "series 433" in msg and "series 189" in msg
-    assert "2/4" in msg
-
-    # on_error='skip': ONE aggregated driver-side warning naming
-    # every cross-task failure, successes returned
-    import logging as _logging
-
-    with caplog.at_level(_logging.WARNING):
-        kept = extract_bcb_many_distributed(
-            spark, series, "2025-12-01", "2026-01-31",
-            fetch=flaky, series_per_task=1, on_error="skip",
-        )
-        got = sorted({r["series_id"] for r in kept.collect()})
-    assert got == [1, 11]
-    warn = [
-        r.getMessage()
-        for r in caplog.records
-        if r.levelno >= _logging.WARNING
-        and "skipping" in r.getMessage()
-    ]
-    assert len(warn) == 1  # ONE aggregated message, not per-task
-    assert "series 433" in warn[0] and "series 189" in warn[0]
-
-    # on_error='status': fully lazy — the error marker column comes
-    # back as data and the caller owns routing
-    status = extract_bcb_many_distributed(
-        spark, series, "2025-12-01", "2026-01-31",
-        fetch=flaky, series_per_task=1, on_error="status",
-    )
-    assert "error" in status.columns
-    rows = status.collect()
-    bad = sorted(
-        r["series_id"] for r in rows if r["error"] is not None
-    )
-    assert bad == [189, 433]
-    assert all(
-        r["date"] is None and r["value"] is None
-        for r in rows
-        if r["error"] is not None
-    )
-    ok = sorted({
-        r["series_id"] for r in rows if r["error"] is None
-    })
-    assert ok == [1, 11]
-
-    with pytest.raises(ValueError, match="on_error"):
-        extract_bcb_many_distributed(
-            spark, series, "2025-12-01", "2026-01-31",
-            fetch=flaky, on_error="ignore",
-        )
-
-
 def test_extract_bcb_many_normalizes_series_like_reference(spark):
-    """Both fan-out paths coerce the control rows with int()/str()
-    exactly like the reference's loop (main.py:36-37), so a
-    loosely-typed control table (string ids with leading zeros)
-    hits the same URL and emits the same rows on either path."""
-    from etl_macropulse_br_spark.sources.rest import (
-        extract_bcb_many,
-        extract_bcb_many_distributed,
-    )
+    """The fan-out coerces the control rows with int()/str() exactly
+    like the reference's loop (main.py:36-37), so a loosely-typed
+    control table (string ids with leading zeros) hits the same URL
+    and emits the same rows."""
+    from etl_macropulse_br_spark.sources.rest import extract_bcb_many
 
     series = [("011", "selic")]  # string id, as a CSV would give
     seen: list[str] = []
@@ -970,12 +760,3 @@ def test_extract_bcb_many_normalizes_series_like_reference(spark):
     ).collect()
     assert "bcdata.sgs.11/" in seen[0]  # int-coerced, no '011' URL
     assert rows[0]["series_id"] == 11
-
-    def fetch_d(url):  # executor-side: self-contained
-        assert "bcdata.sgs.11/" in url
-        return [{"data": "02/01/2026", "valor": "1,50"}]
-
-    d_rows = extract_bcb_many_distributed(
-        spark, series, "2025-12-01", "2026-01-31", fetch=fetch_d
-    ).collect()
-    assert d_rows == rows

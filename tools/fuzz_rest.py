@@ -1,13 +1,12 @@
-"""Seeded differential fuzz for the many-series ingest paths (r14).
+"""Seeded differential fuzz for the many-series BCB ingest.
 
-The round added two fan-out shapes next to the original serial one:
-``extract_bcb_many`` with a driver thread pool (and a single
-``createDataFrame`` instead of a union tree) and
-``extract_bcb_many_distributed`` (``mapInPandas`` executor fan-out).
-Their contract is row-equality with the serial per-series path for
-ANY payload the BCB API could return — not just the happy-path
-fixtures the unit tests pin. This tool generates adversarial control
-tables and payloads from one seed and asserts all three paths agree:
+``extract_bcb_many`` fetches its series on a driver thread pool and
+types them in ONE ``createDataFrame``. Its contract is row-equality,
+in order, with the serial per-series reference
+(``extract_bcb_sgs_series`` + ``unionByName``) for ANY payload the BCB
+API could return — not just the happy-path fixtures the unit tests
+pin. This tool generates adversarial control tables and payloads from
+one seed and checks:
 
 - series counts 0..24, duplicate series ids, string ids with leading
   zeros (the reference's control CSV shape), unicode names;
@@ -15,18 +14,8 @@ tables and payloads from one seed and asserts all three paths agree:
   ISO dates (must coerce to NULL like the reference's
   ``errors="coerce"``), pt-BR numbers with/without thousands dots,
   plain dots, empties, and non-numeric junk;
-- empty series, and (in a second phase) randomly failing series
-  under ``on_error="skip"`` — the surviving rows must equal the
-  serial path run over only the surviving series;
-- failure-mode parity (r15): ``on_error="raise"`` must name the
-  SAME failed-series set on the driver and distributed paths (the
-  distributed path aggregates marker rows across tasks), and
-  ``on_error="status"`` must carry exactly the failed set as error
-  markers next to data rows equal to the skip-mode survivors.
-
-Rows are compared as SORTED MULTISETS for the distributed path (no
-cross-task order) and additionally IN ORDER between the serial and
-concurrent driver paths (same construction order by contract).
+- randomly failing series (second phase): the one raised error must
+  name exactly the failed set and count every failed call.
 
 Usage: ``python tools/fuzz_rest.py [seed] [rounds]``
 Prints one JSON line; exit 1 on any divergence. A failure reproduces
@@ -39,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import random
+import re
 import sys
 from functools import reduce
 
@@ -85,47 +75,34 @@ def _series(rng: random.Random) -> list[tuple]:
     return out
 
 
+def _sid(url: str) -> int:
+    return int(url.split("bcdata.sgs.")[1].split("/")[0])
+
+
 def run_round(spark, rng: random.Random, tag: str) -> None:
     from etl_macropulse_br_spark.sources.rest import (
         extract_bcb_many,
-        extract_bcb_many_distributed,
         extract_bcb_sgs_series,
     )
     from pyspark.sql import DataFrame
 
     series = _series(rng)
-    # payloads keyed by the NORMALIZED id — both paths must coerce
+    # payloads keyed by the NORMALIZED id — the fan-out must coerce
     # '011' and 11 to the same series before fetching
     payloads = {
         int(sid): _payload(rng) for sid, _ in series
     }
 
     def fetch(url: str) -> list[dict]:
-        sid = int(url.split("bcdata.sgs.")[1].split("/")[0])
-        return payloads[sid]
+        return payloads[_sid(url)]
 
-    serial = extract_bcb_many(
-        spark, series, "2025-12-01", "2026-01-31",
-        fetch=fetch, max_concurrency=1,
-    )
-    conc = extract_bcb_many(
-        spark, series, "2025-12-01", "2026-01-31",
-        fetch=fetch, max_concurrency=16,
-    )
-    dist = extract_bcb_many_distributed(
-        spark, series, "2025-12-01", "2026-01-31",
-        fetch=fetch, series_per_task=3,
-    )
-    s_rows = [tuple(r) for r in serial.collect()]
-    c_rows = [tuple(r) for r in conc.collect()]
-    d_rows = [tuple(r) for r in dist.collect()]
-    assert c_rows == s_rows, (
-        f"{tag}: concurrent != serial (ORDERED) for {len(series)} series"
-    )
-    assert sorted(d_rows, key=repr) == sorted(s_rows, key=repr), (
-        f"{tag}: distributed != serial (multiset) for {len(series)} series"
-    )
-    # the r13 per-series union shape is the semantic reference
+    got = [
+        tuple(r)
+        for r in extract_bcb_many(
+            spark, series, "2025-12-01", "2026-01-31", fetch=fetch
+        ).collect()
+    ]
+    want = []
     if series:
         frames = [
             extract_bcb_sgs_series(
@@ -134,150 +111,49 @@ def run_round(spark, rng: random.Random, tag: str) -> None:
             )
             for sid, name in series
         ]
-        union_rows = [
+        want = [
             tuple(r)
             for r in reduce(DataFrame.unionByName, frames).collect()
         ]
-        assert s_rows == union_rows, f"{tag}: serial != union-of-singles"
+    assert got == want, (
+        f"{tag}: extract_bcb_many != serial reference (ORDERED) for "
+        f"{len(series)} series"
+    )
 
-    # phase 2: random failures under on_error='skip' — survivors must
-    # equal the serial path over only the surviving series
+    # phase 2: random failures — the one raised error names exactly
+    # the failed series and counts every failed call
     if series:
         failing = {
             int(sid)
             for sid, _ in series
             if rng.random() < 0.3
         }
+        if not failing:
+            return
 
         def flaky(url: str) -> list[dict]:
-            sid = int(url.split("bcdata.sgs.")[1].split("/")[0])
+            sid = _sid(url)
             if sid in failing:
                 raise ConnectionError(f"boom {sid}")
             return payloads[sid]
 
-        survivors = [
-            (sid, name)
-            for sid, name in series
-            if int(sid) not in failing
-        ]
-        want = [
-            tuple(r)
-            for r in extract_bcb_many(
-                spark, survivors, "2025-12-01", "2026-01-31",
-                fetch=fetch, max_concurrency=1,
-            ).collect()
-        ]
-        got_c = [
-            tuple(r)
-            for r in extract_bcb_many(
-                spark, series, "2025-12-01", "2026-01-31",
-                fetch=flaky, on_error="skip",
-            ).collect()
-        ]
-        got_d = [
-            tuple(r)
-            for r in extract_bcb_many_distributed(
-                spark, series, "2025-12-01", "2026-01-31",
-                fetch=flaky, on_error="skip", series_per_task=3,
-            ).collect()
-        ]
-        assert got_c == want, f"{tag}: skip-mode concurrent != survivors"
-        assert sorted(got_d, key=repr) == sorted(want, key=repr), (
-            f"{tag}: skip-mode distributed != survivors"
-        )
-
-        # failure-mode parity (r15 — VERDICT r14 What's missing #2):
-        # on_error='raise' must name the SAME failed-series set on
-        # both paths — the distributed path aggregates its marker
-        # rows across tasks into one driver-side error like the
-        # driver pool's all-settle message
-        import re
-
-        present_failing = {
-            int(sid) for sid, _ in series if int(sid) in failing
-        }
-        if present_failing:
-            def named(callable_, *a, **kw):
-                try:
-                    callable_(*a, **kw)
-                except RuntimeError as exc:
-                    return set(
-                        map(int, re.findall(r"series (\d+)", str(exc)))
-                    )
-                raise AssertionError(
-                    f"{tag}: raise-mode did not raise with "
-                    f"{len(present_failing)} failing series"
-                )
-
-            named_c = named(
-                extract_bcb_many, spark, series,
-                "2025-12-01", "2026-01-31", fetch=flaky,
+        try:
+            extract_bcb_many(
+                spark, series, "2025-12-01", "2026-01-31", fetch=flaky
             )
-            named_d = named(
-                extract_bcb_many_distributed, spark, series,
-                "2025-12-01", "2026-01-31",
-                fetch=flaky, series_per_task=3,
+        except RuntimeError as exc:
+            msg = str(exc)
+        else:
+            raise AssertionError(
+                f"{tag}: did not raise with {len(failing)} failing series"
             )
-            assert named_c == present_failing, (
-                f"{tag}: concurrent raise named {named_c}, "
-                f"failing {present_failing}"
-            )
-            assert named_d == present_failing, (
-                f"{tag}: distributed raise named {named_d}, "
-                f"failing {present_failing} — cross-task "
-                "aggregation lost failures"
-            )
-
-        # status mode: lazy error markers carry exactly the failed
-        # set; the data rows equal the skip-mode survivors
-        status_rows = extract_bcb_many_distributed(
-            spark, series, "2025-12-01", "2026-01-31",
-            fetch=flaky, on_error="status", series_per_task=3,
-        ).collect()
-        marker_ids = sorted(
-            r["series_id"] for r in status_rows
-            if r["error"] is not None
+        named = set(map(int, re.findall(r"series (\d+)", msg)))
+        assert named == failing, (
+            f"{tag}: raise named {named}, failing {failing}"
         )
-        want_markers = sorted(
-            int(sid) for sid, _ in series if int(sid) in failing
-        )
-        assert marker_ids == want_markers, (
-            f"{tag}: status markers {marker_ids} != failed "
-            f"{want_markers}"
-        )
-        data_rows = [
-            tuple(r)[:-1]  # drop the error column
-            for r in status_rows
-            if r["error"] is None
-        ]
-        assert sorted(data_rows, key=repr) == sorted(want, key=repr), (
-            f"{tag}: status-mode data rows != survivors"
-        )
-
-        # r15: the driver path's status mode must agree with the
-        # distributed one as a multiset, and its rows sit in series
-        # position (series-then-record order, markers included)
-        c_status = extract_bcb_many(
-            spark, series, "2025-12-01", "2026-01-31",
-            fetch=flaky, on_error="status",
-        ).collect()
-        assert sorted(
-            (tuple(r) for r in c_status), key=repr
-        ) == sorted((tuple(r) for r in status_rows), key=repr), (
-            f"{tag}: driver status != distributed status (multiset)"
-        )
-        order_sids = [r["series_id"] for r in c_status]
-        want_order = [
-            int(sid)
-            for sid, _ in series
-            for _n in range(
-                1
-                if int(sid) in failing
-                else len(payloads[int(sid)])
-            )
-        ]
-        assert order_sids == want_order, (
-            f"{tag}: driver status rows not in series position"
+        n_failed = sum(int(sid) in failing for sid, _ in series)
+        assert f" {n_failed}/{len(series)} series failed — " in msg, (
+            f"{tag}: raise did not count {n_failed}/{len(series)}: {msg}"
         )
 
 

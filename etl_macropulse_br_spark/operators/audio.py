@@ -3,10 +3,8 @@
 The stdlib ``wave`` module reads only integer PCM. This module
 parses the RIFF container directly and decodes the compressed /
 non-PCM format tags that real crawl audio actually carries in WAV
-containers — mirroring the PNG/JPEG work for images (reference
-scope: the reference pipeline treats media as opaque bytes; this
-repo's multimodal surface adds real decode so the plumbing is
-exercised end-to-end without codec libraries):
+containers, without codec libraries (the reference pipeline has no
+media at all; no entry point imports this module):
 
 - tag 1      integer PCM (8-bit unsigned / 16 / 24 / 32-bit LE)
 - tag 3      IEEE float (32 / 64-bit)
@@ -15,13 +13,10 @@ exercised end-to-end without codec libraries):
 - tag 0x11   IMA/DVI ADPCM (4-bit, per-block predictor headers)
 - tag 0xFFFE WAVE_FORMAT_EXTENSIBLE (tag taken from the SubFormat)
 
-Contract (same as the image codecs): corrupt containers raise
-``ValueError``; valid-but-unsupported tags raise
-``NotImplementedError`` (→ stub fallback in ``decode_media``).
+Contract: corrupt containers raise ``ValueError``;
+valid-but-unsupported tags raise ``NotImplementedError``.
 G.711 decode is bit-exact to the ITU tables (tests cross-check
 against ``audioop`` where the interpreter still ships it).
-Everything here runs inside Arrow-batched executors; no driver-side
-byte handling.
 """
 
 from __future__ import annotations
@@ -166,8 +161,8 @@ def wav_read(content: bytes):
     """Parse a RIFF/WAVE payload → (rate, n_channels, float64 samples
     interleaved, n_frames). Handles the format tags listed in the
     module docstring; integer PCM comes back in its native scale
-    (the same scale :func:`..multimodal._decode_wav` reports for
-    stdlib-``wave`` PCM), G.711/ADPCM in int16 scale."""
+    (the scale stdlib ``wave`` frames carry), G.711/ADPCM in int16
+    scale."""
     if len(content) < 12 or content[:4] != b"RIFF" or content[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos = 12

@@ -740,12 +740,12 @@ def banded_hamming_pairs(
     sk: DataFrame, bits: int, max_hamming: int
 ) -> DataFrame:
     """Pigeonhole-banded Hamming pairing over any (id, sketch)
-    table of ``bits``-bit integer sketches — shared by the SimHash
-    text path and the image dHash path. Split into ``max_hamming+1``
-    bands; two sketches within ``max_hamming`` flips must agree on
-    >= 1 band (recall 1.0); verify ``bit_count(xor)`` on colliding
-    pairs only. Arithmetic ``shiftright`` sign-fill is masked off,
-    so 64-bit (negative) sketches band correctly."""
+    table of ``bits``-bit integer sketches (the SimHash text path
+    calls it). Split into ``max_hamming+1`` bands; two sketches
+    within ``max_hamming`` flips must agree on >= 1 band (recall
+    1.0); verify ``bit_count(xor)`` on colliding pairs only.
+    Arithmetic ``shiftright`` sign-fill is masked off, so 64-bit
+    (negative) sketches band correctly."""
     n_bands = max_hamming + 1
     if n_bands > bits:
         # band_width would floor to 0 and mask to 0 — every sketch
@@ -1928,9 +1928,8 @@ def bloom_bitset(
     n_hashes: int = 4,
 ) -> DataFrame:
     """The eval corpus compressed to a ONE-row (bf: array<long>)
-    Bloom bitset DataFrame — the broadcast "model parameter" both
-    decontamination paths probe (batch ``decontaminate_bloom``,
-    streaming ``streaming/decontaminate.py``). bit_or is
+    Bloom bitset DataFrame — the broadcast "model parameter"
+    :func:`decontaminate_bloom` probes. bit_or is
     commutative/associative, so the bitset is independent of row
     order and partitioning and the construction replays
     bit-identically in the SQL oracle."""
@@ -2053,10 +2052,9 @@ def save_bloom_bitset(
 
 def load_bloom_bitset(path: str) -> dict:
     """Load a bitset persisted by :func:`save_bloom_bitset` —
-    returns the param-carrying dict that
-    ``streaming/decontaminate.decontaminate_bloom_stream`` accepts
-    as its ``bitset`` argument, with the STORED params authoritative
-    (the caller cannot mis-parameterize the probe)."""
+    returns the dict it wrote: ``words`` plus the ``n_bits`` /
+    ``n_shingle`` / ``n_hashes`` the bitset was built with. A file
+    missing any of those keys raises ``ValueError``."""
     import json
 
     with open(path) as f:

@@ -102,9 +102,7 @@ Late-r5 and r6 aux additions (all locally oracle-gated):
   (blocked batch-KNN contrastive mining), docs_containment
   (directional sub-document duplication, rare-shingle blocking).
   Engine-only (no DuckDB analogue, pytest/differential-gated):
-  image_dhash/image_near_dups, audio_ehash/audio_near_dups,
-  streaming text_dedup_stream, transformWithStateInPandas
-  running_user_stats, SeriesExplode UDTF, JSONL/ORC sources.
+  streaming text_dedup_stream, SeriesExplode UDTF, JSONL/ORC sources.
 r7 aux additions (all locally oracle-gated at both scales under
   both sessions):
   embedding_pq_batch_topk / embedding_ivf_batch_topk (batch-query
@@ -125,9 +123,8 @@ r7 aux additions (all locally oracle-gated at both scales under
   pow(2, log2_weight) underflow at any scale); embedding_semdedup /
   docs_curated_semantic run the paper's auto-k (ceil(sqrt(n)));
   k-means seeds from hash-ordered ids. Engine-only r7:
-  streaming decontaminate_bloom_stream (map-only literal-bitset
-  filter) and running_distinct_stream (HLL registers in bounded
-  state), both stream-vs-batch differential-gated;
+  running_distinct_stream (HLL registers in bounded state),
+  stream-vs-batch differential-gated;
   tools/fuzz_oracle.py re-runs the docs/embeddings/events registry
   on seed-deterministic adversarial corpora (83/83 across seeds).
 """

@@ -2,7 +2,7 @@
 (r10 — closes VERDICT r9 "What's missing #1").
 
 Every stateful stream in this package (`neardup`, `quantiles`,
-`sessions`, `distinct`, `windowed_distinct`, `running_stats`) runs by
+`sessions`, `distinct`, `windowed_distinct`) runs by
 default on Spark's HDFSBackedStateStoreProvider — state lives on the
 EXECUTOR HEAP with a checkpoint copy per batch. That is the right
 local-test default, but at production stream volume the heap is the

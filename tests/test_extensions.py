@@ -1,5 +1,5 @@
 """Tests for the training-data extension operators: dedup,
-similarity, text analysis, multimodal plumbing."""
+similarity, text analysis."""
 
 from __future__ import annotations
 
@@ -129,40 +129,6 @@ def test_ivf_topk_contains_nearest(vectors):
     assert [r["vec_id"] for r in out] == [0, 1]
 
 
-def test_multimodal_feature_extraction(spark):
-    from etl_macropulse_br_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_plan,
-        sample_frames,
-    )
-
-    rows = [
-        (1, "image", b"\x01\x02\x03\x04", "image/png", 1024, 768, None),
-        (2, "image", b"", "image/png", 100, 100, None),
-        (3, "video", b"\xff" * 100, "video/mp4", 640, 480, 5500),
-        (4, "audio", None, "audio/wav", None, None, 3000),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    feats = {r["media_id"]: r for r in extract_features(media).collect()}
-    assert feats[1]["decode_ok"] and feats[1]["feature"][0] == 4.0
-    assert feats[2]["decode_ok"] and feats[2]["feature"] == [0.0] * 8
-    assert not feats[4]["decode_ok"]  # None bytes → stub raises → flagged
-
-    resized = resize_plan(media, max_px=512).collect()
-    assert [r["media_id"] for r in resized] == [1]
-    # content is not parseable by any available codec → the real
-    # resize pass must NOT corrupt it: row passes through unchanged
-    # (metadata still marks it unprocessed). Real-resample coverage:
-    # tests/test_multimodal_png.py.
-    assert resized[0]["width"] == 1024
-    assert resized[0]["content"] == b"\x01\x02\x03\x04"
-
-    frames = sample_frames(media, every_ms=1000, max_frames=8).collect()
-    assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000, 4000, 5000]
-
-
 def test_srp_banded_buckets_shrink():
     """The banded OR-construction must bound bucket sizes: more
     planes per band → exponentially smaller buckets than the earlier
@@ -212,39 +178,6 @@ def test_embedding_near_dups_pairs_verified(spark):
     assert len(pairs) == len(set(pairs))
 
 
-def test_multimodal_decoder_both_modes(spark):
-    """extract_features runs end-to-end with the decoder flag in
-    both positions — SKIP-FREE: real mode decodes PNG on the stdlib
-    parser in any environment (PIL merely widens format support)."""
-    from etl_macropulse_br_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        png_encode,
-    )
-
-    rows = [(1, "image", b"\x89PNGfakebytes", "image/png", 4, 4, None)]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    # stub mode: deterministic byte-stat features
-    out = extract_features(media, use_real_decoder=False).collect()
-    assert out[0]["decode_ok"] and out[0]["feature"][0] == 13.0
-
-    # real mode: decode an actual PNG generated in-process (stdlib
-    # encoder → stdlib-or-PIL decoder, identical features either way)
-    content = png_encode(3, 2, bytes([128] * 6), color_type=0)
-    real = spark.createDataFrame(
-        [(2, "image", content, "image/png", 3, 2, None)], MEDIA_SCHEMA
-    )
-    got = extract_features(real, use_real_decoder=True).collect()[0]
-    assert got["decode_ok"]
-    assert got["feature"][:3] == [3.0, 2.0, 128.0]  # w, h, mean gray
-    assert got["feature"][3] == 0.0                 # std of constant image
-
-    # real mode on garbage bytes → decode_ok False, row preserved
-    bad = extract_features(media, use_real_decoder=True).collect()[0]
-    assert bad["decode_ok"] is False and bad["feature"] is None
-
-
 def test_kmv_distinct_sketch(spark):
     """KMV estimate: exact below k distinct values; within ~3/sqrt(k)
     relative error above (64 mins → ~37% bound at 3 sigma; the fixed
@@ -291,76 +224,6 @@ def test_salted_join_spreads_hot_key(spark):
         for r in fact.join(dim, "k").collect()
     )
     assert got == want
-
-
-def test_multimodal_wav_decode_real(spark):
-    """The audio path is a REAL decoder in any environment: a WAV
-    synthesized with the stdlib wave writer round-trips through
-    extract_features with exact duration/rate/channel features.
-    Malformed RIFF bytes are flagged, not fatal."""
-    import io
-    import struct
-    import wave
-
-    from etl_macropulse_br_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        # 4000 frames (0.5 s) of a constant amplitude-1000 square-ish
-        # signal so rms/peak are exactly 1000
-        w.writeframes(struct.pack("<4000h", *([1000] * 4000)))
-    wav_bytes = buf.getvalue()
-
-    media = spark.createDataFrame(
-        [
-            (1, "audio", wav_bytes, "audio/wav", None, None, 500),
-            (2, "audio", b"RIFFgarbagenotawav", "audio/wav", None, None, 1),
-        ],
-        MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in extract_features(media).collect()}
-    dur, rate, nch, rms, peak, n, nbytes, flag = feats[1]["feature"]
-    assert feats[1]["decode_ok"]
-    assert (dur, rate, nch) == (500.0, 8000.0, 1.0)
-    assert (rms, peak, n) == (1000.0, 1000.0, 4000.0)
-    assert nbytes == float(len(wav_bytes)) and flag == 1.0
-    # malformed RIFF → ValueError inside the decoder → flagged row
-    assert feats[2]["decode_ok"] is False and feats[2]["feature"] is None
-
-
-def test_multimodal_y4m_decode_real(spark):
-    """Raw YUV4MPEG2 video decodes on pure stdlib: header gives
-    dims/fps, FRAME markers give the count; malformed y4m is
-    flagged."""
-    from etl_macropulse_br_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    w, h, n = 4, 2, 5
-    frame = b"FRAME\x0a" + b"\x80" * (w * h * 3 // 2)  # 4:2:0 planes
-    y4m = b"YUV4MPEG2 W4 H2 F25:1 Ip A1:1 C420\x0a" + frame * n
-    media = spark.createDataFrame(
-        [
-            (1, "video", y4m, "video/x-yuv4mpeg", w, h, None),
-            (2, "video", b"YUV4MPEG2 F25:1\x0agarbage", "video/x-yuv4mpeg", None, None, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in extract_features(media).collect()}
-    dur, fw, fh, frames, fps, _, nbytes, flag = feats[1]["feature"]
-    assert feats[1]["decode_ok"]
-    assert (fw, fh, frames, fps) == (4.0, 2.0, 5.0, 25.0)
-    assert dur == 1000.0 * n / 25.0 and flag == 1.0
-    assert nbytes == float(len(y4m))
-    # header without W/H → ValueError → flagged, not fatal
-    assert feats[2]["decode_ok"] is False and feats[2]["feature"] is None
 
 
 def test_winnow_fingerprints_shared_run_and_density(spark):
@@ -1206,6 +1069,26 @@ def test_banded_hamming_guard_rejects_zero_width_bands(spark):
     sk = spark.createDataFrame([(1, 5)], "id long, sketch long")
     with pytest.raises(ValueError, match="pigeonhole"):
         banded_hamming_pairs(sk, bits=8, max_hamming=8)
+
+
+def test_banded_hamming_pairs_signed_64_bit_sketches(spark):
+    """64-bit sketches are negative longs: a single full-width band
+    (max_hamming=0) uses the all-ones mask, and narrower bands mask
+    off the arithmetic shift's sign fill."""
+    from etl_macropulse_br_spark.operators.dedup import banded_hamming_pairs
+
+    sk = spark.createDataFrame(
+        [(1, -5), (2, -5), (3, -6), (4, 5)], "id long, sketch long"
+    )
+
+    def pairs(max_hamming):
+        return sorted(
+            (r["id_a"], r["id_b"], r["hamming"])
+            for r in banded_hamming_pairs(sk, 64, max_hamming).collect()
+        )
+
+    assert pairs(0) == [(1, 2, 0)]
+    assert pairs(2) == [(1, 2, 0), (1, 3, 1), (2, 3, 1)]
 
 
 def test_span_keep_first_winner_not_clipped_by_overlapping_gram(spark):

@@ -22,11 +22,6 @@ from etl_macropulse_br_spark.operators.audio import (
     _ULAW,
     wav_read,
 )
-from etl_macropulse_br_spark.operators.multimodal import (
-    _decode_stub,
-    _decode_wav,
-    decode_media,
-)
 
 try:  # deprecated, removed in 3.13 — cross-check only where present
     import audioop  # noqa: F401
@@ -129,10 +124,6 @@ def test_mulaw_wav_decodes():
     assert (rate, nch, nframes) == (8000, 1, 1024)
     ref = _ULAW[np.frombuffer(data, dtype=np.uint8)].astype(np.float64)
     assert np.array_equal(a, ref)
-    # decode_media routes through the WAV fallback with the 8-dim contract
-    feats = decode_media(w, "audio")
-    assert feats[0] == 1000.0 * 1024 / 8000 and feats[1] == 8000.0
-    assert feats[5] == 1024.0 and feats[6] == float(len(w)) and feats[7] == 1.0
 
 
 def test_alaw_stereo_wav_decodes():
@@ -228,18 +219,13 @@ def test_ima_adpcm_roundtrip():
     assert np.corrcoef(a[block_samples:], src_f[block_samples:])[0, 1] > 0.999
 
 
-def test_unsupported_tag_stub_fallback_and_malformed():
+def test_wav_read_unsupported_tag_and_malformed():
     w = _wav(0x55, 1, 8000, 16, 2, b"\x00\x00" * 8)
     with pytest.raises(NotImplementedError):
         wav_read(w)
-    with pytest.raises(NotImplementedError):
-        _decode_wav(w)
-    assert decode_media(w, "audio") == _decode_stub(w, "audio")
-    with pytest.raises(NotImplementedError):
-        decode_media(w, "audio", use_real=True)
-    # corrupt containers still raise ValueError through _decode_wav
+    # corrupt containers raise ValueError
     trunc = _wav(7, 1, 8000, 8, 1, bytes(64))[:-40]
     with pytest.raises(ValueError):
-        _decode_wav(trunc)
+        wav_read(trunc)
     with pytest.raises(ValueError):
         wav_read(b"RIFFxxxxWAVE")  # no chunks at all

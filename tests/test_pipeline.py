@@ -201,20 +201,19 @@ def test_run_pipeline_sink_jobs_carry_caller_job_group(spark, workspace):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
-def test_run_pipeline_outputs_equal_result_tables(spark, workspace):
-    """Every parquet output and catalog table the concurrent sinks
-    write holds exactly the rows of its frame in ``result.tables``."""
-    result = _run(spark, workspace)
-    data = workspace / "data"
-    outputs = {
-        "silver/bcb_sgs": "silver_bcb_sgs",
-        "silver/anp_prices": "silver_anp_prices",
-        "silver/dim_uf": "dim_uf",
-        "bronze/ibge_uf": "dim_uf",
-        "gold/gold_bcb_monthly": "gold_bcb_monthly",
-        "gold/gold_anp_monthly": "gold_anp_monthly",
-    }
-    for out, name in outputs.items():
+# parquet output under data/ -> the result.tables frame it holds
+OUTPUTS = {
+    "silver/bcb_sgs": "silver_bcb_sgs",
+    "silver/anp_prices": "silver_anp_prices",
+    "silver/dim_uf": "dim_uf",
+    "bronze/ibge_uf": "dim_uf",
+    "gold/gold_bcb_monthly": "gold_bcb_monthly",
+    "gold/gold_anp_monthly": "gold_anp_monthly",
+}
+
+
+def _assert_outputs_equal_result(spark, data, result):
+    for out, name in OUTPUTS.items():
         frame = result.tables[name]
         written = spark.read.schema(frame.schema).parquet(str(data / out))
         assert _rows(written.select(*frame.columns)) == _rows(frame), out
@@ -225,6 +224,70 @@ def test_run_pipeline_outputs_equal_result_tables(spark, workspace):
     assert (data / "gold" / "summary.md").read_text(
         encoding="utf-8"
     ) == result.summary_text
+
+
+def test_run_pipeline_outputs_equal_result_tables(spark, workspace):
+    """Every parquet output and catalog table the concurrent sinks
+    write holds exactly the rows of its frame in ``result.tables``."""
+    result = _run(spark, workspace)
+    _assert_outputs_equal_result(spark, workspace / "data", result)
+
+
+def test_run_pipeline_rerun_replaces_every_output(spark, workspace):
+    """A second run in the same data_dir and JVM, on a smaller ANP
+    CSV and a changed BCB payload, leaves only the second run's rows
+    in every parquet output, catalog table and summary.md."""
+    first = _run(spark, workspace)
+    counts = {name: df.count() for name, df in first.tables.items()}
+    first_summary = first.summary_text
+
+    (workspace / "inputs" / "anp.csv").write_text(
+        "Estado - Sigla;Produto;Data da Coleta;Valor de Venda;Município\n"
+        "SP;GASOLINA;09/01/2026;7,00;SAO PAULO\n"
+        "SP;GASOLINA;15/12/2025;6,50;SAO PAULO\n",
+        encoding="utf-8",
+    )
+    bcb_payload = [
+        {"data": "05/01/2026", "valor": "14,00"},
+        {"data": "10/12/2025", "valor": "13,00"},
+    ]
+
+    def fetch(url):
+        return bcb_payload if "bcb.gov.br" in url else fake_fetch(url)
+
+    second = run_pipeline(
+        spark,
+        run_config_path=str(workspace / "inputs" / "run_config.json"),
+        series_config_path=str(workspace / "inputs" / "bcb_series.csv"),
+        data_dir=str(workspace / "data"),
+        fetch=fetch,
+    )
+    data = workspace / "data"
+    _assert_outputs_equal_result(spark, data, second)
+    for out, n in (("bronze/bcb_sgs", 2), ("bronze/anp_raw", 2)):
+        assert spark.read.parquet(str(data / out)).count() == n, out
+
+    assert counts == {
+        "silver_bcb_sgs": 4,
+        "silver_anp_prices": 4,
+        "dim_uf": 2,
+        "gold_bcb_monthly": 2,
+        "gold_anp_monthly": 4,
+    }
+    assert {name: spark.table(name).count() for name in counts} == {
+        "silver_bcb_sgs": 2,
+        "silver_anp_prices": 2,
+        "dim_uf": 2,
+        "gold_bcb_monthly": 2,
+        "gold_anp_monthly": 2,
+    }
+    assert second.summary_text != first_summary
+    assert second.summary_text == (
+        "BCB/SGS (série 11) - selic_sgs_11: último valor em 2026-01-05 = 14.00.\n"
+        "Variação vs mês anterior: +1.00 (variação absoluta).\n"
+        "ANP - Destaques de 2026-01-01:\n"
+        "- SP / GASOLINA: variação média +0.50 (vs mês anterior)."
+    )
 
 
 def test_read_csv_header_schema_matches_spark_inference(spark, tmp_path):

@@ -304,6 +304,17 @@ def test_bloom_save_interleave_refused_and_replace_atomic(
     assert load_bloom_bitset(path) == s2
 
 
+def test_load_bloom_bitset_rejects_artifact_missing_keys(tmp_path):
+    """A JSON file without the stored build params is not a bitset
+    artifact: loading it fails naming the writer to use."""
+    from etl_macropulse_br_spark.operators.dedup import load_bloom_bitset
+
+    broken = tmp_path / "broken.json"
+    broken.write_text(json.dumps({"words": []}))
+    with pytest.raises(ValueError, match="save_bloom_bitset"):
+        load_bloom_bitset(str(broken))
+
+
 def test_displaced_lease_aborts_sketch_commit(spark, tmp_path):
     """r13: a save whose lease was stolen mid-write must abort
     BEFORE the pointer commit — the old sketch keeps serving and the

@@ -96,3 +96,25 @@ def test_summary_fallback_lines_match_reference(spark):
         "ANP - Sem variação mensal suficiente para destacar no período."
         in text
     )
+
+    # ANP rows present, but every date_ref is null
+    undated = spark.createDataFrame(
+        [("AM", "GASOLINA", None, 6.23), ("RJ", "DIESEL", None, 5.10)],
+        ANP_SCHEMA,
+    )
+    text = build_summary_text(empty_bcb, undated)
+    assert text == (
+        "BCB/SGS - sem dados para o período.\n"
+        "ANP - Sem dados válidos para o período."
+    )
+
+    # silver drops null dates only, so the latest BCB row can carry a
+    # NULL value: it renders as pandas NaN would, not as a TypeError
+    null_value = spark.createDataFrame(
+        [(11, "selic_sgs_11", d(2026, 1, 9), None)], BCB_SCHEMA
+    )
+    text = build_summary_text(null_value, empty_anp)
+    assert text == (
+        "BCB/SGS (série 11) - selic_sgs_11: último valor em 2026-01-09 = nan.\n"
+        "ANP - sem dados para o período."
+    )

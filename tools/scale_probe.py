@@ -72,10 +72,12 @@ REPL_KEYS: dict[str, tuple[str, str | None]] = {
 }
 
 
-def build_replicated_dir(sf_dir: str, k: int, dest: str) -> None:
-    """Write K-replicated copies of the probe tables into ``dest``;
-    every other table file is copied verbatim so registry callables
-    that touch dims keep working."""
+def build_replicated_dir(
+    sf_dir: str, k: int, dest: str, n_files: int
+) -> None:
+    """Write K-replicated copies of the probe tables into ``dest``,
+    ``n_files`` parquet files each; every other table file is copied
+    verbatim so registry callables that touch dims keep working."""
     from pyspark.sql import functions as F
 
     from etl_macropulse_br_spark.session import get_spark
@@ -115,9 +117,9 @@ def build_replicated_dir(sf_dir: str, k: int, dest: str) -> None:
             out = reduce(DataFrame.unionAll, parts)
         else:
             out = replicate(df, k, idc, tc)
-        # 64 files ≈ 2 x max cores: see module docstring (scan splits
-        # must not be the parallelism cap the probe measures)
-        out.repartition(64).write.mode("overwrite").parquet(
+        # scan splits must not be the parallelism cap the probe
+        # measures: see module docstring
+        out.repartition(n_files).write.mode("overwrite").parquet(
             f"{dest}/{t}.parquet"
         )
     for t in TESTDATA_TABLES:
@@ -212,7 +214,7 @@ def main() -> None:
     dest = tempfile.mkdtemp(prefix=f"scale_probe_k{args.k}_")
     try:
         print(f"# replicating K={args.k} into {dest}", file=sys.stderr)
-        build_replicated_dir(sf_dir, args.k, dest)
+        build_replicated_dir(sf_dir, args.k, dest, n_files=2 * hi)
         # force the replication's dirty pages to disk BEFORE any timed
         # session: measured on this box, background writeback of the
         # multi-GB replicated dir overlapped the first core-count

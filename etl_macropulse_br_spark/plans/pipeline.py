@@ -19,6 +19,14 @@ before one error names every failed sink
 ``summary.md`` is written only when every sink succeeded. HTTP
 extracts accept an injectable ``fetch`` so tests (and offline runs)
 never hit the network.
+
+The REST extracts are ``LocalRelation`` frames, which compare by
+value: a second run in the same JVM over an unchanged IBGE payload
+and a CSV rewritten at the same path would otherwise match the
+previous run's still-persisted ``anp_enriched`` and write its rows.
+So each run starts with ``spark.catalog.refreshByPath`` on the ANP
+CSV, Spark's own invalidation of cached plans over a changed file
+(it runs no job).
 """
 
 from __future__ import annotations
@@ -83,6 +91,8 @@ def run_pipeline(
     start_date = cfg["start_date"]
     end_date = cfg["end_date"]
     anp_path = cfg["anp_bronze_file"]
+    # drop cached data of an earlier run over this path (see above)
+    spark.catalog.refreshByPath(anp_path)
 
     # Control-table scan + enabled filter (main.py:32-33).
     series_rows = read_series_config(series_config_path)

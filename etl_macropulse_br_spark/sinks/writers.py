@@ -34,8 +34,23 @@ def write_parquet_partitioned(
     ``partitionBy`` gives downstream readers partition pruning for
     free; at 100 TB the partition column choice (low-cardinality
     series_id / uf_sigla) keeps file counts sane.
+
+    The frame is first hash-repartitioned on the partition columns
+    into one partition per task slot. Each key still lands in exactly
+    one task, so each directory still holds one file, but the keys are
+    spread over every slot: otherwise AQE coalesces a small gold mart
+    into one partition and one task writes all of its directories.
+    The gold marts are monthly aggregates (one row per series or per
+    UF and product, per month), so one task per key range stays small
+    at scale.
     """
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(base_dir)
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    (
+        df.repartition(slots, *partition_cols)
+        .write.mode("overwrite")
+        .partitionBy(*partition_cols)
+        .parquet(base_dir)
+    )
 
 
 def table_location(spark: SparkSession, table: str) -> str:

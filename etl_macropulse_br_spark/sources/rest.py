@@ -2,17 +2,21 @@
 
 Spark-first rewrites of ``extract.py:15-68``. HTTP happens on the
 driver (the payloads are control-plane sized: one series ≈ hundreds
-of rows, the UF dim is 27 rows); rows land in executors via
-``spark.createDataFrame`` with explicit schemas. The fetch function
-is injectable so tests run fully offline (SURVEY §7.1 step 4).
+of rows, the UF dim is 27 rows). Every frame built here goes through
+:func:`_local_frame`: the payload is typed on the driver into a
+``pyarrow.Table`` column by column, with the explicit schema, and
+becomes a ``LocalRelation`` in the plan — no ``PythonRDD``, so no task
+that reads it starts a Python worker, and building it runs no job.
+The fetch function is injectable so tests run fully offline (SURVEY
+§7.1 step 4).
 
 ``extract_bcb_many`` fetches its series concurrently on a driver
 thread pool: the calls are network-bound (the reference budgets
 30 s per request, ``extract.py:28``), so N serial round-trips take
 about one round-trip of wall time. Every fetch settles before one
 error names every failed series, and the fetched rows land in ONE
-``createDataFrame``. ``extract_bcb_sgs_series`` is the one-series
-reference path it is pinned row-equal to.
+local frame. ``extract_bcb_sgs_series`` is the one-series reference
+path it is pinned row-equal to.
 """
 
 from __future__ import annotations
@@ -25,9 +29,11 @@ from datetime import datetime
 from functools import partial
 from urllib.request import urlopen
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from etl_macropulse_br_spark.functions.exprs import (
     parse_date_ddmmyyyy,
@@ -78,6 +84,61 @@ def _default_fetch(url: str) -> list[dict]:
         return json.loads(resp.read().decode("utf-8"))
 
 
+_SURROGATE = re.compile("[\ud800-\udfff]")
+
+
+def _arrow_column(name: str, values: list, pa_type: pa.DataType) -> pa.Array:
+    try:
+        return pa.array(values, type=pa_type)
+    except UnicodeEncodeError:
+        # a lone surrogate (a JSON "\ud800" escape) has no UTF-8 form;
+        # store U+FFFD for each one, as createDataFrame over Python rows
+        # does
+        return pa.array(
+            [
+                _SURROGATE.sub("\ufffd", v) if isinstance(v, str) else v
+                for v in values
+            ],
+            type=pa_type,
+        )
+    except OverflowError:
+        bad = next(
+            (v for v in values
+             if isinstance(v, int) and not -(2**63) <= v < 2**63),
+            None,
+        )
+        raise ValueError(
+            f"column {name!r}: {bad} is out of range for {pa_type}"
+        ) from None
+
+
+def _local_frame(
+    spark: SparkSession,
+    schema: T.StructType,
+    columns: list[list] | None = None,
+) -> DataFrame:
+    """Driver-side columns → DataFrame over a ``LocalRelation``.
+
+    Each list in ``columns`` (one per schema field, all empty when
+    ``None``) becomes an Arrow array of the field's type, so the frame
+    is an Arrow-backed ``LocalRelation``: no ``PythonRDD`` in its
+    lineage, no job to build it. Values Arrow cannot take get the
+    outcome ``createDataFrame`` over Python rows gives: a lone
+    surrogate is stored as U+FFFD, and a long out of range raises a
+    ``ValueError``, here naming the column."""
+    arrow_schema = to_arrow_schema(schema)
+    if columns is None:
+        columns = [[] for _ in arrow_schema]
+    table = pa.Table.from_arrays(
+        [
+            _arrow_column(f.name, values, f.type)
+            for f, values in zip(arrow_schema, columns)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _ddmmyyyy(iso_date: str) -> str:
     """ISO → dd/mm/YYYY request param (``extract.py:23-24``)."""
     return datetime.fromisoformat(iso_date).strftime("%d/%m/%Y")
@@ -103,10 +164,14 @@ def extract_bcb_sgs_series(
     )
     records = fetch(url)
     if not records:
-        return spark.createDataFrame([], BCB_SILVER_SCHEMA)
-    raw = spark.createDataFrame(
-        [(str(r.get("data", "")), str(r.get("valor", ""))) for r in records],
+        return _local_frame(spark, BCB_SILVER_SCHEMA)
+    raw = _local_frame(
+        spark,
         BCB_RAW_SCHEMA,
+        [
+            [str(r.get("data", "")) for r in records],
+            [str(r.get("valor", "")) for r in records],
+        ],
     )
     return raw.select(
         F.lit(series_id).cast("long").alias("series_id"),
@@ -148,28 +213,27 @@ def extract_ibge_uf_dim(
     """IBGE states → 27-row dimension (``extract.py:50-68``).
 
     The reference flattens nested JSON with ``pd.json_normalize``;
-    the 27 records are typed on the driver and land in ONE
-    ``createDataFrame`` with the explicit schema — no schema-inference
-    job. A record without ``regiao`` gets a NULL ``regiao_nome``.
+    the 27 records are typed on the driver into ONE local frame with
+    the explicit schema — no schema-inference job. A record without
+    ``regiao`` gets a NULL ``regiao_nome``.
     """
     fetch = fetch or _default_fetch
     records = fetch(IBGE_URL)
-    rows = []
+    ids, siglas, nomes, regioes = [], [], [], []
     for r in records or []:
         regiao = r.get("regiao")
-        rows.append(
-            (
-                _as_long(r.get("id")),
-                _as_string(r.get("sigla")),
-                _as_string(r.get("nome")),
-                _as_string(
-                    regiao.get("nome") if isinstance(regiao, dict) else None
-                ),
-            )
-        )
+        ids.append(_as_long(r.get("id")))
+        siglas.append(_as_string(r.get("sigla")))
+        nomes.append(_as_string(r.get("nome")))
+        regioes.append(_as_string(
+            regiao.get("nome") if isinstance(regiao, dict) else None
+        ))
+    uf_dim = _local_frame(
+        spark, UF_DIM_SCHEMA, [ids, siglas, nomes, regioes]
+    )
     # one partition, as the former one-slice JSON read had: the dim's
     # bronze, silver and catalog copies stay one file each
-    return spark.createDataFrame(rows, UF_DIM_SCHEMA).coalesce(1)
+    return uf_dim.coalesce(1)
 
 
 BCB_MANY_RAW_SCHEMA = T.StructType(
@@ -200,9 +264,10 @@ def extract_bcb_many(
     - ALL fetches settle first; then ONE error names every failed
       series, so a flaky series cannot hide a second failure behind
       a fail-fast, and no partial frame is produced.
-    - The typed output is built from ONE ``createDataFrame`` over
-      all fetched rows + one projection — no per-series frames, no
-      left-deep ``unionByName`` tree. Row order = series order then
+    - The typed output is built from ONE local frame (columns filled
+      in the loop over the fetch results, see :func:`_local_frame`)
+      + one projection — no per-series frames, no left-deep
+      ``unionByName`` tree. Row order = series order then
       record order, the exact rows the serial per-series path
       produces (pinned by the concurrent≡serial differential in
       tests/test_pipeline.py).
@@ -213,7 +278,7 @@ def extract_bcb_many(
     # loosely-typed control table hits the same URLs and rows
     series = [(int(sid), str(name)) for sid, name in series]
     if not series:
-        return spark.createDataFrame([], BCB_SILVER_SCHEMA)
+        return _local_frame(spark, BCB_SILVER_SCHEMA)
     start, end = _ddmmyyyy(start_date), _ddmmyyyy(end_date)
     results = settle_all(
         "extract_bcb_many",
@@ -227,12 +292,16 @@ def extract_bcb_many(
         ],
         width=BCB_FETCH_THREADS,
     )
-    rows = [
-        (sid, name, str(r.get("data", "")), str(r.get("valor", "")))
-        for (sid, name), recs in zip(series, results)
-        for r in recs or ()
-    ]
-    raw = spark.createDataFrame(rows, BCB_MANY_RAW_SCHEMA)
+    sids, names, datas, valors = [], [], [], []
+    for (sid, name), recs in zip(series, results):
+        for r in recs or ():
+            sids.append(sid)
+            names.append(name)
+            datas.append(str(r.get("data", "")))
+            valors.append(str(r.get("valor", "")))
+    raw = _local_frame(
+        spark, BCB_MANY_RAW_SCHEMA, [sids, names, datas, valors]
+    )
     return raw.select(
         "series_id",
         "series_name",

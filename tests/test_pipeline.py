@@ -413,6 +413,41 @@ def test_write_parquet_partitioned_drops_stale_partitions(spark, tmp_path):
     ]
 
 
+def test_write_parquet_partitioned_one_file_per_key_over_every_slot(
+    spark, tmp_path
+):
+    """100 keys, from one partition (as AQE coalesces a small gold
+    mart) and from rows of each key scattered over 7 partitions: every
+    ``series_id=`` directory holds exactly one parquet file, the files
+    come from as many write tasks as there are task slots, and the
+    rows read back equal the input."""
+    import re
+
+    from etl_macropulse_br_spark.sinks.writers import (
+        write_parquet_partitioned,
+    )
+
+    rows = [
+        (sid, m, float(sid * 10 + m)) for sid in range(100) for m in (1, 2)
+    ]
+    df = spark.createDataFrame(rows, "series_id long, month int, value double")
+    inputs = {"one": df.coalesce(1), "scattered": df.repartition(7)}
+    for label, frame in inputs.items():
+        gold = tmp_path / label
+        write_parquet_partitioned(frame, str(gold), ["series_id"])
+
+        dirs = [d for d in os.listdir(gold) if d.startswith("series_id=")]
+        assert len(dirs) == 100, label
+        tasks = set()
+        for d in dirs:
+            files = [f for f in os.listdir(gold / d) if f.endswith(".parquet")]
+            assert len(files) == 1, (label, d, files)
+            tasks.add(re.match(r"part-(\d+)-", files[0]).group(1))
+        assert len(tasks) == spark.sparkContext.defaultParallelism, label
+        got = spark.read.parquet(str(gold))
+        assert _rows(got.select(*df.columns)) == sorted(rows, key=repr), label
+
+
 def test_streaming_gold_matches_batch(spark, tmp_path):
     """Stream-batch consistency: replaying silver files through the
     streaming monthly aggregation converges to the batch gold."""
@@ -823,3 +858,88 @@ def test_extract_bcb_many_normalizes_series_like_reference(spark):
     ).collect()
     assert "bcdata.sgs.11/" in seen[0]  # int-coerced, no '011' URL
     assert rows[0]["series_id"] == 11
+
+
+def test_driver_built_frames_run_no_python_worker_and_no_job(spark):
+    """Every frame the REST extracts build on the driver is a local
+    relation: no PythonRDD in its lineage (so no task that reads it
+    starts a Python worker), and building it runs no Spark job."""
+    from etl_macropulse_br_spark.sources.rest import (
+        extract_bcb_many,
+        extract_bcb_sgs_series,
+        extract_ibge_uf_dim,
+    )
+
+    args = ("2025-12-01", "2026-01-31")
+    builds = {
+        "bcb_many": lambda: extract_bcb_many(
+            spark, [(11, "a"), (433, "b")], *args,
+            fetch=lambda url: _sid_payload(_sid_from_url(url)),
+        ),
+        "bcb_many_no_series": lambda: extract_bcb_many(spark, [], *args),
+        "bcb_one": lambda: extract_bcb_sgs_series(
+            spark, 11, "a", *args, fetch=lambda url: _sid_payload(11)
+        ),
+        "bcb_one_empty": lambda: extract_bcb_sgs_series(
+            spark, 11, "a", *args, fetch=lambda url: []
+        ),
+        "ibge": lambda: extract_ibge_uf_dim(
+            spark, lambda url: IBGE_PAYLOAD
+        ),
+    }
+    for name, build in builds.items():
+        df, jobs = _jobs_in_group(spark, f"local-{name}", build)
+        assert jobs == [], name
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, (name, lineage)
+
+
+def test_extract_bcb_many_lone_surrogates_become_replacement_chars(spark):
+    """A payload string with a lone surrogate (a JSON ``\\ud800``
+    escape) cannot be UTF-8 encoded. Each surrogate is stored as
+    U+FFFD, as ``createDataFrame`` over Python rows stores it: in a
+    series name it survives as U+FFFD, in a ``valor`` or a ``data``
+    the parse gives NULL."""
+    import datetime
+
+    from etl_macropulse_br_spark.sources.rest import extract_bcb_many
+
+    payload = json.loads(
+        '[{"data": "02/01/2026", "valor": "1\\ud800"},'
+        ' {"data": "0\\udc00/01/2026", "valor": "2,5"}]'
+    )
+    name = json.loads('"s\\ud800x"')
+    rows = extract_bcb_many(
+        spark, [(11, name)], "2025-12-01", "2026-01-31",
+        fetch=lambda url: payload,
+    ).collect()
+    assert [tuple(r) for r in rows] == [
+        (11, "s\ufffdx", datetime.date(2026, 1, 2), None),
+        (11, "s\ufffdx", None, 2.5),
+    ]
+
+
+def test_out_of_range_long_raises_value_error_naming_column(spark):
+    """An integer outside the long range is a loud ``ValueError`` that
+    names the column, for an IBGE ``id`` and for a series id."""
+    from etl_macropulse_br_spark.sources.rest import (
+        extract_bcb_many,
+        extract_ibge_uf_dim,
+    )
+
+    big = 2**63
+    with pytest.raises(ValueError, match=f"'uf_id': {big} is out of range"):
+        extract_ibge_uf_dim(
+            spark, lambda url: [{"id": big, "sigla": "SP", "nome": "x"}]
+        )
+    with pytest.raises(
+        ValueError, match=f"'series_id': {big} is out of range"
+    ):
+        extract_bcb_many(
+            spark, [(big, "huge")], "2025-12-01", "2026-01-31",
+            fetch=lambda url: _sid_payload(1),
+        )
+    edge = extract_ibge_uf_dim(
+        spark, lambda url: [{"id": big - 1, "sigla": "SP", "nome": "x"}]
+    )
+    assert edge.first()["uf_id"] == big - 1

@@ -470,10 +470,8 @@ def minhash_sig_near_dups(
     Why this variant exists: the verify needs only k INTEGERS per
     document, never the shingle sets — so (a) text is touched
     exactly once (to build signatures), (b) the verify join is an
-    int-only k-column lookup, and (c) a streaming twin can hold
-    k+1 longs per doc in state, bounded regardless of document
-    length (streaming/neardup.py:sig_neardup_stream — the
-    production-bounded state the exact twin cannot offer).
+    int-only k-column lookup, and (c) the per-doc state is k longs,
+    bounded regardless of document length.
     Estimator contract: E[est_jaccard] = true Jaccard with std err
     ~ sqrt(J(1-J)/k); pairs near the threshold can flip relative to
     the exact verify — choose k accordingly (the exact-verify

@@ -1398,9 +1398,7 @@ def _signed_fixed_point_gateway(
     err_prefix: str,
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
-    """THE fixed-point gateway, shared verbatim by the batch sketch
-    and the streaming twin (r9 review fix — a hand-copied gateway
-    would let the two sides' bit-parity drift apart): v (double) →
+    """The signed sketch's fixed-point gateway: v (double) →
     ``a = floor(v * scale)`` bigint, with nulls dropped BEFORE the
     guards (a null condition can short-circuit-skip an appended
     guard — the repo-documented assert trap), a fail-fast NaN guard

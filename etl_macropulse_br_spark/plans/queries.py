@@ -101,8 +101,6 @@ Late-r5 and r6 aux additions (all locally oracle-gated):
   (Spark-4 UTF8_LCASE aggregate), embedding_hard_negatives
   (blocked batch-KNN contrastive mining), docs_containment
   (directional sub-document duplication, rare-shingle blocking).
-  Engine-only (no DuckDB analogue, pytest/differential-gated):
-  streaming text_dedup_stream, SeriesExplode UDTF, JSONL/ORC sources.
 r7 aux additions (all locally oracle-gated at both scales under
   both sessions):
   embedding_pq_batch_topk / embedding_ivf_batch_topk (batch-query
@@ -122,9 +120,7 @@ r7 aux additions (all locally oracle-gated at both scales under
   docs_dsir_sample runs the LOG-DOMAIN E-S key since r7 (no
   pow(2, log2_weight) underflow at any scale); embedding_semdedup /
   docs_curated_semantic run the paper's auto-k (ceil(sqrt(n)));
-  k-means seeds from hash-ordered ids. Engine-only r7:
-  running_distinct_stream (HLL registers in bounded state),
-  stream-vs-batch differential-gated;
+  k-means seeds from hash-ordered ids.
   tools/fuzz_oracle.py re-runs the docs/embeddings/events registry
   on seed-deterministic adversarial corpora (83/83 across seeds).
 """
@@ -3134,11 +3130,9 @@ def docs_sig_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs verified by SIGNATURE-agreement Jaccard
     (operators/dedup.py:minhash_sig_near_dups, r9): Broder's
     estimator over the k minhash components instead of the exact
-    shingle Jaccard — the int-only verify whose streaming twin can
-    hold k+2 longs per doc in state (streaming/neardup.py:
-    sig_neardup_stream). Every hash is the portable md5 family and
-    the estimator is an exact s/k double, so the oracle replays the
-    whole pipeline bit-identically."""
+    shingle Jaccard — an int-only verify over k longs per doc. Every
+    hash is the portable md5 family and the estimator is an exact s/k
+    double, so the oracle replays the whole pipeline bit-identically."""
     from etl_macropulse_br_spark.operators.dedup import (
         minhash_sig_near_dups,
     )
@@ -3672,18 +3666,16 @@ DOCS_MODEL_SCORE_SQL = _model_score_sql()
 
 def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native ``F.session_window`` aggregation — Spark's built-in
-    gap-session operator (the batch twin of the streaming
-    sessionizer), vs a gaps-and-islands oracle that replays its exact
-    merge rule: an event EXTENDS the session iff ts <= prev_ts + gap
-    (INCLUSIVE — an event landing exactly on the gap boundary merges,
-    verified empirically against session_window and pinned by the
-    stream-vs-batch differential test; the boundary case never
-    occurs in the continuous-timestamp testdata, which is why the
-    earlier strict-boundary oracle also hash-matched), and the
+    gap-session operator, vs a gaps-and-islands oracle that replays
+    its exact merge rule: an event EXTENDS the session iff
+    ts <= prev_ts + gap (INCLUSIVE — an event landing exactly on the
+    gap boundary merges, verified empirically against session_window
+    and pinned by the boundary-event oracle test; the boundary case
+    never occurs in the continuous-timestamp testdata, which is why
+    the earlier strict-boundary oracle also hash-matched), and the
     reported window end is last_ts + gap. Same rule as
-    ``sessionize_events`` and ``streaming/sessions.py``. One shuffle
-    on user_id; state is O(active sessions) under the hood, the same
-    bound the streaming path holds."""
+    ``sessionize_events``. One shuffle on user_id; state is
+    O(active sessions) under the hood."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -6557,14 +6549,14 @@ GROUP BY c_mktsegment
 # 51-57) now sit directly after the flagship so any future cap hits
 # the best-covered tail, not the most distinctive components.
 #
-# Stream-batch consistency: the sessionization surface carries THREE
-# gates — session_window_stats (declared, DuckDB gaps-and-islands
-# oracle), the boundary-exact oracle test, and the stream-vs-batch
-# differential (tests/test_streaming_sessions.py) asserting the
-# applyInPandasWithState sessionizer is row-identical to the native
-# session_window aggregation on the same input. All three pin the
-# INCLUSIVE gap boundary (an event at exactly last_ts + gap merges —
-# the empirically-verified native rule).
+# Sessionization carries two gates: session_window_stats (declared,
+# DuckDB gaps-and-islands oracle) and the boundary-exact oracle test
+# (tests/test_extensions.py::
+# test_session_oracle_matches_native_on_boundary_events), which
+# checks the oracle against native session_window on events placed
+# exactly on the gap. Both pin the INCLUSIVE gap boundary (an event
+# at exactly last_ts + gap merges — the empirically-verified native
+# rule).
 QUERIES: dict[str, QueryFn] = {
     "q1_pricing_summary": q1_pricing_summary,
     # --- dedup / ANN flagships (no driver row in r2 — first now) ---
@@ -6686,8 +6678,8 @@ AUX_QUERIES: dict[str, QueryFn] = {
     "docs_dup_clusters": docs_dup_clusters,
     # r4: benchmark decontamination (n-gram collision semi-join)
     "docs_decontaminate": docs_decontaminate,
-    # r4: native session_window aggregation (the batch twin of the
-    # streaming sessionizer) vs the gaps-and-islands oracle
+    # r4: native session_window aggregation vs the gaps-and-islands
+    # oracle
     "session_window_stats": session_window_stats,
     # r4: hashed-linear model scoring (broadcast literal weights,
     # map-only, integer-exact)
@@ -6747,8 +6739,8 @@ AUX_QUERIES: dict[str, QueryFn] = {
     "docs_dsir_sample": docs_dsir_sample,
     "docs_mixture_balance": docs_mixture_balance,
     "embedding_semdedup": embedding_semdedup,
-    # r9: signature-agreement near-dup verify (the int-only verify
-    # whose bounded-state streaming twin holds k+2 longs per doc)
+    # r9: signature-agreement near-dup verify (an int-only verify
+    # over k longs per doc)
     "docs_sig_near_dups": docs_sig_near_dups,
     # r8: KMV set algebra — oracle-gated approximate union /
     # intersection / Jaccard (the set ops HLL cannot answer)

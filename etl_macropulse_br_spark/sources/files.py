@@ -185,29 +185,3 @@ def register_testdata_views(spark: SparkSession, sf_dir: str) -> dict[str, DataF
         out[name] = df
     return out
 
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """JSON-lines source (extension surface — the reference reads
-    JSON only as driver-side config, ``main.py:18-20``). Passing an
-    explicit ``schema`` skips Spark's sampling inference pass, which
-    at 100 TB is a full extra scan; corrupt lines land in
-    ``_corrupt_record`` (PERMISSIVE) instead of failing the job."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.option("mode", "PERMISSIVE").json(path)
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    """ORC sink twin of the parquet sinks (sinks/writers.py) — same
-    lazy plan, different columnar container; zstd like the parquet
-    side so size comparisons are apples-to-apples."""
-    df.write.mode("overwrite").option("compression", "zstd").orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source: native vectorized reader, predicate pushdown and
-    column pruning work exactly as for parquet."""
-    return spark.read.orc(path)

@@ -31,7 +31,6 @@ from urllib.request import urlopen
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -51,8 +50,10 @@ BCB_FETCH_THREADS = 16  # extract_bcb_many's fetch pool cap
 
 FetchFn = Callable[[str], list[dict]]
 
-BCB_RAW_SCHEMA = T.StructType(
+BCB_MANY_RAW_SCHEMA = T.StructType(
     [
+        T.StructField("series_id", T.LongType()),
+        T.StructField("series_name", T.StringType()),
         T.StructField("data", T.StringType()),
         T.StructField("valor", T.StringType()),
     ]
@@ -165,17 +166,20 @@ def extract_bcb_sgs_series(
     records = fetch(url)
     if not records:
         return _local_frame(spark, BCB_SILVER_SCHEMA)
+    n = len(records)
     raw = _local_frame(
         spark,
-        BCB_RAW_SCHEMA,
+        BCB_MANY_RAW_SCHEMA,
         [
+            [series_id] * n,
+            [series_name] * n,
             [str(r.get("data", "")) for r in records],
             [str(r.get("valor", "")) for r in records],
         ],
     )
     return raw.select(
-        F.lit(series_id).cast("long").alias("series_id"),
-        F.lit(series_name).alias("series_name"),
+        "series_id",
+        "series_name",
         parse_date_ddmmyyyy("data").alias("date"),
         parse_ptbr_number("valor").alias("value"),
     )
@@ -234,16 +238,6 @@ def extract_ibge_uf_dim(
     # one partition, as the former one-slice JSON read had: the dim's
     # bronze, silver and catalog copies stay one file each
     return uf_dim.coalesce(1)
-
-
-BCB_MANY_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("series_id", T.LongType()),
-        T.StructField("series_name", T.StringType()),
-        T.StructField("data", T.StringType()),
-        T.StructField("valor", T.StringType()),
-    ]
-)
 
 
 def extract_bcb_many(

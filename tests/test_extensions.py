@@ -3,8 +3,11 @@ similarity, text analysis."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_macropulse_br_spark.operators.dedup import (
     exact_dedup,
@@ -2732,14 +2735,6 @@ def test_hdr_signed_auto_scale(spark):
     rows = hdr_signed_quantiles_by(g, "v", ["g"], (0.5,), None, s).collect()
     assert {r["g"] for r in rows} == {"true", "false"}
 
-    # streaming twin refuses auto-scale loudly (no stream to peek)
-    from etl_macropulse_br_spark.streaming.quantiles import (
-        running_signed_quantiles_stream,
-    )
-
-    with pytest.raises(ValueError, match="batch-only"):
-        running_signed_quantiles_stream(sq, "g", "v", scale=None)
-
     # plan identity: auto-scale pays ONE extra driver-side max
     # aggregate, then builds exactly the plan the explicit scale
     # builds — the sketch path itself is unchanged
@@ -2747,3 +2742,57 @@ def test_hdr_signed_auto_scale(spark):
     auto_df = hdr_signed_quantiles(sq, "v", (0.5,), None, s)
     explicit_df = hdr_signed_quantiles(sq, "v", (0.5,), scale, s)
     assert auto_df.sameSemantics(explicit_df)
+
+
+def test_session_oracle_matches_native_on_boundary_events(spark, tmp_path):
+    """The gaps-and-islands DuckDB oracle must replay session_window
+    EXACTLY at the gap boundary (ts == prev + gap merges). The
+    driver's testdata has continuous timestamps, so only this test
+    exercises the boundary case the r5 differential surfaced."""
+    import duckdb
+
+    from pyspark.sql import functions as F
+
+    from etl_macropulse_br_spark.plans.queries import (
+        SESSION_WINDOW_STATS_SQL,
+    )
+
+    base = dt.datetime(2026, 3, 1, 9, 0, 0)
+    deltas = [0, 1800, 3600, 5401, 7201, 9001, 9002, 10803]
+    rows = [
+        (1, i + 1, base + dt.timedelta(seconds=s))
+        for i, s in enumerate(deltas)
+    ]
+    schema = T.StructType(
+        [
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    df = spark.createDataFrame(rows, schema)
+    src = str(tmp_path / "boundary_events.parquet")
+    df.coalesce(1).write.parquet(src)
+
+    native = {
+        (r["user_id"], r["session_start"], r["session_end_gap"], r["n_events"])
+        for r in df.groupBy("user_id", F.session_window("ts", "30 minutes"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end_gap"),
+            "n_events",
+        )
+        .collect()
+    }
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{src}/*.parquet'")
+    oracle = {
+        (u, s, e, n)
+        for u, s, e, n in con.execute(SESSION_WINDOW_STATS_SQL).fetchall()
+    }
+    assert native == oracle
+    # the chain 0,1800,3600 merges through two exact boundaries
+    assert any(n >= 3 and s == base for _, s, _, n in native)

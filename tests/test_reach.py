@@ -27,8 +27,7 @@ ENTRY_POINTS = [
 UNREACHED_BY_DESIGN = {
     # ROADMAP "Blocked": the fake-backed object-store test matrix stays.
     "operators.objectstore_clients",
-    # Kept with their tests until the next cut (ROADMAP direction 4(a)).
-    "functions.udtf",
+    # Kept with its tests until the next cut (ROADMAP direction 4(a)).
     "operators.audio",
 }
 

@@ -33,7 +33,7 @@ and raise AFTER the chosen one — so every "crashed between write k
 and write k+1" window is reachable, including the windows the
 enumerated tests pinned. Everything derives from the seed: a failure
 reproduces with ``python tools/fuzz_ingest.py <seed>`` (the same
-seed-repro contract as fuzz_oracle / fuzz_streaming).
+seed-repro contract as fuzz_oracle).
 
 Usage:
     python tools/fuzz_ingest.py [seed] [n_docs] [rounds]

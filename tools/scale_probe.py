@@ -135,22 +135,30 @@ def build_replicated_dir(
 
 def wait_quiet(
     max_wait_s: int = 600, load_1m: float = 1.0, load_5m: float = 2.0
-) -> float:
+) -> tuple[float, bool]:
     """Block until the loadavg passes the bench's own citability gate
     (1m < 1.0 AND 5m < 2.0, bounded wait) and return the 1m loadavg
-    seen last. The replication write that precedes measurement drives
-    the box's load to 10+; without this cool-down the FIRST
-    core-count session runs under residual load and the ratio is
-    biased against whichever count runs first (three early probe runs
-    showed exactly that: 32-core q1 read 2-4.6 s when its session ran
-    first after replication, 0.3-0.4 s at either core count on a
-    settled box)."""
+    seen last and whether the gate timed out (logged to stderr: the
+    session then runs under load). The replication write that
+    precedes measurement drives the box's load to 10+; without this
+    cool-down the FIRST core-count session runs under residual load
+    and the ratio is biased against whichever count runs first (three
+    early probe runs showed exactly that: 32-core q1 read 2-4.6 s when
+    its session ran first after replication, 0.3-0.4 s at either core
+    count on a settled box)."""
     deadline = time.monotonic() + max_wait_s
     l1, l5, _ = os.getloadavg()
     while (l1 >= load_1m or l5 >= load_5m) and time.monotonic() < deadline:
         time.sleep(10)
         l1, l5, _ = os.getloadavg()
-    return round(l1, 2)
+    timed_out = l1 >= load_1m or l5 >= load_5m
+    if timed_out:
+        print(
+            f"# load gate not met after {max_wait_s} s (1m {l1:.2f}, "
+            f"5m {l5:.2f}); measuring under load",
+            file=sys.stderr,
+        )
+    return round(l1, 2), timed_out
 
 
 def run_at_cores(data_dir: str, cores: int, n_runs: int) -> dict:
@@ -243,8 +251,11 @@ def main() -> None:
         schedule = list(cores) + list(reversed(cores))
         out["schedule"] = schedule
         out["loadavg_at_session_start"] = []
+        out["gate_timed_out"] = False
         for c in schedule:
-            out["loadavg_at_session_start"].append(wait_quiet())
+            load, timed_out = wait_quiet()
+            out["loadavg_at_session_start"].append(load)
+            out["gate_timed_out"] |= timed_out
             got = run_at_cores(dest, c, args.runs)
             prev = out["per_cores"].setdefault(str(c), got)
             if prev is not got:

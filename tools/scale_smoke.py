@@ -256,8 +256,7 @@ def main() -> None:
         print(f"{'  k=' + str(k):26s} {t:7.2f} {pairs:9d} {per_pair_us:9.1f}")
     results["lsh_dup_heavy"] = lsh
 
-    # r9: signature-agreement verify vs exact shingle verify — the
-    # trade the bounded-state streaming twin buys. Same banding
+    # r9: signature-agreement verify vs exact shingle verify. Same banding
     # exchange; the sig verify joins k ints per doc where the exact
     # verify aggregates full shingle sets, so its advantage GROWS
     # with the duplicate-heavy pair count.
@@ -840,9 +839,8 @@ def main() -> None:
     results["cms_error_bound"] = cms_rows
 
     # r11 (same brief item): per-group HLL error DISTRIBUTION across
-    # group sizes — the fuzzed stream≡batch equality proves the
-    # streaming twin replays the batch sketch, not that the sketch is
-    # ACCURATE. Five groups spanning 4 decades of true cardinality in
+    # group sizes — the oracle gate proves the sketch is portable, not
+    # that it is ACCURATE. Five groups spanning 4 decades of true cardinality in
     # ONE pass (the per-group shape: one register set per group after
     # partial combine); b=10 gives sigma = 1.04/sqrt(1024) ~ 3.25%,
     # asserted at 4 sigma per group (deterministic md5 hashing: a

@@ -1,27 +1,26 @@
-"""Streaming micro-batch throughput baselines (r17 — VERDICT r16
-next #8).
+"""Streaming ingest throughput: input rows per second of the documents
+stream that ``scripts/stream_ingest.py --mode docs`` runs.
 
-The 13 streaming operators are correctness-pinned (stream≡batch
-differentials, slicing fuzz) but had no recorded performance
-number, so "examined, left alone" had no baseline a future round
-could regress against. This tool measures end-to-end availableNow
-throughput (rows/s of INPUT consumed) for the two hottest stateful
-operators on K-replicated sf0.1 inputs:
+Measures end-to-end availableNow throughput of
+``streaming.ingest.start_dedup_ingest_stream``: each micro-batch is one
+incremental MinHash dedup increment against the persisted
+signature-index state (``operators/signature_index.run``), writing its
+corpus batch and its matches/survivors. The input is sf0.1
+``documents.parquet`` replicated K times with disjoint doc ids and a
+per-copy text tag, so every copy is a near-dup of the original and
+later micro-batches match against the state earlier ones appended.
 
-- ``sessionize_stream`` — applyInPandasWithState sessionization
-  over events replicated by user_id (state keys grow with K);
-- ``text_dedup_stream`` — watermarked first-arrival dedup over
-  documents replicated with per-copy text tags (distinct texts).
-
-Noop streaming sink; the input is split into several files and
-consumed with maxFilesPerTrigger so the run exercises real
-multi-batch state carry, not one giant batch. Wall time includes
-query startup (stated; the same fixed cost every run pays), so the
-number is a conservative floor.
+The input is range-split into ``--files`` files and consumed with
+maxFilesPerTrigger, so the run carries state across real micro-batches,
+not one giant batch. Wall time includes query startup (the same fixed
+cost every run pays), so the number is a conservative floor. Rows and
+micro-batches are counted from the corpus batches the stream wrote, not
+from the query's progress log: ``numInputRows`` counts a scan once per
+action, and the handler runs several actions on each batch.
 
 Usage:
     python tools/stream_throughput.py [--k 8] [--files 8] \
-        [--files-per-trigger 2] [--out plans/r17/stream_throughput.json]
+        [--files-per-trigger 2] [--out plans/stream_throughput.json]
 """
 
 from __future__ import annotations
@@ -38,20 +37,6 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from pyspark.sql import functions as F  # noqa: E402
-
-
-def _events(spark, sf_dir, k, dest, n_files):
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from scale_smoke import replicate
-
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    replicate(ev, k, "user_id").orderBy("ts").coalesce(n_files).write.mode(
-        "overwrite"
-    ).parquet(dest)
-
 
 def _docs(spark, sf_dir, k, dest, n_files):
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -60,31 +45,48 @@ def _docs(spark, sf_dir, k, dest, n_files):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    d = replicate(docs, k, "doc_id", "text").withColumn(
-        "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id") % 86400)
+    # an explicit partition count: AQE would coalesce an orderBy's
+    # partitions, leaving fewer files than asked and fewer batches
+    replicate(docs, k, "doc_id", "text").repartitionByRange(
+        n_files, "doc_id"
+    ).write.mode("overwrite").parquet(dest)
+
+
+def _run_ingest(spark, src, root, files_per_trigger):
+    from etl_macropulse_br_spark.streaming.ingest import (
+        start_dedup_ingest_stream,
     )
-    d.orderBy("ts").coalesce(n_files).write.mode("overwrite").parquet(dest)
 
-
-def _run_stream(spark, build_query, src, ckpt, fpt):
-    # NOTE: maxFilesPerTrigger is a file-SOURCE option; the builders
-    # set it on readStream (a first draft set it on the sink, where
-    # it is silently ignored — the run consumed everything in ONE
-    # batch and measured no state carry across batches at all; the
-    # progress log's micro_batches field exists to catch that).
+    # maxFilesPerTrigger is a file-SOURCE option: set on the sink it is
+    # silently ignored and the run consumes everything in one batch
+    # (micro_batches in the output catches that)
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", str(files_per_trigger))
+        .parquet(src)
+    )
+    corpus = os.path.join(root, "corpus")
     t0 = time.perf_counter()
-    q = (
-        build_query(src)
-        .writeStream.format("noop")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    q = start_dedup_ingest_stream(
+        stream,
+        corpus,
+        os.path.join(root, "state"),
+        os.path.join(root, "out"),
+        os.path.join(root, "ckpt"),
     )
-    q.awaitTermination(1800)
+    if not q.awaitTermination(1800):
+        q.stop()
+        raise RuntimeError(
+            "stream_throughput: the ingest did not finish in 1800 s"
+        )
     wall = time.perf_counter() - t0
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"]])
-    rows = sum(p["numInputRows"] for p in q.recentProgress)
+    # one batch-<id> directory per non-empty micro-batch
+    n_batches = len(os.listdir(corpus))
+    rows = (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(corpus)
+        .count()
+    )
     return wall, rows, n_batches
 
 
@@ -100,10 +102,6 @@ def main() -> None:
     )
 
     from etl_macropulse_br_spark.session import get_spark
-    from etl_macropulse_br_spark.streaming.dedup import text_dedup_stream
-    from etl_macropulse_br_spark.streaming.sessions import (
-        sessionize_stream,
-    )
 
     spark = get_spark(app_name="stream_throughput", profile="cluster")
     root = tempfile.mkdtemp(prefix="stream_tp_")
@@ -118,73 +116,18 @@ def main() -> None:
         "operators": {},
     }
     try:
-        ev_dir = os.path.join(root, "events")
-        _events(spark, sf_dir, args.k, ev_dir, args.files)
-        from pyspark.sql import types as T
-
-        ev_schema = T.StructType(
-            [
-                T.StructField("user_id", T.LongType()),
-                T.StructField("ts", T.TimestampType()),
-                T.StructField("event_id", T.LongType()),
-            ]
-        )
-
-        def build_sessions(src):
-            stream = (
-                spark.readStream.schema(ev_schema)
-                .option("maxFilesPerTrigger", str(args.files_per_trigger))
-                .parquet(src)
-            )
-            return sessionize_stream(stream, gap_s=1800)
-
-        wall, rows, nb = _run_stream(
-            spark,
-            build_sessions,
-            ev_dir,
-            os.path.join(root, "ckpt_sessions"),
-            args.files_per_trigger,
-        )
-        out["operators"]["sessionize_stream"] = {
-            "input_rows": rows,
-            "wall_s": round(wall, 2),
-            "rows_per_s": round(rows / wall),
-            "micro_batches": nb,
-        }
-        print(f"# sessionize: {rows} rows / {wall:.2f}s", file=sys.stderr)
-
         docs_dir = os.path.join(root, "docs")
         _docs(spark, sf_dir, args.k, docs_dir, args.files)
-        docs_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-                T.StructField("ts", T.TimestampType()),
-            ]
+        wall, rows, nb = _run_ingest(
+            spark, docs_dir, root, args.files_per_trigger
         )
-
-        def build_dedup(src):
-            stream = (
-                spark.readStream.schema(docs_schema)
-                .option("maxFilesPerTrigger", str(args.files_per_trigger))
-                .parquet(src)
-            )
-            return text_dedup_stream(stream)
-
-        wall, rows, nb = _run_stream(
-            spark,
-            build_dedup,
-            docs_dir,
-            os.path.join(root, "ckpt_dedup"),
-            args.files_per_trigger,
-        )
-        out["operators"]["text_dedup_stream"] = {
+        out["operators"]["start_dedup_ingest_stream"] = {
             "input_rows": rows,
             "wall_s": round(wall, 2),
             "rows_per_s": round(rows / wall),
             "micro_batches": nb,
         }
-        print(f"# text_dedup: {rows} rows / {wall:.2f}s", file=sys.stderr)
+        print(f"# dedup ingest: {rows} rows / {wall:.2f}s", file=sys.stderr)
 
         out["loadavg_1m_end"] = round(os.getloadavg()[0], 2)
         line = json.dumps(out, indent=2)

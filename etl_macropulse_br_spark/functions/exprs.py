@@ -144,13 +144,6 @@ def last_by(value: Column | str, *order: Column | str) -> Column:
     return F.max_by(_as_col(value), key)
 
 
-def first_by(value: Column | str, *order: Column | str) -> Column:
-    """Deterministic order-dependent "first" aggregate (min_by)."""
-    cols = [_as_col(o) for o in order]
-    key = cols[0] if len(cols) == 1 else F.struct(*cols)
-    return F.min_by(_as_col(value), key)
-
-
 def ptbr_format_number(col: Column | str, decimals: int = 2) -> Column:
     """Double → pt-BR formatted string ("1.234,56").
 

@@ -255,20 +255,6 @@ def _mean_adc_residual(codes_with_dist: DataFrame) -> float | None:
     )
     return float(row["m"]) if row and row["m"] is not None else None
 
-# training params frozen into the index; serving must reuse them
-_TRAIN_PARAMS = (
-    "k",
-    "rounds",
-    "m",
-    "ks",
-    "pq_rounds",
-    "sub",
-    "residual",
-    "with_pq",
-    "id_col",
-    "emb_col",
-)
-
 
 @dataclass
 class AnnIndex:

@@ -57,13 +57,9 @@ def build_gold_metrics(
     }
 
 
-def mom_change(
-    monthly: DataFrame,
-    keys: list[str],
-    value_col: str,
-    month_col: str = "month",
-) -> DataFrame:
-    """Month-over-month delta per key group (``summary.py:70-71``).
+def mom_change(monthly: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """Month-over-month delta per key group over ``month``
+    (``summary.py:70-71``).
 
     pandas ``groupby(...).diff()`` → ``lag`` window. One shuffle on
     the partition keys; at scale the monthly table is already tiny
@@ -71,7 +67,7 @@ def mom_change(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*keys).orderBy(F.col(month_col).asc())
+    w = Window.partitionBy(*keys).orderBy(F.col("month").asc())
     return monthly.withColumn(
         "mom_change", F.col(value_col) - F.lag(value_col, 1).over(w)
     )

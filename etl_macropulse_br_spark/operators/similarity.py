@@ -32,32 +32,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine_sim_const_sql(vec_sql: str, vals: list[float]) -> str:
-    """SQL text of ``cosine_sim(vec_col, literal_vector)`` with the
-    EXACT same expression structure as the Column-API form (same
-    casts, same sequential fold, same op order) — so plans built
-    from this text produce bit-identical doubles.
-
-    Why text: every Column operation is a Py4J round-trip (~1 ms);
-    one n_cells-centroid scores array built via the Column API costs
-    ~0.8 s of driver RPC per plan build, vs one `F.expr` parse for
-    the whole string.
-    """
-    arr = "array(" + ",".join(f"{x!r}D" for x in vals) + ")"
-    a = f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
-    b = f"transform({arr}, x -> CAST(x AS DOUBLE))"
-
-    def dot_sql(p: str, q: str) -> str:
-        return (
-            f"aggregate(zip_with({p}, {q}, (x, y) -> x * y), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
-
-    return (
-        f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
-    )
-
-
 def cosine_sim(a: Column, b: Column) -> Column:
     a, b = _as_double_array(a), _as_double_array(b)
     return dot(a, b) / (norm(a) * norm(b))

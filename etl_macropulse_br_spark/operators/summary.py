@@ -42,12 +42,12 @@ def last_per_month(bcb_silver: DataFrame, series_name: str) -> DataFrame:
     )
 
 
-def mom_delta_last_two(month_series: DataFrame, value_col: str = "value") -> DataFrame:
-    """Delta between the final two monthly observations
+def mom_delta_last_two(month_series: DataFrame) -> DataFrame:
+    """Delta of ``value`` between the final two monthly observations
     (``summary.py:40-44``): lag over month, keep latest row."""
     w = Window.orderBy(F.col("month").asc())
     with_lag = month_series.withColumn(
-        "mom_change", F.col(value_col) - F.lag(value_col, 1).over(w)
+        "mom_change", F.col("value") - F.lag("value", 1).over(w)
     )
     return with_lag.orderBy(F.col("month").desc()).limit(1)
 
@@ -74,15 +74,12 @@ def _as_date(d):
     return d.date() if hasattr(d, "hour") else d
 
 
-def build_summary_text(
-    bcb_silver: DataFrame,
-    anp_silver: DataFrame,
-    target_series: str = DEFAULT_TARGET_SERIES,
-) -> str:
+def build_summary_text(bcb_silver: DataFrame, anp_silver: DataFrame) -> str:
     """Reproduce the reference's markdown summary BYTE-FOR-BYTE
     (``summary.py:6-94``, golden artifact ``data/gold/summary.md:1-6``)
-    — every format string and fallback line matches the reference,
-    including the final strip + "Resumo indisponível" guard.
+    for series ``DEFAULT_TARGET_SERIES`` — every format string and
+    fallback line matches the reference. Each block always appends a
+    line, so the text is never empty.
 
     Distributed plan → collect of <10 rows → driver-side f-strings.
     """
@@ -92,7 +89,7 @@ def build_summary_text(
 
     # ---- BCB/SGS: latest value + MoM (summary.py:10-47) ----
     latest = (
-        latest_observation(bcb_silver, target_series).collect()
+        latest_observation(bcb_silver, DEFAULT_TARGET_SERIES).collect()
         if bcb_silver is not None
         else []
     )
@@ -107,7 +104,7 @@ def build_summary_text(
             f"BCB/SGS (série {int(row['series_id'])}) - {row['series_name']}: "
             f"último valor em {_as_date(row['date'])} = {val:.2f}."
         )
-        monthly = last_per_month(bcb_silver, target_series)
+        monthly = last_per_month(bcb_silver, DEFAULT_TARGET_SERIES)
         delta_rows = mom_delta_last_two(monthly).collect()
         if delta_rows and delta_rows[0]["mom_change"] is not None:
             lines.append(
@@ -116,7 +113,7 @@ def build_summary_text(
             )
     elif bcb_silver is not None and bcb_silver.take(1):
         lines.append(
-            f"BCB/SGS - série '{target_series}' não encontrada no período."
+            f"BCB/SGS - série '{DEFAULT_TARGET_SERIES}' não encontrada no período."
         )
     else:
         lines.append("BCB/SGS - sem dados para o período.")
@@ -148,9 +145,4 @@ def build_summary_text(
     else:
         lines.append("ANP - sem dados para o período.")
 
-    text = "\n".join(lines).strip()
-    return (
-        text
-        if text
-        else "Resumo indisponível: não houve dados suficientes após o ETL."
-    )
+    return "\n".join(lines).strip()

@@ -2920,11 +2920,6 @@ SELECT doc_id, {md5_long_sql(_NORM_SQL)} AS fingerprint
 FROM documents
 """
 
-_SHINGLES_SQL = f"""list_distinct(list_transform(
-  generate_series(1, greatest(len(ntoks) - 2, 1)),
-  i -> array_to_string(ntoks[i:i+2], ' ')))"""
-
-
 def docs_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_macropulse_br_spark.operators.dedup import (
         minhash_signature_table,

@@ -15,10 +15,11 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+# candidate separators, in the reference's order (``extract.py:84-88``)
+CSV_SEPS = (";", ",")
 
-def read_csv_sep_fallback(
-    spark: SparkSession, path: str, seps: tuple[str, ...] = (";", ",")
-) -> DataFrame:
+
+def read_csv_sep_fallback(spark: SparkSession, path: str) -> DataFrame:
     """CSV read with separator sniffing (``extract.py:84-88``).
 
     The reference tries ``;`` then falls back to ``,``. We sniff the
@@ -57,9 +58,9 @@ def read_csv_sep_fallback(
                 doublequote=False,
             )
         )
-        for s in seps
+        for s in CSV_SEPS
     }
-    best = max(seps, key=lambda s: len(names[s]))
+    best = max(CSV_SEPS, key=lambda s: len(names[s]))
     case_sensitive = (
         spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
     )

@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -62,8 +63,6 @@ def ingest_micro_batch(
         run,
     )
 
-    if batch_df.isEmpty():
-        return "empty"
     bpath = os.path.abspath(
         os.path.join(corpus_dir, f"batch-{batch_id:08d}")
     )
@@ -76,12 +75,18 @@ def ingest_micro_batch(
                 return "skipped"
     # deterministic path + overwrite = the corpus write itself is
     # redelivery-idempotent; doc text is frozen here because later
-    # increments re-read colliding docs' text from this path
+    # increments re-read colliding docs' text from this path. The
+    # write is the only read of the batch's source: emptiness is
+    # tested on the written copy.
+    spark = batch_df.sparkSession
     batch_df.select("doc_id", "text").write.mode("overwrite").parquet(
         bpath
     )
+    if spark.read.parquet(bpath).isEmpty():
+        shutil.rmtree(bpath)
+        return "empty"
     out_dir = os.path.join(out_root, f"batch-{batch_id:08d}")
-    run(batch_df.sparkSession, bpath, state_dir, out_dir, threshold)
+    run(spark, bpath, state_dir, out_dir, threshold)
     return "ingested"
 
 

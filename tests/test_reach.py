@@ -27,8 +27,6 @@ ENTRY_POINTS = [
 UNREACHED_BY_DESIGN = {
     # ROADMAP "Blocked": the fake-backed object-store test matrix stays.
     "operators.objectstore_clients",
-    # Kept with its tests until the next cut (ROADMAP direction 4(a)).
-    "operators.audio",
 }
 
 

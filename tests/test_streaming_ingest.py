@@ -39,6 +39,8 @@ def test_dedup_ingest_stream_equals_full_pass(spark, tmp_path):
         threshold=0.5,
     )
     q.awaitTermination(300)
+    # each micro-batch reads its source once
+    assert sum(p["numInputRows"] for p in q.recentProgress) == docs.count()
 
     # union of streamed increments == one full-corpus pass
     inc = {}

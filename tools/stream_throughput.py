@@ -15,8 +15,7 @@ maxFilesPerTrigger, so the run carries state across real micro-batches,
 not one giant batch. Wall time includes query startup (the same fixed
 cost every run pays), so the number is a conservative floor. Rows and
 micro-batches are counted from the corpus batches the stream wrote, not
-from the query's progress log: ``numInputRows`` counts a scan once per
-action, and the handler runs several actions on each batch.
+from the query's progress log, which keeps only the last 100 updates.
 
 Usage:
     python tools/stream_throughput.py [--k 8] [--files 8] \

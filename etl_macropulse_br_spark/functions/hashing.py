@@ -1,14 +1,13 @@
 """Portable hashing expressions for dedup / fingerprinting.
 
-Two families:
-
-- **Portable (md5-based)** — bit-identical across Spark and DuckDB,
-  so MinHash/SimHash/fingerprint operators can be correctness-gated
-  against the SQL oracle. ``md5_long`` maps any string to a signed
-  60-bit integer: Spark ``conv(substring(md5(x),1,15),16,10)`` ==
-  DuckDB ``CAST('0x'||substring(md5(x),1,15) AS BIGINT)``.
-- **Fast (xxhash64)** — Spark's built-in 64-bit hash (JVM, codegen)
-  for the scale path where oracle portability is not needed.
+Every hash here is md5-based and bit-identical across Spark and
+DuckDB, so MinHash/SimHash/fingerprint operators can be
+correctness-gated against the SQL oracle. ``md5_long`` maps any
+string to a signed 60-bit integer: Spark
+``conv(substring(md5(x),1,15),16,10)`` == DuckDB
+``CAST('0x'||substring(md5(x),1,15) AS BIGINT)``. Where oracle
+portability is not needed, Spark's built-in ``F.xxhash64`` is the
+fast JVM-side alternative.
 
 Seeded variants prefix the input with ``<seed>:`` so k independent
 hash functions come from one primitive (standard MinHash
@@ -34,12 +33,6 @@ def md5_long_sql(expr: str, seed: int | None = None) -> str:
     """DuckDB-side twin of :func:`md5_long` (same bits)."""
     inner = f"concat('{seed}:', {expr})" if seed is not None else expr
     return f"CAST(concat('0x', substring(md5({inner}), 1, 15)) AS BIGINT)"
-
-
-def xxhash64_seeded(col: Column | str, seed: int) -> Column:
-    """Fast JVM-side 64-bit hash with a seed column prefix."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(F.lit(seed), c)
 
 
 def _lcg_constants(k: int, seed: int = 0x5EED) -> list[tuple[int, int]]:

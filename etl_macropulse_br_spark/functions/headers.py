@@ -17,8 +17,6 @@ from __future__ import annotations
 import re
 import unicodedata
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Logical role → resolution CHAIN, the reference's exact step order
 # (transform.py:50-63): a plain string is a pick_exact step (full
@@ -86,9 +84,10 @@ def resolve_columns(
     one physical column MAY satisfy two roles — a degenerate header
     like ``"Data da Coleta de Valores de Venda"`` (when no other
     candidate exists) maps BOTH ``date_ref`` and ``price`` to the
-    same column, and :func:`select_roles` projects it twice under
-    both names, exactly as the reference builds its output frame
-    from the independently-picked columns (``transform.py:75-81``).
+    same column, and ``operators/silver.to_silver_anp`` projects it
+    twice under both names, exactly as the reference builds its
+    output frame from the independently-picked columns
+    (``transform.py:75-81``).
     The previous claimed-column skip was a defensive divergence: it
     could also silently shift a LATER role to its second-best
     candidate whenever its first choice was already claimed —
@@ -137,8 +136,3 @@ def resolve_columns(
             f"(normalized: {sorted(cols)})"
         )
     return mapping
-
-
-def select_roles(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Project the resolved columns to their standard names."""
-    return df.select(*[F.col(orig).alias(role) for role, orig in mapping.items()])

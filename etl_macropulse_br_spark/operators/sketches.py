@@ -28,154 +28,10 @@ carries ≤ k × partitions hashes).
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_macropulse_br_spark.functions.hashing import md5_long, md5_long_sql
-
-
-def _write_sidecar_atomic(sidecar_path: str, payload: dict) -> None:
-    """Write a param sidecar via temp + ``os.replace`` so a crash
-    mid-dump cannot leave a TRUNCATED sidecar (r11): the only
-    reachable torn-save state is a sidecar-LESS directory, which
-    every loader in this module refuses loudly."""
-    tmp = f"{sidecar_path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, sidecar_path)
-
-
-# Reader-safe versioned artifact layout (r12 — closes VERDICT r11
-# What's missing #1 / Next round #4): the r11 stores rewrote the
-# artifact directory IN PLACE (Spark's mode("overwrite") deletes it
-# first), so a reader polling a sketch another job was refreshing
-# saw a half-deleted directory — loud, never wrong, but an outage.
-# The ANN index already solved this with versioned segments plus a
-# single os.replace manifest commit; the sketch stores now use the
-# same shape: each save writes a COMPLETE new
-# ``<path>/versions/v-*/`` directory (parquet first, its param
-# sidecar second), then commits by atomically replacing the
-# ``_current.json`` pointer. A reader therefore always resolves a
-# complete old or complete new artifact. The new version's
-# PREDECESSOR is retained through the commit (pruned only on the
-# save after next), so a reader that resolved the old pointer just
-# before the swap can finish its scan — the guarantee covers one
-# in-flight save, the same promise compact_ann_index documents.
-# Every crash window stays at least as loud as r11: a crash before
-# the pointer replace leaves the old pointer (readers keep serving
-# the old artifact; the orphan version is pruned by the next save),
-# and the pointer replace itself is atomic.
-_POINTER_NAME = "_current.json"
-
-
-def _read_pointer(path: str) -> str | None:
-    p = os.path.join(path, _POINTER_NAME)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)["version"]
-
-
-def _save_versioned(
-    path: str, meta_name: str, meta: dict, write_parquet, lease=None
-) -> None:
-    """One reader-safe artifact commit: complete version dir →
-    atomic pointer swap → prune all versions except {new, previous}.
-    Callers hold the artifact lease (single WRITER; readers never
-    lock) and pass it so a mid-save displacement (r13 — the lease
-    stolen from a judged-dead holder) ABORTS before the pointer
-    commit: the old artifact keeps serving and the orphan version
-    dir is pruned by the next save."""
-    import shutil
-
-    os.makedirs(path, exist_ok=True)
-    prev = _read_pointer(path)
-    ver = f"v-{uuid.uuid4().hex[:12]}"
-    vdir = os.path.join(path, "versions", ver)
-    write_parquet(vdir)
-    _write_sidecar_atomic(os.path.join(vdir, meta_name), meta)
-    # THE commit point: readers resolve the new version only from
-    # here on, and only ever see version dirs whose sidecar already
-    # landed (sidecar-before-pointer ordering)
-    if lease is not None:
-        lease.check()
-    _write_sidecar_atomic(
-        os.path.join(path, _POINTER_NAME), {"version": ver}
-    )
-    vroot = os.path.join(path, "versions")
-    for name in os.listdir(vroot):
-        if name not in (ver, prev):
-            shutil.rmtree(os.path.join(vroot, name), ignore_errors=True)
-    # r13 (VERDICT r12 What's missing #3): a store upgraded from the
-    # legacy flat layout (r9-r11 saves: parquet + sidecar directly
-    # under ``path``) used to keep the stale flat files next to
-    # ``versions/`` forever — shadowed by the pointer on load, but
-    # dead data on disk, and an out-of-band legacy-style write would
-    # be silently ignored. The commit prunes everything that is not
-    # the version tree or the pointer (we hold the artifact lease;
-    # legacy readers that never upgraded keep their own pure-legacy
-    # stores untouched), so a store converges to exactly ONE layout.
-    #
-    # r14 (ADVICE r13 #1): the prune is DEFERRED one commit. At the
-    # upgrade save (``prev is None`` — no pointer existed) the flat
-    # layout IS the predecessor artifact: a lock-less reader that
-    # resolved it via _load_versioned's legacy fallback just before
-    # the pointer swap may still be scanning it, and the module's
-    # guarantee is that the predecessor survives exactly one
-    # in-flight save. So the flat files are pruned only from the
-    # SECOND versioned save onward, the same retention every
-    # versioned predecessor gets.
-    if prev is not None:
-        for name in os.listdir(path):
-            if name in ("versions", _POINTER_NAME):
-                continue
-            full = os.path.join(path, name)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                try:
-                    os.unlink(full)
-                except OSError:
-                    pass
-
-
-def _load_versioned(path: str, meta_name: str, family: str):
-    """Resolve the current version dir + its meta, accepting both
-    layouts: pointer-versioned (r12) and the legacy flat directory
-    (r9-r11 saves — parquet + sidecar directly under ``path``).
-    Raises FileNotFoundError when neither a pointer nor a legacy
-    sidecar exists — a torn legacy save or a plain
-    ``df.write.parquet`` that never carried its params."""
-    ver = _read_pointer(path)
-    if ver is not None:
-        vdir = os.path.join(path, "versions", ver)
-        mp = os.path.join(vdir, meta_name)
-        # unreachable by the sidecar-before-pointer ordering, but a
-        # hand-mangled store must stay loud, never a guess
-        if not os.path.exists(mp):
-            raise FileNotFoundError(
-                f"{family}: pointer names version {ver!r} under "
-                f"{path!r} but its {meta_name} sidecar is missing — "
-                "the store was modified outside save_*; rebuild it"
-            )
-        with open(mp) as f:
-            return vdir, json.load(f)
-    mp = os.path.join(path, meta_name)
-    if not os.path.exists(mp):
-        raise FileNotFoundError(
-            f"{family}: no {_POINTER_NAME} pointer and no legacy "
-            f"{meta_name} under {path!r} — the sketch was persisted "
-            f"without its build params; re-save with the save_* API "
-            "so serving cannot mis-parameterize"
-        )
-    with open(mp) as f:
-        return path, json.load(f)
 
 
 # md5_long yields 60-bit non-negative integers (15 hex digits), so
@@ -297,14 +153,11 @@ def kmv_set_ops(
 def kmv_sketch(
     df: DataFrame, col: str | Column, k: int = 64
 ) -> DataFrame:
-    """The persistable KMV sketch itself: the k smallest distinct
-    md5 hashes of ``col`` as a one-column ``(h)`` frame (k bigints —
-    write it as parquet and every later run answers distinct /
-    union / intersection / Jaccard against it WITHOUT re-scanning
-    the corpus, via :func:`kmv_set_ops_from_sketches` — the same
-    train-once/serve-many shape as the ANN index and the MinHash
-    signature index). Nulls dropped before hashing (see
-    :func:`kmv_distinct`)."""
+    """The KMV sketch itself: the k smallest distinct md5 hashes of
+    ``col`` as a one-column ``(h)`` frame (k bigints), which
+    :func:`kmv_set_ops_from_sketches` combines into distinct /
+    union / intersection / Jaccard estimates. Nulls dropped before
+    hashing (see :func:`kmv_distinct`)."""
     c = F.col(col) if isinstance(col, str) else col
     return (
         df.select(md5_long(c).alias("h"))
@@ -315,90 +168,15 @@ def kmv_sketch(
     )
 
 
-def save_kmv_sketch(
-    sketch: DataFrame, path: str, k: int
-) -> None:
-    """Persist a :func:`kmv_sketch` frame as parquet WITH its build
-    parameter: ``k`` goes into a ``_kmv_meta.json`` sidecar next to
-    the parquet files (r9, ADVICE r8 #5). A stored sketch served
-    with a DIFFERENT k silently degenerates — smaller build-k makes
-    ``n_kept < serve-k`` fire the exact-count short-circuit, turning
-    every estimate into |sketch| — so the sidecar makes the
-    parameter travel with the data and :func:`load_kmv_sketch`
-    return it authoritatively.
-
-    Concurrency + crash + READER safety (r11 lease; r12 versioned
-    commit — closes VERDICT r11 What's missing #1): the save runs
-    under the artifact's single-writer lease (sibling
-    ``<path>.lock/``), so two concurrent savers cannot interleave —
-    the loser is refused loudly. The artifact itself commits via
-    the versioned-pointer shape (see ``_save_versioned``): a
-    COMPLETE new ``versions/v-*/`` directory (parquet, then its
-    sidecar) followed by one atomic pointer replace — so a
-    concurrent reader always loads a complete old or complete new
-    sketch (the r11 in-place overwrite made it error mid-save), a
-    crash anywhere before the pointer swap leaves the OLD sketch
-    serving (the orphan version is pruned by the next save), and a
-    sidecar can never be paired with another save's rows."""
-    from etl_macropulse_br_spark.operators.statelock import (
-        artifact_lock,
-    )
-
-    with artifact_lock(path, owner="save_kmv_sketch") as lease:
-        _save_versioned(
-            path,
-            "_kmv_meta.json",
-            {"k": int(k)},
-            lambda vdir: sketch.write.mode("overwrite").parquet(vdir),
-            lease=lease,
-        )
-
-
-def load_kmv_sketch(spark, path: str) -> tuple[DataFrame, int]:
-    """Load a sketch persisted by :func:`save_kmv_sketch`, returning
-    ``(frame, k)`` with k read from the sidecar — pass that k (never
-    a guessed one) to :func:`kmv_set_ops_from_sketches`. Resolves
-    the versioned-pointer layout (r12 — always a COMPLETE artifact,
-    even while a save is in flight) and falls back to the legacy
-    flat layout for pre-r12 saves. Raises FileNotFoundError when
-    neither exists (plain ``df.write.parquet`` of a sketch —
-    re-save with :func:`save_kmv_sketch`)."""
-    vdir, meta = _load_versioned(path, "_kmv_meta.json", "load_kmv_sketch")
-    return spark.read.parquet(vdir), int(meta["k"])
-
-
-def kmv_set_ops_from_stored(
-    spark, path_a: str, path_b: str
-) -> DataFrame:
-    """Set algebra over two sketches persisted by
-    :func:`save_kmv_sketch` — the loud-by-construction serve path:
-    k comes from each sidecar, and sketches from different k (hence
-    different effective sampling thresholds) are REJECTED instead of
-    silently under-estimating."""
-    la, ka = load_kmv_sketch(spark, path_a)
-    lb, kb = load_kmv_sketch(spark, path_b)
-    if ka != kb:
-        raise ValueError(
-            f"kmv_set_ops_from_stored: sketches built with different "
-            f"k ({ka} vs {kb}) are not comparable — rebuild one"
-        )
-    return kmv_set_ops_from_sketches(la, lb, ka)
-
-
 def kmv_set_ops_from_sketches(
     la: DataFrame, lb: DataFrame, k: int = 64
 ) -> DataFrame:
-    """:func:`kmv_set_ops` served from two STORED sketches
-    (``(h)`` frames from :func:`kmv_sketch`, e.g. read back from
-    parquet) — set algebra over corpora that are never re-scanned.
-    Both sketches must have been built with the same ``k`` and the
-    same hash (a sketch is only comparable to sketches from its own
-    hash family). Prefer :func:`kmv_set_ops_from_stored` /
-    :func:`load_kmv_sketch` for persisted sketches — the sidecar
-    carries the authoritative k. A sketch LARGER than ``k`` is
-    caught in-plan (the guard below); a sketch built with a smaller
-    k is indistinguishable from a complete small corpus from the
-    frame alone, which is exactly why the sidecar exists.
+    """:func:`kmv_set_ops` over two ``(h)`` sketch frames from
+    :func:`kmv_sketch`. Both sketches must have been built with the
+    same ``k`` and the same hash (a sketch is only comparable to
+    sketches from its own hash family). A sketch LARGER than ``k``
+    is caught in-plan (the guard below); a sketch built with a
+    smaller k is indistinguishable from a complete small corpus.
 
     The overflow guard rides the existing one-row aggregates as a
     ``raise_error`` branch on the published counts — no extra job,
@@ -443,8 +221,7 @@ def kmv_set_ops_from_sketches(
                 F.lit(
                     f"kmv_set_ops_from_sketches: {side} sketch "
                     f"exceeds k={k} rows — it was built with a "
-                    "larger k; pass its build k (see "
-                    "save_kmv_sketch/load_kmv_sketch)"
+                    "larger k; pass its build k"
                 )
             )
         )
@@ -975,12 +752,11 @@ GROUP BY p.item
 # answer distinct-count, CMS answers frequency, this answers
 # percentiles. price_percentiles (operators/features.py) computes
 # EXACT quantiles via two-pass histogram-refine; this is the ONE-PASS
-# bounded-state alternative whose buckets are integers a mart can
-# store per partition and SUM to merge (sketch(A ∪ B) = bucket-wise
-# addition — pinned by test), then answer any quantile of any slice
-# union without re-scanning. Bucketing follows the HdrHistogram /
-# DDSketch log-bucket idea (Gil Tene's HdrHistogram; Masson et al.
-# 2019 VLDB "DDSketch") but is built ONLY from exact integer ops —
+# bounded-state alternative whose buckets are integers that merge
+# by SUM (sketch(A ∪ B) = bucket-wise addition). Bucketing follows
+# the HdrHistogram / DDSketch log-bucket idea (Gil Tene's
+# HdrHistogram; Masson et al. 2019 VLDB "DDSketch") but is built
+# ONLY from exact integer ops —
 # e = floor(log2 v) via length(bin(v)) - 1, sub-bucket via bit
 # shifts — so Spark and the DuckDB oracle compute IDENTICAL buckets
 # and the sketch is hash-gateable like the rest of the family
@@ -1161,127 +937,6 @@ def hdr_quantiles_by(
     return _hdr_select(hdr_histogram(df, col, s, by), by, qs)
 
 
-def hdr_merge(
-    hists: list[DataFrame], by: list[str] | None = None
-) -> DataFrame:
-    """Merge stored HDR sketches (``(*by, bucket, lo, hi, cnt)``
-    frames from :func:`hdr_histogram`, e.g. one per day/partition
-    read back from parquet) into one: bucket-wise count ADDITION —
-    the sketch's defining property, here as the serve-many API (a
-    mart stores per-slice bucket tables and answers quantiles over
-    ANY slice union without re-scanning a single fact row; same
-    across-runs shape as the ANN index / signature index / KMV
-    sketch). lo/hi are functions of bucket, so min() just picks the
-    shared value. All inputs must share the same ``s``."""
-    import functools
-
-    by = by or []
-    merged = functools.reduce(DataFrame.unionByName, hists)
-    return merged.groupBy(*by, "bucket").agg(
-        F.min("lo").alias("lo"),
-        F.min("hi").alias("hi"),
-        F.sum("cnt").alias("cnt"),
-    )
-
-
-def save_hdr_histogram(
-    hist: DataFrame,
-    path: str,
-    s: int,
-    scale: float | None = None,
-    by: list[str] | None = None,
-) -> None:
-    """Persist an HDR bucket table WITH its build parameters (r9 —
-    the same sidecar discipline save_kmv_sketch introduced, applied
-    proactively to this family): a histogram merged with one built
-    under a different ``s`` (or a signed one under a different
-    ``scale``) has incompatible bucket indexes and would produce
-    plausible-but-wrong quantiles with no error. ``scale`` is the
-    signed family's fixed-point scale; None marks an unsigned
-    sketch. The ``_hdr_meta.json`` sidecar starts with '_' so
-    Spark's directory reader ignores it.
-
-    Concurrency + crash + READER safety (r11 lease; r12 versioned
-    commit — closes VERDICT r11 What's missing #1): saved under the
-    artifact's single-writer lease (sibling ``<path>.lock/``), so
-    concurrent savers cannot interleave — the second save is refused
-    loudly. The artifact commits via the versioned-pointer shape
-    (``_save_versioned``): complete ``versions/v-*/`` directory
-    first (buckets, then sidecar), one atomic pointer replace last —
-    a concurrent reader always loads a complete old or new
-    histogram, a crash before the pointer swap leaves the old one
-    serving, and a sidecar can never be paired with another save's
-    buckets (the tear the params cannot detect when they match)."""
-    from etl_macropulse_br_spark.operators.statelock import (
-        artifact_lock,
-    )
-
-    with artifact_lock(path, owner="save_hdr_histogram") as lease:
-        _save_versioned(
-            path,
-            "_hdr_meta.json",
-            {
-                "s": int(s),
-                "scale": None if scale is None else float(scale),
-                "by": list(by or []),
-            },
-            lambda vdir: hist.write.mode("overwrite").parquet(vdir),
-            lease=lease,
-        )
-
-
-def load_hdr_histogram(spark, path: str) -> tuple[DataFrame, dict]:
-    """Load a histogram persisted by :func:`save_hdr_histogram`,
-    returning ``(frame, meta)`` with the authoritative build params.
-    Resolves the versioned-pointer layout (r12 — always a COMPLETE
-    artifact, even while a save is in flight) with a legacy
-    flat-layout fallback; FileNotFoundError when neither exists
-    (plain ``df.write.parquet`` — re-save with
-    :func:`save_hdr_histogram` so merging cannot mis-parameterize)."""
-    vdir, meta = _load_versioned(
-        path, "_hdr_meta.json", "load_hdr_histogram"
-    )
-    return spark.read.parquet(vdir), meta
-
-
-def hdr_merge_stored(
-    spark, paths: list[str]
-) -> tuple[DataFrame, dict]:
-    """Merge histograms persisted by :func:`save_hdr_histogram` —
-    the loud-by-construction serve path: every sidecar must agree on
-    (s, scale, by); a mismatch is REJECTED instead of silently
-    adding incompatible bucket indexes. Returns the merged frame
-    plus the shared meta (pass ``meta['scale']`` to
-    :func:`hdr_signed_quantiles_from_histogram` for a signed
-    sketch, or use :func:`hdr_quantiles_from_histogram` for an
-    unsigned one)."""
-    frames, metas = [], []
-    for p in paths:
-        df, m = load_hdr_histogram(spark, p)
-        frames.append(df)
-        metas.append(m)
-    if any(m != metas[0] for m in metas[1:]):
-        raise ValueError(
-            "hdr_merge_stored: sketches built with different "
-            f"params are not mergeable: {metas}"
-        )
-    return hdr_merge(frames, metas[0]["by"]), metas[0]
-
-
-def hdr_quantiles_from_histogram(
-    hist: DataFrame,
-    qs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Quantiles served from a STORED (or merged) HDR sketch — the
-    :func:`_hdr_select` rank selection without touching the fact
-    table at all: the input is the bucket table itself, so the whole
-    query runs over <= (64-s+1)*2^s rows per group. Output matches
-    :func:`hdr_quantiles` / :func:`hdr_quantiles_by` row-for-row
-    when the sketch covers the same data (pinned)."""
-    return _hdr_select(hist, by or [], qs)
-
-
 def hdr_quantiles_by_sql(
     table: str,
     col_expr: str,
@@ -1378,10 +1033,10 @@ def hdr_quantiles_sql(
 #      -1 - B(-a). Monotone in the value, so the rank-selection
 #      cumsum walks buckets in value order unchanged. Brackets
 #      mirror: [-hi(-a), -lo(-a)].
-#   3. Same merge rule (bucket-wise count ADDITION — hdr_merge works
-#      as-is), same state bound (<= 2 * ((64-s)*2^s + 2^s) + 1
-#      cells), same error: relative < 2^-(s+1) on |a| (|v| down to
-#      the 1/scale quantum; |a| < 2^s exact at that quantum).
+#   3. Same merge rule (bucket-wise count ADDITION), same state
+#      bound (<= 2 * ((64-s)*2^s + 2^s) + 1 cells), same error:
+#      relative < 2^-(s+1) on |a| (|v| down to the 1/scale quantum;
+#      |a| < 2^s exact at that quantum).
 #
 # Not a KLL/t-digest port on purpose: those sketches' compaction is
 # randomized / insertion-order-dependent, so no SQL oracle could
@@ -1462,7 +1117,7 @@ def hdr_signed_histogram(
     aggregate, exactly :func:`hdr_histogram`'s scale shape.
     ``scale=None`` auto-derives via :func:`derive_signed_scale`
     (r10) — note the sketch is then only mergeable with sketches
-    built at the SAME derived scale (the sidecar validates)."""
+    built at the SAME derived scale."""
     by = by or []
     if scale is None:
         scale = derive_signed_scale(df, col)
@@ -1521,9 +1176,7 @@ def derive_signed_scale(
     Determinism: max is order-free (no summation), so the derived
     scale is reproducible run-to-run on the same data. Cross-engine
     oracle twins should still pass an EXPLICIT scale (one driver
-    peek, then both engines share the literal — the sidecar
-    discipline ``save_hdr_histogram`` already enforces for stored
-    sketches). NaN/Inf fail here with the same loud contract as the
+    peek, then both engines share the literal). NaN/Inf fail here with the same loud contract as the
     gateway; an empty/all-null/all-zero input returns ``default``
     (any scale brackets it exactly)."""
     import math
@@ -1596,25 +1249,6 @@ def hdr_signed_quantiles_by(
     if scale is None:
         scale = derive_signed_scale(df, col)
     sel = _hdr_select(hdr_signed_histogram(df, col, scale, s, by), by, qs)
-    return sel.select(
-        *by, "q", "rank", "n", "lo", "hi", _hdr_signed_est(scale)
-    )
-
-
-def hdr_signed_quantiles_from_histogram(
-    hist: DataFrame,
-    qs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    scale: float = 1e6,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Serve signed quantiles from a STORED/merged sketch
-    (:func:`hdr_signed_histogram` frames merged with
-    :func:`hdr_merge` — bucket-wise addition is sign-agnostic, so
-    the unsigned merge works unchanged): no fact row is re-scanned.
-    The caller owns scale/s consistency across stored sketches, the
-    same contract the unsigned family and the KMV sidecar document."""
-    by = by or []
-    sel = _hdr_select(hist, by, qs)
     return sel.select(
         *by, "q", "rank", "n", "lo", "hi", _hdr_signed_est(scale)
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_macropulse_br_spark.functions.exprs import month_trunc, stable_mean
+from etl_macropulse_br_spark.functions.exprs import month_trunc
 
 DEFAULT_TARGET_SERIES = "selic_sgs_11"  # summary.py:12
 
@@ -83,7 +83,10 @@ def build_summary_text(bcb_silver: DataFrame, anp_silver: DataFrame) -> str:
 
     Distributed plan → collect of <10 rows → driver-side f-strings.
     """
-    from etl_macropulse_br_spark.operators.gold import mom_change
+    from etl_macropulse_br_spark.operators.gold import (
+        build_gold_anp_monthly,
+        mom_change,
+    )
 
     lines: list[str] = []
 
@@ -121,12 +124,9 @@ def build_summary_text(bcb_silver: DataFrame, anp_silver: DataFrame) -> str:
     # ---- ANP: top MoM increases by UF/product (summary.py:51-88) ----
     if anp_silver is not None and anp_silver.take(1):
         valid = anp_silver.filter(F.col("date_ref").isNotNull())
-        anp_monthly = (
-            valid.withColumn("month", month_trunc("date_ref"))
-            .groupBy("uf_sigla", "product", "month")
-            .agg(stable_mean("price").alias("avg_price"))
+        anp_mom = mom_change(
+            build_gold_anp_monthly(valid), ["uf_sigla", "product"], "avg_price"
         )
-        anp_mom = mom_change(anp_monthly, ["uf_sigla", "product"], "avg_price")
         movers = top_movers(anp_mom, k=3).collect()
         if movers:
             latest_month = movers[0]["month"]

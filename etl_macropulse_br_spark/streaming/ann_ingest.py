@@ -188,41 +188,48 @@ def append_new_embeddings(
     idx = load_ann_index(batch_df.sparkSession, index_path, validate=False)
     id_col = idx.params["id_col"]
     emb_col = idx.params["emb_col"]
-    ids = batch_df.filter(
-        batch_df[emb_col].isNotNull()
-    ).select(batch_df[id_col].alias("vec_id"))
-    n_batch = ids.count()
-    if n_batch == 0:
-        return "empty"
-    if batch_id is None or validate:
-        n_committed = ids.join(
-            idx.assign.select("vec_id"), "vec_id", "left_semi"
-        ).count()
-        if n_committed == n_batch:
-            # every id is already in the committed index: a true
-            # redelivery (legacy/trimmed-ledger or identity-less) —
-            # the work is done, appending would duplicate it
-            return "skipped"
-        if n_committed:
-            raise ValueError(
-                f"append_new_embeddings: {n_committed} of {n_batch} "
-                "batch ids already exist in the index but the rest do "
-                "not — this is an id collision across distinct "
-                "batches, not a redelivery (which would overlap "
-                "fully). Fix the id namespace; appending would double "
-                "those vectors' encodings."
-            )
-    # partial/full overlap under a provably-new batch id is a
-    # producer bug; append_ann_index's duplicate-id guard keeps it
-    # loud
-    append_ann_index(
-        batch_df,
-        index_path,
-        batch_id=batch_id,
-        stream_id=stream_id,
-        streams_keep=streams_keep,
-    )
-    return "appended"
+    # the count, the validating join and the append's own passes all
+    # read the batch: cached, its source is scanned once
+    batch_df = batch_df.persist()
+    try:
+        ids = batch_df.filter(
+            batch_df[emb_col].isNotNull()
+        ).select(batch_df[id_col].alias("vec_id"))
+        n_batch = ids.count()
+        if n_batch == 0:
+            return "empty"
+        if batch_id is None or validate:
+            n_committed = ids.join(
+                idx.assign.select("vec_id"), "vec_id", "left_semi"
+            ).count()
+            if n_committed == n_batch:
+                # every id is already in the committed index: a true
+                # redelivery (legacy/trimmed-ledger or identity-less)
+                # — the work is done, appending would duplicate it
+                return "skipped"
+            if n_committed:
+                raise ValueError(
+                    f"append_new_embeddings: {n_committed} of "
+                    f"{n_batch} batch ids already exist in the index "
+                    "but the rest do not — this is an id collision "
+                    "across distinct batches, not a redelivery "
+                    "(which would overlap fully). Fix the id "
+                    "namespace; appending would double those "
+                    "vectors' encodings."
+                )
+        # partial/full overlap under a provably-new batch id is a
+        # producer bug; append_ann_index's duplicate-id guard keeps
+        # it loud
+        append_ann_index(
+            batch_df,
+            index_path,
+            batch_id=batch_id,
+            stream_id=stream_id,
+            streams_keep=streams_keep,
+        )
+        return "appended"
+    finally:
+        batch_df.unpersist()
 
 
 def start_ann_ingest_stream(

@@ -1397,45 +1397,6 @@ def test_bloom_decontamination_tiny_filter_overremoves_safely(spark):
     assert sum(bloom.values()) > sum(exact.values())  # saturated -> FPs
 
 
-def test_bloom_bits_for_sizing_meets_target_fpr(spark):
-    """`bloom_bits_for` must size the filter so the MEASURED
-    shingle-level FP rate on a seeded corpus is <= 2x the target.
-    Every doc is exactly one 3-token shingle (so doc FPR == shingle
-    FPR), train shingles are disjoint from eval shingles (every
-    contaminated=true is a false positive), and sanity-checks the
-    helper's monotonicity and guards."""
-    import pytest as _pytest
-
-    from etl_macropulse_br_spark.operators.dedup import (
-        bloom_bits_for,
-        decontaminate_bloom,
-    )
-
-    target = 0.05
-    n_eval, n_train = 1500, 3000
-    ev = spark.createDataFrame(
-        [(i, f"ev{i}a ev{i}b ev{i}c") for i in range(n_eval)],
-        "doc_id long, text string",
-    )
-    tr = spark.createDataFrame(
-        [(i, f"tr{i}a tr{i}b tr{i}c") for i in range(n_train)],
-        "doc_id long, text string",
-    )
-    n_bits = bloom_bits_for(n_eval, target)
-    out = decontaminate_bloom(tr, ev, n_bits=n_bits).collect()
-    assert len(out) == n_train
-    fp = sum(1 for r in out if r["contaminated"]) / n_train
-    assert fp <= 2 * target, (fp, n_bits)
-    # more shingles or a tighter target must never shrink the filter
-    assert bloom_bits_for(2 * n_eval, target) > n_bits
-    assert bloom_bits_for(n_eval, target / 10) > n_bits
-    assert bloom_bits_for(1, 0.5) % 60 == 0
-    with _pytest.raises(ValueError):
-        bloom_bits_for(0, 0.1)
-    with _pytest.raises(ValueError):
-        bloom_bits_for(100, 1.5)
-
-
 def test_hybrid_rrf_semantics(spark):
     """RRF fusion: a doc present in BOTH lists outranks docs present
     in one (at comparable ranks); single-list docs keep exactly that
@@ -1987,10 +1948,19 @@ def test_kmv_set_ops_exact_and_estimated(spark):
     within 5 standard errors (1/sqrt(k)) of truth — the measured
     Beyer et al. accuracy claim, deterministic under the md5 family;
     (c) nulls are ignored (distinct-count semantics, same rule as
-    HLL/KMV after the r8 hardening)."""
+    HLL/KMV after the r8 hardening); (d) a sketch frame LARGER than
+    the k passed to kmv_set_ops_from_sketches fails loudly in-plan,
+    also under an estimate-only projection (the checked count is
+    embedded in the estimator, so column pruning cannot drop it)."""
+    import pytest
+    from pyspark.errors import SparkRuntimeException
     from pyspark.sql import functions as F
 
-    from etl_macropulse_br_spark.operators.sketches import kmv_set_ops
+    from etl_macropulse_br_spark.operators.sketches import (
+        kmv_set_ops,
+        kmv_set_ops_from_sketches,
+        kmv_sketch,
+    )
 
     # (a) exact regime: A = {a0..a9}, B = {a5..a14} -> inter 5, union 15
     a = spark.range(10).select(
@@ -2027,6 +1997,15 @@ def test_kmv_set_ops_exact_and_estimated(spark):
     assert abs(e["est_union"] - 7500) <= 5 * se * 7500
     assert abs(e["est_intersection"] - 2500) <= 8 * se * 2500
     assert abs(e["jaccard_kmv"] - 2500 / 7500) <= 5 * se
+
+    # (d) k-overflow guard
+    fa, fb = kmv_sketch(big_a, "v", k), kmv_sketch(big_b, "v", k)
+    with pytest.raises(SparkRuntimeException, match="exceeds k=32"):
+        kmv_set_ops_from_sketches(fa, fb, 32).collect()
+    with pytest.raises(SparkRuntimeException, match="exceeds k=32"):
+        kmv_set_ops_from_sketches(fa, fb, 32).select(
+            "est_distinct_a"
+        ).collect()
 
 
 def test_hdr_quantile_sketch_properties(spark):
@@ -2095,29 +2074,22 @@ def test_hdr_quantile_sketch_properties(spark):
         hdr_histogram(neg, "v", s).collect()
 
 
-def test_hdr_signed_sketch_properties(spark, tmp_path):
+def test_hdr_signed_sketch_properties(spark):
     """hdr_signed_* (r9 — the double/negative-domain member of the
-    HDR family): (a) MERGE — per-slice sketches persisted as
-    parquet, read back, hdr_merge'd and served equal the direct
-    pass (the unsigned merge is sign-agnostic); (b) every bracket
-    contains the true fixed-point rank value, midpoint within the
-    2^-(s+1) relative guarantee on |a| (plus the 1/scale quantum);
-    (c) bucket order is value order across the sign boundary (a
-    negative-heavy distribution's p10 lands negative, p90
-    positive); (d) NaN and fixed-point overflow fail the plan
-    loudly (Spark's non-ANSI floor would otherwise silently bucket
-    NaN at zero / saturate infinities)."""
+    HDR family): (a) every bracket contains the true fixed-point
+    rank value, midpoint within the 2^-(s+1) relative guarantee on
+    |a| (plus the 1/scale quantum); (b) bucket order is value order
+    across the sign boundary (a negative-heavy distribution's p10
+    lands negative, p90 positive); (c) NaN and fixed-point overflow
+    fail the plan loudly (Spark's non-ANSI floor would otherwise
+    silently bucket NaN at zero / saturate infinities)."""
     import math
     import random
 
     import pytest
-    from pyspark.sql import functions as F
 
     from etl_macropulse_br_spark.operators.sketches import (
-        hdr_merge,
-        hdr_signed_histogram,
         hdr_signed_quantiles,
-        hdr_signed_quantiles_from_histogram,
     )
 
     rng = random.Random(23)
@@ -2135,25 +2107,7 @@ def test_hdr_signed_sketch_properties(spark, tmp_path):
         map(tuple, hdr_signed_quantiles(df, "v", qs, scale, s).collect())
     )
 
-    # (a) per-slice parquet round-trip + merge + serve
-    paths = []
-    for i in range(3):
-        p = str(tmp_path / f"shist{i}")
-        part = df.filter(F.pmod(F.abs(F.hash("v")), F.lit(3)) == i)
-        hdr_signed_histogram(part, "v", scale, s).write.parquet(p)
-        paths.append(p)
-    merged = hdr_merge([spark.read.parquet(p) for p in paths])
-    served = sorted(
-        map(
-            tuple,
-            hdr_signed_quantiles_from_histogram(
-                merged, qs, scale
-            ).collect(),
-        )
-    )
-    assert served == direct
-
-    # (b) bracket + error bound against the true fixed-point ranks
+    # (a) bracket + error bound against the true fixed-point ranks
     fixed = sorted(math.floor(v * scale) for v in vals)
     found_neg = found_pos = False
     for q, rank, n, lo, hi, est in direct:
@@ -2163,10 +2117,10 @@ def test_hdr_signed_sketch_properties(spark, tmp_path):
             assert abs(est * scale - true) / abs(true) < 2 ** -(s + 1) + 1e-9
         found_neg |= hi < 0
         found_pos |= lo > 0
-    # (c) the gaussian-around-zero input must exercise BOTH stores
+    # (b) the gaussian-around-zero input must exercise BOTH stores
     assert found_neg and found_pos
 
-    # (d) loud guards
+    # (c) loud guards
     with pytest.raises(Exception, match="NaN"):
         hdr_signed_quantiles(
             spark.createDataFrame([(1.0,), (float("nan"),)], "v double"),
@@ -2387,122 +2341,6 @@ def test_ingest_increment_multi_chain_with_crash_and_ann(spark, tmp_path):
     assert sorted(map(tuple, bix.codes.collect())) == sorted(
         map(tuple, cix.codes.collect())
     )
-
-
-def test_sketches_serve_from_stored_state(spark, tmp_path):
-    """Train-once/serve-many for the sketch family (r8): (a) KMV
-    sketches persisted as parquet answer set algebra via
-    kmv_set_ops_from_sketches with output IDENTICAL to the direct
-    corpus-scanning call; (b) per-slice HDR histograms persisted,
-    read back, and hdr_merge'd answer quantiles via
-    hdr_quantiles_from_histogram IDENTICAL to one full-corpus
-    hdr_quantiles_by pass — no fact row is re-scanned in either
-    serve path."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from etl_macropulse_br_spark.operators.sketches import (
-        hdr_histogram,
-        hdr_merge_stored,
-        hdr_quantiles_by,
-        hdr_quantiles_from_histogram,
-        kmv_set_ops,
-        kmv_set_ops_from_sketches,
-        kmv_set_ops_from_stored,
-        kmv_sketch,
-        load_hdr_histogram,
-        load_kmv_sketch,
-        save_hdr_histogram,
-        save_kmv_sketch,
-    )
-
-    rng = random.Random(43)
-    a = spark.createDataFrame(
-        [(f"u{rng.randrange(3000)}",) for _ in range(8000)], "v string"
-    )
-    b = spark.createDataFrame(
-        [(f"u{rng.randrange(1500, 4500)}",) for _ in range(8000)],
-        "v string",
-    )
-    k = 128
-    pa, pb = str(tmp_path / "ska"), str(tmp_path / "skb")
-    save_kmv_sketch(kmv_sketch(a, "v", k), pa, k)
-    save_kmv_sketch(kmv_sketch(b, "v", k), pb, k)
-    # sidecar round-trip: load returns the authoritative build k
-    _, ka = load_kmv_sketch(spark, pa)
-    assert ka == k
-    served = kmv_set_ops_from_stored(spark, pa, pb).collect()
-    direct = kmv_set_ops(a, b, "v", k).collect()
-    assert sorted(map(tuple, served)) == sorted(map(tuple, direct))
-
-    # r9 guards (ADVICE r8 #5): (a) mismatched stored k's are
-    # rejected; (b) a plain-parquet sketch without the sidecar is
-    # rejected; (c) serving a sketch LARGER than the passed k fails
-    # loudly in-plan instead of returning plausible garbage
-    import pytest
-
-    pc = str(tmp_path / "skc")
-    save_kmv_sketch(kmv_sketch(b, "v", 64), pc, 64)
-    with pytest.raises(ValueError, match="different k"):
-        kmv_set_ops_from_stored(spark, pa, pc)
-    bare = str(tmp_path / "bare")
-    kmv_sketch(a, "v", k).write.parquet(bare)
-    with pytest.raises(FileNotFoundError, match="_kmv_meta"):
-        load_kmv_sketch(spark, bare)
-    from pyspark.errors import SparkRuntimeException
-
-    # (r12: the store is pointer-versioned, so frames come from the
-    # loader — raw spark.read.parquet of the store root is no longer
-    # a meaningful access path)
-    fa, fb = load_kmv_sketch(spark, pa)[0], load_kmv_sketch(spark, pb)[0]
-    with pytest.raises(SparkRuntimeException, match="exceeds k=32"):
-        kmv_set_ops_from_sketches(fa, fb, 32).collect()
-    # r9 review fix: the guard must survive column pruning — an
-    # estimate-only projection still raises (the checked count is
-    # embedded in the estimator expression, not just the count col)
-    with pytest.raises(SparkRuntimeException, match="exceeds k=32"):
-        kmv_set_ops_from_sketches(fa, fb, 32).select(
-            "est_distinct_a"
-        ).collect()
-
-    rows = [
-        ("g1", int(rng.lognormvariate(7, 2))) for _ in range(3000)
-    ] + [("g2", rng.randrange(0, 500)) for _ in range(2000)]
-    df = spark.createDataFrame(rows, "g string, v long")
-    thirds = [
-        df.filter(F.pmod(F.col("v"), F.lit(3)) == i) for i in range(3)
-    ]
-    paths = []
-    for i, part in enumerate(thirds):
-        p = str(tmp_path / f"hist{i}")
-        save_hdr_histogram(
-            hdr_histogram(part, "v", s=6, by=["g"]), p, s=6, by=["g"]
-        )
-        paths.append(p)
-    merged, meta = hdr_merge_stored(spark, paths)
-    assert meta == {"s": 6, "scale": None, "by": ["g"]}
-    served_q = hdr_quantiles_from_histogram(
-        merged, (0.5, 0.95), by=["g"]
-    ).collect()
-    direct_q = hdr_quantiles_by(df, "v", ["g"], (0.5, 0.95), s=6).collect()
-    assert sorted(map(tuple, served_q)) == sorted(map(tuple, direct_q))
-
-    # r9: HDR param sidecar guards (the KMV discipline applied to
-    # this family): a sketch stored under a DIFFERENT s — or a
-    # signed sketch (scale set) mixed with unsigned — is rejected
-    # at merge instead of silently adding incompatible buckets;
-    # sidecar-less directories are rejected at load
-    p_s7 = str(tmp_path / "hist_s7")
-    save_hdr_histogram(
-        hdr_histogram(thirds[0], "v", s=7, by=["g"]), p_s7, s=7, by=["g"]
-    )
-    with pytest.raises(ValueError, match="different params"):
-        hdr_merge_stored(spark, [paths[0], p_s7])
-    bare_h = str(tmp_path / "hist_bare")
-    hdr_histogram(thirds[0], "v", s=6, by=["g"]).write.parquet(bare_h)
-    with pytest.raises(FileNotFoundError, match="_hdr_meta"):
-        load_hdr_histogram(spark, bare_h)
 
 
 def test_r9_review_fixes_text_similarity_clustering(spark):

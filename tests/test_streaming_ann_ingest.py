@@ -428,6 +428,8 @@ def test_ann_ingest_stream_with_inline_compaction(spark, tmp_path):
         compact_every=1,
     )
     q.awaitTermination(180)
+    # each micro-batch reads its source once
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 100
 
     with open(os.path.join(path, "MANIFEST.json")) as f:
         manifest = json.load(f)

@@ -32,8 +32,7 @@ actions during plan construction.
 
 Reference scope: the reference pipeline (src/pipeline.py,
 src/transform.py) has no clustering; this extends the
-training-data/embedding surface (mixture balancing, IVF centroid
-training).
+training-data/embedding surface (IVF centroid training).
 """
 
 from __future__ import annotations

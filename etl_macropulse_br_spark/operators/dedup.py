@@ -26,6 +26,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_macropulse_br_spark.functions.hashing import md5_long
+from etl_macropulse_br_spark.operators.util import (
+    register_persisted,
+    small_input_profile,
+    spread,
+)
 
 _WS = r"\s+"
 
@@ -49,23 +54,6 @@ def exact_dedup(
     )
 
 
-def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of normalized text.
-
-    Built with sequence/transform/slice over the token array —
-    no explode, no UDF; empty/short docs yield their full token
-    string as a single shingle so every doc has ≥1 shingle.
-    """
-    toks = F.split(_norm_text(text_col), _WS)
-    n_sh = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
-
-
 # Odd multipliers < 2^20 so (32-bit token hash × multiplier) sums of
 # 3 stay under 2^54: Spark would wrap silently on 64-bit overflow but
 # DuckDB raises, so the oracle-portable combiner must never overflow.
@@ -85,40 +73,6 @@ def token_shingle_hashes_sql(n: int = 3) -> str:
         f"list_distinct(list_transform("
         f"generate_series(1, greatest(len(th) - {n - 1}, 1)), "
         f"i -> {terms}))"
-    )
-
-
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """k-element MinHash signature.
-
-    One md5 per shingle folded to 32 bits, then k integer hashes via
-    a 2-universal family ((a_i * base + b_i) mod P, r9 — the mod is
-    load-bearing: without it every h_i is monotone in the base and
-    all k mins collapse to one hash; see hashing._MINHASH_P) — k×
-    cheaper than k seeded md5s, same guarantees (Broder 1997;
-    Carter-Wegman universal hashing), still bit-identical in the
-    SQL oracle.
-    """
-    from etl_macropulse_br_spark.functions.hashing import (
-        _MINHASH_P,
-        _lcg_constants,
-        base32,
-    )
-
-    bases = F.transform(shingles, lambda s: base32(s))
-
-    def hashed(a: int, b: int):
-        # single-arg lambda — a two-arg lambda would be invoked by
-        # Spark as (element, index)
-        return lambda h: F.pmod(
-            h * F.lit(a) + F.lit(b), F.lit(_MINHASH_P)
-        )
-
-    return F.array(
-        *[
-            F.array_min(F.transform(bases, hashed(a, b)))
-            for a, b in _lcg_constants(k)
-        ]
     )
 
 
@@ -151,7 +105,6 @@ def shingle_hash_rows(
     from pyspark.sql import Window
 
     from etl_macropulse_br_spark.functions.hashing import base32
-    from etl_macropulse_br_spark.operators.util import spread
 
     toks = F.split(_norm_text(text_col), _WS)
 
@@ -353,18 +306,6 @@ def ngram_jaccard_pairs(
             ).alias("jaccard"),
         )
     )
-
-
-# The persist registry moved to the neutral operators/util module
-# (bm25_topk consumers shouldn't need a release hook from the dedup
-# module); re-exported here for backwards compatibility.
-from etl_macropulse_br_spark.operators.util import (  # noqa: E402,F401
-    _PERSISTED_CANDIDATES,
-    persisted_count,
-    register_persisted,
-    small_input_profile,
-    unpersist_candidates,
-)
 
 
 def minhash_near_dups(
@@ -635,8 +576,6 @@ def simhash(
     ``explode_outer`` keeps null-text documents (sketch 0, matching
     the SQL oracle's CASE-on-NULL fold).
     """
-    from etl_macropulse_br_spark.operators.util import spread
-
     toks = F.array_distinct(F.split(_norm_text(text_col), _WS))
     tok_rows = spread(df).select(
         F.col(id_col).alias("id"), F.explode_outer(toks).alias("tok")
@@ -665,96 +604,6 @@ def simhash(
     )
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs: sketch → banded blocking → Hamming
-    verify. Completes the SimHash story (the sketch alone is a
-    column; THIS is the dedup operator).
-
-    Blocking uses the pigeonhole principle: split the ``bits``-bit
-    sketch into ``max_hamming + 1`` bands — two sketches within
-    ``max_hamming`` bit flips MUST agree exactly on at least one
-    band, so banding loses no true pairs (recall 1.0, standard
-    SimHash dedup construction per Manku et al. 2007, "Detecting
-    near-duplicates for web crawling"). Plan: explode per-band keys
-    (linear), self-join per (band, band_bits) bucket, verify
-    ``bit_count(xor) <= max_hamming`` on colliding pairs only —
-    never all-pairs. ``bit_count``/xor are bit-identical in the SQL
-    oracle.
-    """
-    sk = simhash(df, text_col, id_col, bits).select(
-        F.col(id_col).alias("id"), F.col("simhash").alias("sketch")
-    )
-    return banded_hamming_pairs(sk, bits, max_hamming)
-
-
-def banded_hamming_pairs(
-    sk: DataFrame, bits: int, max_hamming: int
-) -> DataFrame:
-    """Pigeonhole-banded Hamming pairing over any (id, sketch)
-    table of ``bits``-bit integer sketches (the SimHash text path
-    calls it). Split into ``max_hamming+1`` bands; two sketches
-    within ``max_hamming`` flips must agree on >= 1 band (recall
-    1.0); verify ``bit_count(xor)`` on colliding pairs only.
-    Arithmetic ``shiftright`` sign-fill is masked off, so 64-bit
-    (negative) sketches band correctly."""
-    n_bands = max_hamming + 1
-    if n_bands > bits:
-        # band_width would floor to 0 and mask to 0 — every sketch
-        # lands in one bucket per band and the self-join goes
-        # quadratic. Fail fast instead of degrading to all-pairs.
-        raise ValueError(
-            f"max_hamming + 1 ({n_bands}) must be <= bits ({bits}); "
-            "pigeonhole banding needs >= 1 bit per band"
-        )
-    band_width = bits // n_bands
-    # a full-width band's all-ones mask is -1 in two's complement
-    # ((1 << 64) - 1 would overflow LongType)
-    mask = ((1 << band_width) - 1) if band_width < 64 else -1
-    banded = sk.select(
-        "id",
-        "sketch",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sketch", b * band_width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_bits"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sketch", "bb.band", "bb.band_bits")
-    left, right = banded.alias("l"), banded.alias("r")
-    return (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.band_bits") == F.col("r.band_bits"),
-                F.col("l.id") < F.col("r.id"),
-            ],
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.bit_count(
-                F.col("l.sketch").bitwiseXOR(F.col("r.sketch"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # a pair may collide in several bands
-    )
-
-
 def srp_signs(plane: int, dim: int) -> list[float]:
     """±1 hyperplane for one SRP plane, derived from the portable md5
     family (same bits as ``md5_long(dim_index, seed=plane)``), so
@@ -777,11 +626,11 @@ def srp_banded(
     dim: int = 64,
 ) -> DataFrame:
     """(id, band, bucket) rows of the banded sign-random-projection
-    blocking — shared by the near-dup pairing and the blocked-KNN
-    path. The plane projections are computed by EXPLODING the
-    vectors and grouping index-ordered sums — whole-stage-codegen
-    arithmetic — instead of per-row zip_with/aggregate lambda folds,
-    which Spark executes as interpreted CodegenFallback (measured
+    blocking used by the near-dup pairing. The plane projections
+    are computed by EXPLODING the vectors and grouping
+    index-ordered sums — whole-stage-codegen arithmetic — instead
+    of per-row zip_with/aggregate lambda folds, which Spark
+    executes as interpreted CodegenFallback (measured
     ~2x the whole query at bench scale for 24 planes). Bit-equality
     with the fold (and hence with the SQL oracle's
     unnest+signs-matrix sums) is structural: posexplode emits one
@@ -805,10 +654,6 @@ def srp_banded(
     twice, and no broadcast-build job collects it.
     """
     from etl_macropulse_br_spark.functions.exprs import lit_double_array
-    from etl_macropulse_br_spark.operators.util import (
-        small_input_profile,
-        spread,
-    )
 
     n_pl = n_bands * n_planes
     # spread() is profile-gated like props_struct_parse: under the
@@ -910,10 +755,6 @@ def embedding_near_dups(
     accesses in generated code lose to the HOF fold's tight loop
     over primitive UnsafeArrayData).
     """
-    from etl_macropulse_br_spark.operators.util import (
-        small_input_profile,
-    )
-
     if dim is None:
         row = df.select(vec_col).first()
         if row is None or row[0] is None:
@@ -1209,8 +1050,6 @@ def dup_clusters_plan(
     re-executed per round. Callers must release via
     util.unpersist_candidates() between query sets.
     """
-    from etl_macropulse_br_spark.operators.util import register_persisted
-
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     nodes = edges.select("src").union(
         edges.select(F.col("dst").alias("src"))
@@ -1286,51 +1125,6 @@ def decontaminate(
     )
 
 
-def contamination_report(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_shingle: int = 3,
-) -> DataFrame:
-    """The AUDIT companion to :func:`decontaminate`: for every
-    contaminated training doc, WHICH eval docs it collides with and
-    how hard — (train_id, eval_id, n_shared_shingles). A bare
-    boolean is enough to drop docs; a release review needs the
-    trace ("train doc X shares 14 trigrams with benchmark item Y")
-    to distinguish verbatim benchmark leakage from a one-shingle
-    idiom collision, and per-eval-doc totals show WHICH benchmark
-    items are compromised in the corpus.
-
-    Scale shape: the eval side keeps (eval_id, shingle) rows this
-    time — still benchmark-suite-sized, so the equi-join on the
-    shingle hash broadcast-resolves under AQE and the training side
-    is matched at scan speed; only MATCHED (train_id, eval_id,
-    shingle) rows reach the count aggregate (map-side combined),
-    which is ``|contamination|``-sized, not corpus-sized. Shingle
-    multiplicity on the train side counts once per distinct
-    (shingle, position-independent) collision pair — both sides
-    dedup (id, shingle) first, so ``n_shared_shingles`` is the size
-    of the shared DISTINCT shingle set, the standard overlap
-    measure.
-    """
-    t_sh = (
-        shingle_hash_rows(train, text_col, id_col, n_shingle)
-        .select(F.col("id").alias("train_id"), "sh_h")
-        .distinct()
-    )
-    e_sh = (
-        shingle_hash_rows(eval_df, text_col, id_col, n_shingle)
-        .select(F.col("id").alias("eval_id"), "sh_h")
-        .distinct()
-    )
-    return (
-        t_sh.join(e_sh, "sh_h")
-        .groupBy("train_id", "eval_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_shingles"))
-    )
-
-
 def chunk_dedup_clean(
     df: DataFrame,
     text_col: str = "text",
@@ -1370,9 +1164,6 @@ def chunk_dedup_clean(
 
     Returns (id_col, n_chunks, n_dropped, clean_text) for every doc.
     """
-    from etl_macropulse_br_spark.functions.hashing import md5_long
-    from etl_macropulse_br_spark.operators.util import spread
-
     k = chunk_tokens
     toks = F.split(_norm_text(text_col), _WS)
     n_chunks = F.greatest(
@@ -1523,7 +1314,6 @@ def span_dedup_clean(
     from pyspark.sql import Window
 
     from etl_macropulse_br_spark.functions.hashing import base32
-    from etl_macropulse_br_spark.operators.util import spread
 
     _check_span_tokens(span_tokens)
     k = span_tokens
@@ -1569,327 +1359,4 @@ def span_dedup_clean(
         F.size(s).cast("bigint").alias("n_spans"),
         (F.size("toks") - F.size(kept)).cast("bigint").alias("n_removed"),
         F.array_join(kept, " ").alias("clean_text"),
-    )
-
-
-def containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_shingle: int = 3,
-    threshold: float = 0.5,
-    max_df: int = 5,
-) -> DataFrame:
-    """DIRECTIONAL containment (Broder's asymmetric resemblance,
-    |A∩B| / |A|) — catches SUB-DOCUMENT duplication that symmetric
-    Jaccard under-scores: a short doc fully quoted inside a long one
-    has tiny Jaccard but containment ~1.0 in the short->long
-    direction.
-
-    Blocking is RARE-SHINGLE indexing instead of MinHash bands: two
-    docs are candidates iff they share >= 1 shingle seen in at most
-    ``max_df`` docs (2..max_df). Rare shingles are the
-    discriminative ones — boilerplate shingles (high df) generate
-    quadratic pair floods and no signal, so the df cap bounds the
-    inverted-index self-join at C(max_df, 2) pairs per shingle at
-    ANY corpus size. The candidate policy is exactly replayable in
-    SQL, so both containment directions hash-gate.
-
-    Recall characterization (pinned by
-    ``test_containment_blocking_recall_on_planted_subdocs``):
-    against brute-force containment on a seeded corpus, blocking
-    finds 100% of pairs whose overlap includes >= 1 discriminative
-    (df <= max_df) shingle — every planted sub-document — and the
-    exact verify stage keeps precision at 1.0. The bound it trades
-    away: a pair whose ONLY shared shingles are high-df boilerplate
-    is unfindable by construction (that is the point of the cap).
-
-    Plan: distinct shingle-hash rows (map-only affine stream) -> df
-    aggregate -> rare set -> bounded self-join -> array_intersect
-    verify on collect_set arrays (int arrays only; text never
-    shuffles). Returns (id_a, id_b, containment_a, containment_b)
-    where either direction >= ``threshold``.
-    """
-    rows = shingle_hash_rows(df, text_col, id_col, n_shingle).distinct()
-    dfreq = rows.groupBy("sh_h").agg(F.count(F.lit(1)).alias("c"))
-    rare = dfreq.filter(
-        (F.col("c") >= 2) & (F.col("c") <= F.lit(max_df))
-    ).select("sh_h")
-    rrows = rows.join(rare, "sh_h", "left_semi")
-    a, b = rrows.alias("a"), rrows.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.sh_h") == F.col("b.sh_h"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sets = rows.groupBy("id").agg(F.collect_set("sh_h").alias("sh"))
-    # rename AFTER each join so both lookups share one canonical
-    # shingle-set build (ReuseExchange — same fix as the Jaccard and
-    # SRP verify stages)
-    j1 = cand.join(sets, F.col("id_a") == sets["id"]).select(
-        "id_a", "id_b", F.col("sh").alias("sh_a")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh"))
-    c_a = inter / F.size("sh_a")
-    c_b = inter / F.size("sh")
-    return (
-        j1.join(sets, F.col("id_b") == sets["id"])
-        .select(
-            "id_a",
-            "id_b",
-            c_a.alias("containment_a"),
-            c_b.alias("containment_b"),
-        )
-        .filter(
-            F.greatest(F.col("containment_a"), F.col("containment_b"))
-            >= F.lit(threshold)
-        )
-    )
-
-
-def span_dedup_keep_first(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_tokens: int = 10,
-    min_count: int = 2,
-) -> DataFrame:
-    """KEEP-GLOBALLY-FIRST span removal — the Lee et al. deletion
-    policy at gram granularity: every occurrence of a duplicated
-    >= ``span_tokens``-token run is deleted EXCEPT the corpus-first
-    one (min (doc_id, pos) lexicographically). Two sharpenings over
-    :func:`span_dedup_clean`: duplication counts OCCURRENCES (so a
-    run repeated within ONE doc is deduplicated too), and exactly
-    one copy of the duplicated text survives in the corpus (the
-    symmetric variant deletes all of them).
-
-    Winner protection (r6): removal and winner hit-starts both
-    merge into byte ranges map-side (:func:`_merged_ranges`), and a
-    token is deleted iff covered by a removal range AND NOT by a
-    winner range — an overlapping non-winner gram can no longer
-    clip the corpus-first copy's tokens, so the surviving copy is
-    always intact (e.g. a doc of one token repeated 30x keeps the
-    full first 10-token span, not a single token).
-
-    Plan: the sliding gram stream (one ``lead`` window per doc) goes
-    through ONE (gram-hash) window pass computing occurrence count
-    and rank in (doc_id, pos) order — both sides of the oracle share
-    that formulation verbatim; non-winner occurrences of duplicated
-    grams become hit starts; reassembly is the same
-    ``filter``/``array_join`` as the symmetric variant. Int-only
-    shuffles upstream; text shuffles at most once, only for the
-    reassembly join when the hits side is too large to broadcast.
-
-    Returns (id_col, n_tokens, n_spans_removed, n_removed,
-    clean_text)."""
-    from pyspark.sql import Window
-
-    from etl_macropulse_br_spark.functions.hashing import base32
-    from etl_macropulse_br_spark.operators.util import spread
-
-    _check_span_tokens(span_tokens)
-    k = span_tokens
-    toks = F.split(_norm_text(text_col), _WS)
-    tok_rows = spread(df).select(
-        F.col(id_col).alias("id"), F.posexplode(toks).alias("pos", "tok")
-    )
-    hashed = tok_rows.select("id", "pos", base32("tok").alias("h"))
-    w = Window.partitionBy("id").orderBy("pos")
-    wcnt = Window.partitionBy("id")
-    g_h = F.col("h") * F.lit(_SPAN_COEFS[0])
-    for j, coef in enumerate(_SPAN_COEFS[1:k], start=1):
-        g_h = g_h + F.coalesce(F.lead("h", j).over(w), F.lit(0)) * F.lit(
-            coef
-        )
-    grams = hashed.select(
-        "id",
-        "pos",
-        g_h.alias("g_h"),
-        F.count(F.lit(1)).over(wcnt).alias("n_tok"),
-    ).filter(F.col("pos") <= F.col("n_tok") - F.lit(k))
-    wg = Window.partitionBy("g_h")
-    wr = Window.partitionBy("g_h").orderBy("id", "pos")
-    hits = (
-        grams.select(
-            "id",
-            "pos",
-            F.count(F.lit(1)).over(wg).alias("occ"),
-            F.row_number().over(wr).alias("rk"),
-        )
-        .filter(F.col("occ") >= F.lit(min_count))
-        .groupBy("id")
-        .agg(
-            F.collect_set(
-                F.when(F.col("rk") > 1, F.col("pos"))
-            ).alias("starts"),
-            F.collect_set(
-                F.when(F.col("rk") == 1, F.col("pos"))
-            ).alias("win_starts"),
-        )
-    )
-    base = spread(df).select(F.col(id_col).alias("id"), toks.alias("toks"))
-    s = F.coalesce(F.col("starts"), F.array().cast("array<int>"))
-    w_s = F.coalesce(F.col("win_starts"), F.array().cast("array<int>"))
-    removed = _in_ranges(_merged_ranges(s, k))
-    protected = _in_ranges(_merged_ranges(w_s, k))
-    kept = F.filter("toks", lambda t, i: ~removed(i) | protected(i))
-    return base.join(hits, "id", "left").select(
-        F.col("id").alias(id_col),
-        F.size("toks").cast("bigint").alias("n_tokens"),
-        F.size(s).cast("bigint").alias("n_spans_removed"),
-        (F.size("toks") - F.size(kept)).cast("bigint").alias("n_removed"),
-        F.array_join(kept, " ").alias("clean_text"),
-    )
-
-
-def decontaminate_bloom(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_shingle: int = 3,
-    n_bits: int = 1 << 16,
-    n_hashes: int = 4,
-) -> DataFrame:
-    """Bloom-filter decontamination — the scale path of
-    :func:`decontaminate` for when the distinct eval-shingle set
-    itself outgrows a comfortable broadcast: the eval corpus
-    compresses to an ``n_bits``-bit Bloom bitset (fixed size
-    regardless of eval size) and the training side probes it.
-    Structurally NO FALSE NEGATIVES (every truly contaminated doc is
-    flagged); false positives occur at the classic
-    ``(1 - e^(-kn/m))^k`` rate and only cost over-removal.
-
-    The Bloom filter is built from the repo's portable primitives —
-    ``n_hashes`` positions per shingle via the 2-universal family
-    over the md5-folded shingle hash, bits OR-combined per 64-bit
-    word — so unlike an engine-native bloom_filter_agg the ENTIRE
-    operator (bitset construction included) replays bit-identically
-    in the SQL oracle: OR is commutative/associative, making the
-    bitset independent of row order and partitioning.
-
-    Plan: eval -> distinct shingle hashes -> explode k (word, mask)
-    int pairs -> ``bit_or`` per word -> the <= n_bits/64-row word
-    table densifies into ONE array row (the Bloom bitset as a
-    broadcast literal, fixed size by construction); train -> shingle
-    hashes -> ALL k probes evaluate as map-side expressions over
-    the broadcast array (a shingle hits iff every probed bit is
-    set) -> a doc is contaminated iff ANY shingle hits (one
-    partial-combined groupBy(id)). Map-only probe, int-only
-    exchanges, the train text never shuffles. Returns
-    (id_col, contaminated) for every training doc.
-    """
-    dense = bloom_bitset(
-        eval_df, text_col, id_col, n_shingle, n_bits, n_hashes
-    )
-    t_sh = shingle_hash_rows(train, text_col, id_col, n_shingle)
-    hit = _bloom_hit(F.col("sh_h"), F.col("bf"), n_bits, n_hashes)
-    return (
-        t_sh.crossJoin(F.broadcast(dense))
-        .groupBy(F.col("id").alias(id_col))
-        .agg(F.max(hit).alias("contaminated"))
-    )
-
-
-def _bloom_positions(sh_col: Column, n_bits: int, n_hashes: int):
-    """The k probe positions for one shingle hash. Knuth
-    multiplicative hashing: take MIDDLE bits of a*x+b (shiftright 16
-    before the mod). Low bits of an affine map are a bijection of
-    the base's low bits, which correlates the k probes and
-    measurably inflates the FP rate (17% -> 0 doc-level false
-    positives on the sf0.01 corpus at the default sizing)."""
-    from etl_macropulse_br_spark.functions.hashing import (
-        universal_hashes,
-    )
-
-    base = F.pmod(sh_col, F.lit(1 << 32))
-    return [
-        F.pmod(F.shiftright(h, 16), F.lit(n_bits))
-        for h in universal_hashes(base, n_hashes)
-    ]
-
-
-def _bloom_word_mask(pos: Column):
-    """(word index, bit mask) for a probe position — 60 usable bits
-    per word: shifting into bit 63 overflows in DuckDB (checked)
-    while Spark wraps silently, so 0..59 shifts are portable, same
-    convention as the repo's 60-bit hash family."""
-    word = F.floor(pos / F.lit(60)).cast("int")
-    # shiftleft with a COLUMN bit count (the F.shiftleft wrapper
-    # only takes a literal)
-    mask = F.call_function(
-        "shiftleft",
-        F.lit(1).cast("long"),
-        F.pmod(pos, F.lit(60)).cast("int"),
-    )
-    return word, mask
-
-
-def _bloom_hit(
-    sh_col: Column, bf_col: Column, n_bits: int, n_hashes: int
-) -> Column:
-    """True iff every probed bit of the shingle is set in the bitset
-    array — the probe :func:`decontaminate_bloom` groups per doc."""
-    hit = None
-    for pos in _bloom_positions(sh_col, n_bits, n_hashes):
-        w, m = _bloom_word_mask(pos)
-        one = F.element_at(bf_col, w + F.lit(1)).bitwiseAND(m) == m
-        hit = one if hit is None else hit & one
-    return hit
-
-
-def bloom_bitset(
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_shingle: int = 3,
-    n_bits: int = 1 << 16,
-    n_hashes: int = 4,
-) -> DataFrame:
-    """The eval corpus compressed to a ONE-row (bf: array<long>)
-    Bloom bitset DataFrame — the broadcast "model parameter"
-    :func:`decontaminate_bloom` probes. bit_or is
-    commutative/associative, so the bitset is independent of row
-    order and partitioning and the construction replays
-    bit-identically in the SQL oracle."""
-    n_words = (n_bits + 59) // 60
-    e_sh = (
-        shingle_hash_rows(eval_df, text_col, id_col, n_shingle)
-        .select("sh_h")
-        .distinct()
-    )
-    pairs = []
-    for pos in _bloom_positions(F.col("sh_h"), n_bits, n_hashes):
-        w, m = _bloom_word_mask(pos)
-        pairs.append(F.struct(w.alias("word"), m.alias("mask")))
-    bits = (
-        e_sh.select(F.explode(F.array(*pairs)).alias("p"))
-        .select("p.word", "p.mask")
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
-
-    # densify the sparse word table into the full bitset as one
-    # array row — evaluated once (single row), broadcast to every
-    # probe task
-    packed = bits.groupBy().agg(
-        F.collect_list(F.struct("word", "bits")).alias("wb")
-    )
-    return packed.select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_words - 1)),
-            lambda w: F.coalesce(
-                F.get(
-                    F.filter(F.col("wb"), lambda x: x["word"] == w),
-                    F.lit(0),
-                )["bits"],
-                F.lit(0).cast("long"),
-            ),
-        ).alias("bf")
     )

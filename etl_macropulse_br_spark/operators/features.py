@@ -191,105 +191,6 @@ def zscore_pandas(
     return df.groupBy(*group_cols).applyInPandas(norm, schema=schema_str)
 
 
-def exact_ntile_stats(
-    df: DataFrame,
-    value_col: str,
-    n_tiles: int = 10,
-    bucket_scale: float = 1024.0,
-) -> DataFrame:
-    """Order-free per-tile stats (bucket, n_rows, min_val, max_val)
-    for an exact equal-count ``ntile(n_tiles)`` split — WITHOUT the
-    global single-task window ``ntile`` itself plans.
-
-    Tile d of n rows covers ranks [lo_d, hi_d] by pure arithmetic
-    (base = n div k, rem = n mod k, lo_d = (d-1)·base + min(d-1, rem)
-    + 1, size_d = base + (d <= rem) — exactly ntile's allocation), so
-    the aggregate needs only the 2·k order statistics at those ranks.
-    Histogram-refine two-pass (same machinery as price_percentiles):
-
-    1. map-side-combined fixed-width value-bucket counts — the
-       shuffle carries |buckets| rows at ANY input size;
-    2. a window over that tiny table (bounded: |buckets| rows,
-       single partition is fine) finds buckets covering any target
-       rank — at most 2·k of them, so the refine join side is an
-       unconditional broadcast;
-    3. one refine re-scan ranks only inside those buckets (bounded
-       per-bucket sorts); conditional mins pick the 2·k values and a
-       literal ``stack`` unpivots to k rows. n_rows per tile is
-       arithmetic in n. Empty tiles (n < k) drop out, matching
-       ntile. Ties are value-stable: order statistics of a multiset
-       don't depend on tiebreak order.
-    """
-    from pyspark.sql import Column
-
-    v = F.col(value_col)
-    b_expr = F.floor(v * F.lit(bucket_scale))
-    counts = (
-        df.withColumn("__b", b_expr)
-        .groupBy("__b")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-    )
-    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("__b").rangeBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = counts.select(
-        "__b",
-        "__cnt",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__cnt").over(w_all).alias("n"),
-    )
-
-    base = F.floor(F.col("n") / F.lit(n_tiles)).cast("bigint")
-    rem = F.col("n") % F.lit(n_tiles)
-
-    def lo_rank(d: int) -> Column:
-        return F.lit(d - 1) * base + F.least(F.lit(d - 1), rem) + F.lit(1)
-
-    def hi_rank(d: int) -> Column:
-        size = base + F.when(F.lit(d) <= rem, F.lit(1)).otherwise(F.lit(0))
-        return lo_rank(d) + size - F.lit(1)
-
-    def covers(r: Column) -> Column:
-        return (F.col("__off") < r) & (r <= F.col("__off") + F.col("__cnt"))
-
-    any_target = None
-    for d in range(1, n_tiles + 1):
-        c = covers(lo_rank(d)) | covers(hi_rank(d))
-        any_target = c if any_target is None else (any_target | c)
-    needed = cum.filter(any_target).select("__b", "__off", "n")
-
-    w_in = Window.partitionBy("__b").orderBy(value_col)
-    ranked = (
-        df.withColumn("__b", b_expr)
-        .join(F.broadcast(needed), "__b")
-        .withColumn("cum", F.col("__off") + F.row_number().over(w_in))
-    )
-    aggs = []
-    for d in range(1, n_tiles + 1):
-        aggs.append(
-            F.min(F.when(F.col("cum") == lo_rank(d), v)).alias(f"lo{d}")
-        )
-        aggs.append(
-            F.min(F.when(F.col("cum") == hi_rank(d), v)).alias(f"hi{d}")
-        )
-    agg = ranked.groupBy().agg(F.max("n").alias("n"), *aggs)
-    stack_args = ", ".join(f"{d}, lo{d}, hi{d}" for d in range(1, n_tiles + 1))
-    rows = agg.selectExpr(
-        "n", f"stack({n_tiles}, {stack_args}) AS (bucket, min_val, max_val)"
-    )
-    base_r = F.floor(F.col("n") / F.lit(n_tiles)).cast("bigint")
-    size_r = base_r + F.when(
-        F.col("bucket") <= F.col("n") % F.lit(n_tiles), F.lit(1)
-    ).otherwise(F.lit(0))
-    return rows.filter(size_r > 0).select(
-        F.col("bucket").cast("bigint").alias("bucket"),
-        size_r.alias("n_rows"),
-        "min_val",
-        "max_val",
-    )
-
-
 def _md5_uniform(id_col: str, seed: int):
     """THE deterministic uniform in (0, 1) both E-S samplers key on
     (r9: factored from its two hand-copies — the DuckDB oracle twins
@@ -430,108 +331,3 @@ def weighted_sample_log2(
     return keyed.orderBy(
         F.col("es_key").asc(), F.col(id_col).asc()
     ).limit(k)
-
-
-def mixture_balance(
-    df: DataFrame,
-    group_col: str,
-    target_weights: dict[str, int],
-    id_col: str = "doc_id",
-    seed: int = 0,
-) -> DataFrame:
-    """Training-mixture balancing: deterministically downsample each
-    domain so the output matches ``target_weights`` (integer parts,
-    e.g. ``{"en": 2, "de": 1}`` = two-to-one) at the MAXIMUM total
-    size the corpus allows — the limiting domain is taken whole and
-    every other domain is cut to proportion. The per-domain take is
-    exact integer arithmetic with LARGEST-REMAINDER (Hamilton)
-    allocation: ``N_out = min_g floor(n_g * W / w_g)`` rows total,
-    ``take_g = floor(w_g * N_out / W)`` plus one extra row for the
-    ``N_out - sum(floors)`` domains with the largest integer
-    remainder ``(w_g * N_out) % W`` (ties to the lexicographically
-    smallest domain) — so the output size EQUALS ``N_out``, the true
-    achievable maximum, instead of losing up to |domains|-1 rows to
-    per-domain floors (r7; the extra rows are feasible because
-    ``w_g * N_out / W <= n_g`` by construction of ``N_out``, and a
-    zero remainder never draws an extra row). Which rows survive is
-    a hash-ordered prefix (portable md5 over (seed, id)) — the same
-    deterministic-randomness device as the split/samplers, so the
-    selected set replays in the oracle.
-
-    Scale shape: one tiny per-domain count aggregate (map-side
-    combined; |domains| rows) feeds the takes table, which joins
-    back as a broadcast; the per-domain rank costs one exchange +
-    sort on the domain key, and the data-dependent ``rank <=
-    n_take`` predicate evaluates inside that broadcast join (a
-    non-literal limit cannot WindowGroupLimit-prune — the window
-    ranks every surviving row, the join drops the tail). Domains
-    missing from ``target_weights`` are dropped (weight 0) at the
-    scan via the map lookup's null filter.
-
-    Output schema: the input columns PLUS ``n_take`` (each row's
-    domain allocation — documented, r9: the aux query publishes it;
-    drop it when unioning back with unbalanced frames).
-    """
-    from pyspark.sql import Window
-
-    from etl_macropulse_br_spark.functions.hashing import md5_long
-
-    W = sum(target_weights.values())
-    wmap = F.create_map(
-        *[F.lit(x) for kv in target_weights.items() for x in kv]
-    )
-    base = df.withColumn("__w", wmap[F.col(group_col)]).filter(
-        F.col("__w").isNotNull()
-    )
-    counts = base.groupBy(group_col, "__w").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    # a requested domain with ZERO rows is the limiting domain with
-    # n=0 -> the only output honoring the mixture is EMPTY. It has
-    # no row in `counts`, so the min() alone would silently skip it
-    # and return a mixture that violates the request; the
-    # domain-count check forces N_out to 0 in that case.
-    n_out = counts.agg(
-        F.when(
-            F.count(F.lit(1)) < F.lit(len(target_weights)), F.lit(0)
-        )
-        .otherwise(
-            F.min(F.floor(F.col("__n") * F.lit(W) / F.col("__w")))
-        )
-        .alias("__n_out")
-    )
-    # largest-remainder allocation over the |domains|-row takes
-    # table (a single-task window over <= |domains| rows — driver-
-    # broadcast scale, not a data window)
-    ideal = F.col("__w") * F.col("__n_out")
-    floors = counts.crossJoin(F.broadcast(n_out)).select(
-        group_col,
-        F.floor(ideal / F.lit(W)).cast("bigint").alias("__fl"),
-        F.pmod(ideal, F.lit(W)).cast("bigint").alias("__rem"),
-        F.col("__n_out"),
-    )
-    wrem = Window.orderBy(F.col("__rem").desc(), F.col(group_col).asc())
-    wall = Window.partitionBy()
-    takes = floors.select(
-        group_col,
-        (
-            F.col("__fl")
-            + F.when(
-                F.row_number().over(wrem)
-                <= F.first("__n_out").over(wall)
-                - F.sum("__fl").over(wall),
-                F.lit(1),
-            ).otherwise(F.lit(0))
-        ).alias("n_take"),
-    )
-    w = Window.partitionBy(group_col).orderBy(
-        md5_long(F.col(id_col).cast("string"), seed=seed),
-        F.col(id_col),
-    )
-    return (
-        base.drop("__w")
-        .withColumn("__rk", F.row_number().over(w))
-        .join(F.broadcast(takes), group_col)
-        .filter(F.col("__rk") <= F.col("n_take"))
-        .drop("__rk")
-    )

@@ -71,58 +71,3 @@ def mom_change(monthly: DataFrame, keys: list[str], value_col: str) -> DataFrame
     return monthly.withColumn(
         "mom_change", F.col(value_col) - F.lag(value_col, 1).over(w)
     )
-
-
-def gapfill_monthly(
-    monthly: DataFrame,
-    key_col: str,
-    month_col: str = "month",
-    val_col: str = "value",
-) -> DataFrame:
-    """Calendar gap-fill with last-value carry-forward — the
-    time-series interpolation step a macro-series gold mart needs
-    when source months are missing (the reference's monthly marts,
-    ``transform.py:111-134``, silently skip absent months; this
-    makes the hole explicit and filled).
-
-    Per key: materialize the full month calendar between that key's
-    first and last observed month (``sequence`` + explode of the
-    per-key bounds — the calendar derives from a |keys|-row
-    aggregate, never from the fact table), left-join the observed
-    values back, and carry the last non-null value forward with an
-    ``ignorenulls`` last() window. ``is_filled`` marks
-    CALENDAR-SYNTHESIZED rows — months absent from the input (r9
-    review fix: it previously tested the VALUE for null, so a real
-    observed month carrying a null value was mislabeled as
-    synthesized; such a month now reads is_filled=false while its
-    null value still receives the carry-forward fill).
-
-    Scale shape: the monthly input arrives already aggregated and
-    hash-partitioned by its groupBy keys, so the calendar join
-    broadcast-resolves (|keys| x months rows); the only new exchange
-    is the carry-forward window's partition on ``key_col``. Values
-    are copied, never recomputed — exact cross-engine.
-    """
-    from pyspark.sql import Window
-
-    bounds = monthly.groupBy(key_col).agg(
-        F.min(month_col).alias("mn"), F.max(month_col).alias("mx")
-    )
-    cal = bounds.select(
-        key_col,
-        F.explode(
-            F.sequence("mn", "mx", F.expr("INTERVAL 1 MONTH"))
-        ).alias(month_col),
-    )
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy(month_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    observed = monthly.withColumn("__obs", F.lit(True))
-    return cal.join(observed, [key_col, month_col], "left").select(
-        key_col,
-        month_col,
-        F.last(F.col(val_col), ignorenulls=True).over(w).alias(val_col),
-        F.col("__obs").isNull().alias("is_filled"),
-    )

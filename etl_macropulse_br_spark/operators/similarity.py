@@ -358,110 +358,6 @@ def ivf_topk(
     return cosine_topk(pruned, query_vec, k, vec_col, id_col)
 
 
-def knn_hard_negatives(
-    df: DataFrame,
-    k: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    n_bands: int = 3,
-    n_planes: int = 8,
-    dim: int | None = None,
-) -> DataFrame:
-    """Hard-negative mining: for EVERY vector, the top-``k`` most
-    cosine-similar vectors carrying a DIFFERENT label — the
-    contrastive-training pair-construction step, as a blocked
-    batch-KNN (a per-anchor top-k over the whole corpus, not a
-    single-query search like ``cosine_topk``).
-
-    Scale shape: candidates come from the shared banded-SRP blocking
-    (``dedup.srp_banded`` — the same buckets the near-dup pairing
-    uses, E[bucket] = n/2^n_planes per band), so the join is
-    bucket-local, never all-pairs; the label filter prunes before
-    the cosine; and ``row_number <= k`` per anchor plans
-    ``WindowGroupLimit`` — each map task pre-prunes to its local
-    top-k before the anchor exchange. Recall is the LSH trade
-    (an across-all-buckets true neighbor can be missed); the SQL
-    oracle replays identical blocks, so the gate is exact.
-
-    Returns (id_col, rn, neighbor_id, neighbor_label, cosine).
-
-    ``dim=None`` (r9 review fix) infers the vector width with a
-    one-row peek, the same pattern as ``embedding_near_dups`` — a
-    hard-coded default of 64 silently TRUNCATED longer vectors in
-    the projection (``element_at`` past the signs array returns
-    NULL and the sum skips it), so the blocking ran half-blind with
-    no error.
-    """
-    from pyspark.sql import Window
-
-    from etl_macropulse_br_spark.operators.dedup import srp_banded
-
-    if dim is None:
-        row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-        if row is None or row[0] is None:
-            raise ValueError(
-                "knn_hard_negatives: cannot infer vector width from "
-                "empty input (or null first vector); pass dim= "
-                "explicitly"
-            )
-        dim = len(row[0])
-    banded = srp_banded(df, vec_col, id_col, n_bands, n_planes, dim)
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.bucket") == F.col("r.bucket"),
-                F.col("l.id") != F.col("r.id"),  # directed: every anchor
-            ],
-        )
-        .select(F.col("l.id").alias("anchor"), F.col("r.id").alias("cand"))
-        .distinct()
-    )
-    e = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.col(label_col).alias("lbl"),
-    )
-    ea = e.select(
-        F.col("id").alias("anchor"),
-        F.col("v").alias("v_a"),
-        F.col("lbl").alias("lbl_a"),
-    )
-    eb = e.select(
-        F.col("id").alias("cand"),
-        F.col("v").alias("v_b"),
-        F.col("lbl").alias("lbl_b"),
-    )
-    scored = (
-        cand.join(ea, "anchor")
-        .join(eb, "cand")
-        .filter(F.col("lbl_a") != F.col("lbl_b"))
-        .select(
-            "anchor",
-            "cand",
-            "lbl_b",
-            cosine_sim(F.col("v_a"), F.col("v_b")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("anchor").orderBy(
-        F.col("cosine").desc(), F.col("cand").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("anchor").alias(id_col),
-            "rn",
-            F.col("cand").alias("neighbor_id"),
-            F.col("lbl_b").alias("neighbor_label"),
-            "cosine",
-        )
-    )
-
-
 def hybrid_rrf(
     lex: DataFrame,
     sem: DataFrame,

@@ -601,9 +601,9 @@ FROM folded
 
 def _cms_positions(base: Column, w: int, d: int) -> list[Column]:
     """The d counter positions of one value — Knuth middle bits of
-    the 2-universal affine maps (same decorrelation trick as the
-    Bloom probes: low bits of an affine map are a bijection of the
-    base's low bits, which would correlate the d rows)."""
+    the 2-universal affine maps (low bits of an affine map are a
+    bijection of the base's low bits, which would correlate the d
+    rows)."""
     from etl_macropulse_br_spark.functions.hashing import universal_hashes
 
     return [

@@ -1,4 +1,4 @@
-"""Skew-handling joins: salting and bucketing.
+"""Skew-handling joins: salting.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew
 at runtime; explicit salting remains the tool when one join key
@@ -11,20 +11,12 @@ every salt value; the join key becomes (key, salt). Each hot key's
 rows spread across n_salt partitions instead of one. Deterministic
 (pmod of a hash — no rand()) so retries/replays produce identical
 partitioning.
-
-``write_bucketed`` / bucketed tables: pre-shuffling both sides into
-the same bucket layout at write time makes later equi-joins
-shuffle-free (Catalyst recognizes compatible bucketing) — the right
-trade when a large fact is joined on the same key by many downstream
-queries.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from etl_macropulse_br_spark.sinks.writers import replace_table
 
 
 def salted_join(
@@ -92,46 +84,3 @@ def salted_join(
         replicated = replicated.hint("shuffle_hash")
     out = salted.join(replicated, on=[on, "__salt"], how=how)
     return out.drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed (optionally sorted) catalog table so
-    subsequent equi-joins/aggregations on ``bucket_col`` are
-    exchange-free. Replaces any prior table of the same name,
-    including an orphaned location from an earlier session.
-
-    The replace runs through :func:`sinks.writers.replace_table`:
-    the previous location is moved aside and restored if the write
-    throws, so a failed replacement never destroys the old data
-    (r4 ADVICE)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    replace_table(
-        df.sparkSession,
-        table,
-        lambda: writer.format("parquet").saveAsTable(table),
-    )
-
-
-def bucketed_join_is_shuffle_free(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> bool:
-    """Plan introspection helper (used by tests/audits): True when
-    the join of two bucketed tables on their bucket column plans no
-    Exchange above either scan."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    plan = (
-        left.join(right, on)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    return "Exchange hashpartitioning" not in plan

@@ -1,19 +1,17 @@
 """Text-analysis operators for training-data pipelines.
 
 Beyond the reference's surface (BASELINE.json north star): token
-counting, quality scoring, language-ID heuristic, and document
-fingerprinting over the ``documents`` table. Everything is built
-from Catalyst expressions (split / higher-order array functions /
-regexp) — no Python UDFs, so the operators stay inside whole-stage
-codegen and scale linearly with input splits at 100 TB.
+counting, quality scoring and a language-ID heuristic over the
+``documents`` table. Everything is built from Catalyst expressions
+(split / higher-order array functions / regexp) — no Python UDFs,
+so the operators stay inside whole-stage codegen and scale linearly
+with input splits at 100 TB.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from etl_macropulse_br_spark.functions.hashing import md5_long
 
 # Tiny fixed marker lists for the language-ID heuristic. Word-level
 # markers (not char n-grams) keep the scoring expressible in both
@@ -50,53 +48,6 @@ def bpe_ish_token_count(col: Column | str) -> Column:
         c, F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"), 0
     )
     return F.size(pieces)
-
-
-# PII patterns shared by the Spark operator and the SQL oracle.
-# Restricted to syntax RE2 (DuckDB) and java.util.regex agree on:
-# no backreferences, no lookaround. Order matters — emails first so
-# their digit runs can't be half-eaten by the phone pattern.
-#
-# Phone = 8-15 DIGITS (E.164 bounds) each optionally preceded by
-# separator chars — a digit-count anchor, not a raw span length: the
-# earlier span form (`[0-9][0-9 ()./-]{7,}[0-9]`) matched any >=9-char
-# stretch of digits-plus-separators, e.g. short number lists spread
-# out by spaces. Known residual false positive, stated: a date-time
-# like "2026-08-13 21" carries >=8 digits with listed separators and
-# still matches — excluding it needs lookaround, which RE2 lacks and
-# cross-engine parity forbids.
-PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("ipv4", r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b", "<IP>"),
-    ("phone", r"\+?[0-9](?:[ ()./-]{0,3}[0-9]){7,14}", "<PHONE>"),
-)
-
-
-def pii_scrub(
-    df: DataFrame, text_col: str = "text", counts: bool = True
-) -> DataFrame:
-    """Redact common PII shapes (emails, IPv4s, phone-like digit
-    runs) from a text column — the compliance pass every
-    training-data pipeline runs before a corpus ships.
-
-    Pure ``regexp_replace``/``regexp_count`` expressions — codegen,
-    scan-speed, no UDF. Patterns are deliberately limited to
-    RE2-compatible syntax so the exact same regexes run in the SQL
-    oracle; application order is fixed (emails before phones so a
-    phone pattern never consumes half an address). Adds
-    ``<kind>_count`` columns (pre-redaction occurrence counts) when
-    ``counts`` — the corpus-audit numbers — and replaces
-    ``text_col`` with the scrubbed text.
-    """
-    out = df
-    scrubbed = F.col(text_col)
-    for kind, pat, token in PII_PATTERNS:
-        if counts:
-            out = out.withColumn(
-                f"{kind}_count", F.regexp_count(scrubbed, F.lit(pat))
-            )
-        scrubbed = F.regexp_replace(scrubbed, pat, token)
-    return out.withColumn(text_col, scrubbed)
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -225,15 +176,6 @@ def language_id_ngram(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("pred_lang_ngram", F.expr(case_sql))
         .drop("__padded", "__best", *[f"__ng_{lang}" for lang in langs])
     )
-
-
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprint: 60-bit portable hash of
-    whitespace-normalized lowercase text — the exact-dedup key
-    (rolling/winnowed fingerprints are the MinHash path in
-    operators/dedup.py)."""
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), _WS, " ")
-    return df.withColumn("fingerprint", md5_long(normalized))
 
 
 def bm25_topk(
@@ -657,128 +599,6 @@ def boilerplate_stats(
             "n_common",
             F.round(frac, 9).alias("boilerplate_frac"),
             (frac > F.lit(max_frac)).alias("boilerplate"),
-        )
-    )
-
-
-def token_entropy(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document Shannon token entropy in bits — the
-    distribution-shape quality signal (low entropy = keyword
-    stuffing / template text; complements the ratio features in
-    :func:`quality_features` and the Gopher repetition stats).
-
-    Exactness strategy: counts aggregate as integers (one explode +
-    one (id, token-hash) group — int shuffles only; partial combine
-    applies), and the entropy fold runs over the per-doc count
-    VECTOR as ``-sum((c/n) * log2(c/n))`` — the sum is over a
-    ``collect_list`` sorted by (count, hash), so the float
-    accumulation order is deterministic, and the result is rounded
-    to 9dp for the cross-engine gate (libm log differences live ~7
-    digits deeper).
-    """
-    from etl_macropulse_br_spark.functions.hashing import base32
-    from etl_macropulse_br_spark.operators.util import spread
-
-    toks = tokens(F.col(text_col))
-    rows = spread(df).select(
-        F.col(id_col).alias("id"), F.explode(toks).alias("tok")
-    )
-    counts = rows.groupBy("id", base32("tok").alias("h")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    per_doc = counts.groupBy("id").agg(
-        F.sum("c").alias("n"),
-        F.array_sort(F.collect_list(F.struct("c", "h"))).alias("cs"),
-    )
-    p = lambda c: c["c"].cast("double") / F.col("n").cast("double")  # noqa: E731
-    ent = -F.aggregate(
-        F.col("cs"),
-        F.lit(0.0),
-        lambda acc, c: acc + p(c) * F.log2(p(c)),
-    )
-    return per_doc.select(
-        F.col("id").alias(id_col),
-        F.col("n").alias("n_tokens"),
-        F.size("cs").cast("bigint").alias("n_distinct"),
-        F.round(ent, 9).alias("token_entropy_bits"),
-    )
-
-
-def bigram_surprisal(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document bits-per-token under a corpus-trained bigram LM
-    with add-one smoothing — the PERPLEXITY-FILTER shape (score each
-    doc against a cheap n-gram LM of the corpus itself; outlier docs
-    are noise/TeX/tables). Classic KenLM-filter stand-in that stays
-    a pure relational plan:
-
-    - train: unigram and bigram COUNT tables over the normalized
-      token-hash stream (int-only shuffles, partial combine; vocab
-      V = global distinct count, a broadcast scalar via literal
-      cross-join of a 1-row aggregate — no driver action);
-    - score: P(w2|w1) = (c12 + 1) / (c1 + V) — a rational of exact
-      integers, so the per-bigram ``log2`` agrees cross-engine to
-      ~1 ulp; the per-doc sum folds over the POSITION-SORTED list
-      (``collect_list`` sorted by pos) so float accumulation order
-      is pinned, then rounds to 9dp for the hash gate.
-
-    Returns (id_col, n_bigrams, avg_surprisal_bits); docs with < 2
-    tokens score 0.0 over 0 bigrams.
-    """
-    from pyspark.sql import Window
-
-    from etl_macropulse_br_spark.functions.hashing import base32
-    from etl_macropulse_br_spark.operators.dedup import _WS, _norm_text
-    from etl_macropulse_br_spark.operators.util import spread
-
-    toks = F.split(_norm_text(text_col), _WS)
-    rows = spread(df).select(
-        F.col(id_col).alias("id"), F.posexplode(toks).alias("pos", "tok")
-    )
-    hashed = rows.select("id", "pos", base32("tok").alias("h1"))
-    w = Window.partitionBy("id").orderBy("pos")
-    bi = hashed.select(
-        "id", "pos", "h1", F.lead("h1", 1).over(w).alias("h2")
-    ).filter(F.col("h2").isNotNull())
-
-    uni = hashed.groupBy("h1").agg(F.count(F.lit(1)).alias("c1"))
-    big = bi.groupBy("h1", "h2").agg(F.count(F.lit(1)).alias("c12"))
-    vocab = uni.groupBy().agg(F.count(F.lit(1)).alias("v"))
-
-    logp = F.log2(
-        (F.col("c12") + F.lit(1)).cast("double")
-        / (F.col("c1") + F.col("v")).cast("double")
-    )
-    scored = (
-        bi.join(big, ["h1", "h2"])
-        .join(uni, "h1")
-        .crossJoin(F.broadcast(vocab))
-        .select("id", "pos", logp.alias("lp"))
-    )
-    per_doc = scored.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.array_sort(F.collect_list(F.struct("pos", "lp"))).alias("lps"),
-    )
-    total = F.aggregate(
-        F.col("lps"), F.lit(0.0), lambda acc, x: acc + x["lp"]
-    )
-    out = per_doc.select(
-        "id",
-        "n_bigrams",
-        F.round(-total / F.col("n_bigrams").cast("double"), 9).alias(
-            "avg_surprisal_bits"
-        ),
-    )
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(out, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-            F.coalesce("avg_surprisal_bits", F.lit(0.0)).alias(
-                "avg_surprisal_bits"
-            ),
         )
     )
 

@@ -23,20 +23,18 @@ Ratios of integers are emitted unrounded for the same reason.
 The embedding dot product uses the same sequential left-fold on
 both sides (Spark ``aggregate`` / DuckDB ``list_reduce``).
 
-SURVEY §2 coverage map (operator id → query; [aux] = consolidated
-into AUX_QUERIES in r3, still locally oracle-gated, covered in the
-declared 50 by the named superset query):
+SURVEY §2 coverage map (operator id → declared query):
   A1→monthly_last_by, A2/A3→monthly_last_by, A4→latest_event_per_user,
-  A5/P7→latest_month_activity, A6→recent_events_top10
-  (latest_event_global [aux]), A7→dedup_first_event,
+  A5/P7→latest_month_activity, A6→recent_events_top10,
+  A7→dedup_first_event,
   W1/W2→mom_avg_value, W3→latest_event_per_user,
   O1/O3→recent_events_top10, O2→top_movers, U1→union_event_slices,
   J1→regional_revenue + customer_order_counts,
-  P1-P6→filter_range_project + q1_pricing_summary
-  (status_filter [aux]), F1/F2/D1/D2→ptbr_roundtrip,
+  P1-P6→filter_range_project + q1_pricing_summary,
+  F1/F2/D1/D2→ptbr_roundtrip,
   S11→(every query runs via spark.sql views too;
-  scripts/query_sql.py), JSON ingest→props_struct_parse
-  (json_props_extract [aux]). Skew handling→skew_salted_rollup
+  scripts/query_sql.py), JSON ingest→props_struct_parse.
+  Skew handling→skew_salted_rollup
   (operators/skew.py salted_join, oracle-gated end-to-end, r3).
   (S1-S10 sources/sinks and the summary analytics live in sources/,
   sinks/, operators/summary.py and are exercised by the
@@ -52,14 +50,11 @@ TPC-H classics: q1_pricing_summary, q3_shipping_priority,
 SQL-surface beyond the reference (§2.3/2.4/2.5/2.7 'not present —
   build anyway'): semi_anti_customers, cube_lineitem,
   rank_orders_window, pivot_status_priority, sessionize_events,
-  asof_click_view, distinct_parts, range_join_buckets,
-  price_percentiles, user_set_ops, value_quartiles,
-  nation_customer_digest, top_tokens, zscore_events.
+  asof_click_view, range_join_buckets, price_percentiles,
+  user_set_ops, nation_customer_digest, top_tokens, zscore_events.
 Training-data extension ops: docs_exact_dedup, docs_text_stats,
-  docs_token_totals, docs_lang_id_ngram (docs_lang_id [aux]),
-  docs_winnow_fp (docs_fingerprint [aux]), docs_simhash,
-  docs_near_dups (docs_minhash_sig [aux] — the near-dup oracle
-  replays the identical signature stage), docs_bm25_topk (log-free
+  docs_token_totals, docs_lang_id_ngram, docs_winnow_fp,
+  docs_simhash, docs_near_dups, docs_bm25_topk (log-free
   rational idf), docs_repetition (Gopher-style repetition filters,
   hashed token stream since r3), docs_curated
   (quality->exact-dedup->near-dup->split composition),
@@ -73,9 +68,9 @@ Sequence packing (r15): docs_pack_chunks (declared — closed-form
 As-of family: asof_click_view (backward), asof_forward_click_view;
   nearest is pandas-differential-tested (tests/test_asof.py).
 Late-r5 and r6 aux additions (all locally oracle-gated):
-  docs_chunk_dedup / docs_span_dedup / docs_span_dedup_keep_first
-  (exact-substring span removal: disjoint-chunk, sliding-window
-  symmetric, and keep-globally-first forms), embedding_kmeans
+  docs_chunk_dedup / docs_span_dedup (exact-substring span
+  removal: disjoint-chunk and sliding-window symmetric forms),
+  embedding_kmeans
   (integer-lattice Lloyd — iterative with a FULL hash gate),
   embedding_ivf_kmeans_topk (train+serve IVF in one lazy plan),
   embedding_pq_rerank_topk (r6: IVF + product-quantization ADC
@@ -89,18 +84,8 @@ Late-r5 and r6 aux additions (all locally oracle-gated):
   target/raw likelihood ratio, Xie et al. 2023), docs_dsir_sample
   (r6: Efraimidis-Spirakis without-replacement importance
   resampling over those weights, deterministic md5 uniforms),
-  docs_mixture_balance (r6: deterministic training-mixture
-  balancing — integer-exact per-domain takes, hash-prefix rows),
-  docs_decontaminate_bloom (r6: fixed-size portable Bloom bitset
-  scale path — no false negatives, full hash gate incl. the
-  bitset),
-  monthly_gapfill_orders (calendar gap-fill with carry-forward),
-  docs_token_entropy / docs_bigram_surprisal (distribution-shape
-  quality signals; the perplexity-filter shape), docs_stratified_
-  exact_k (WindowGroupLimit-pinned), docs_exact_dedup_collated
-  (Spark-4 UTF8_LCASE aggregate), embedding_hard_negatives
-  (blocked batch-KNN contrastive mining), docs_containment
-  (directional sub-document duplication, rare-shingle blocking).
+  docs_stratified_exact_k (WindowGroupLimit-pinned),
+  docs_exact_dedup_collated (Spark-4 UTF8_LCASE aggregate).
 r7 aux additions (all locally oracle-gated at both scales under
   both sessions):
   embedding_pq_batch_topk / embedding_ivf_batch_topk (batch-query
@@ -112,8 +97,7 @@ r7 aux additions (all locally oracle-gated at both scales under
   full-corpus), embedding_cosine_batch_topk (batch brute-force
   baseline), docs_dsir_sample_by_lang (per-group log-domain E-S
   importance resampling), docs_hybrid_rrf (reciprocal-rank fusion
-  of BM25 + cosine lists, Cormack 2009), docs_contamination_report
-  (per (train, eval) shared-shingle audit trace),
+  of BM25 + cosine lists, Cormack 2009),
   docs_cms_token_counts (Count-Min point estimates — mergeable
   d*w counters), events_hll_distinct / events_hll_by_type
   (portable HyperLogLog, global and per-group, mergeable registers).
@@ -121,8 +105,8 @@ r7 aux additions (all locally oracle-gated at both scales under
   pow(2, log2_weight) underflow at any scale); embedding_semdedup /
   docs_curated_semantic run the paper's auto-k (ceil(sqrt(n)));
   k-means seeds from hash-ordered ids.
-  tools/fuzz_oracle.py re-runs the docs/embeddings/events registry
-  on seed-deterministic adversarial corpora (83/83 across seeds).
+  tools/fuzz_oracle.py re-runs the full registry on
+  seed-deterministic adversarial corpora.
 """
 
 from __future__ import annotations
@@ -141,16 +125,12 @@ from etl_macropulse_br_spark.functions.hashing import md5_long, md5_long_sql
 from etl_macropulse_br_spark.operators.dedup import (
     exact_dedup,
     minhash_near_dups,
-    minhash_signature,
     simhash,
-    word_shingles,
 )
-from etl_macropulse_br_spark.operators.similarity import cosine_topk, cosine_sim, ivf_topk
+from etl_macropulse_br_spark.operators.similarity import cosine_sim
 from etl_macropulse_br_spark.operators.text import (
     LANG_MARKERS,
     bpe_ish_token_count,
-    fingerprint,
-    language_id,
     quality_features,
     token_count,
 )
@@ -990,31 +970,6 @@ WHERE l_quantity > 30 AND l_quantity <= 40
 """
 
 
-def status_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Case-insensitive equality/membership filters (P3/P6, F3-F5)."""
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.filter(
-            F.lower(F.col("o_orderstatus").cast("string")).isin("f", "o")
-        )
-        .groupBy("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            (F.sum(_scaled("o_totalprice")) / F.lit(100.0)).alias("total_price"),
-        )
-    )
-
-
-STATUS_FILTER_SQL = """
-SELECT o_orderstatus, o_orderpriority,
-       count(*) AS n_orders,
-       sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) / 100.0 AS total_price
-FROM orders
-WHERE lower(CAST(o_orderstatus AS VARCHAR)) IN ('f', 'o')
-GROUP BY o_orderstatus, o_orderpriority
-"""
-
-
 def dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic dedup-keep-first (A7, SURVEY §4.2 trap #2).
 
@@ -1096,22 +1051,6 @@ SELECT event_type, count(*) AS n_events,
 FROM m
 WHERE month = (SELECT max(month) FROM m)
 GROUP BY event_type
-"""
-
-
-def latest_event_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global latest row (A6): top-1 with deterministic tiebreak."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.orderBy(F.col("ts").desc(), F.col("event_id").desc())
-        .limit(1)
-        .select("event_id", "ts", "event_type", "value")
-    )
-
-
-LATEST_EVENT_GLOBAL_SQL = """
-SELECT event_id, ts, event_type, value
-FROM events ORDER BY ts DESC, event_id DESC LIMIT 1
 """
 
 
@@ -1291,23 +1230,6 @@ SELECT l_orderkey, l_linenumber,
        CAST(strptime(strftime(l_shipdate, '%d/%m/%Y'), '%d/%m/%Y') AS DATE)
          AS reparsed_date
 FROM lineitem
-"""
-
-
-def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON prop extraction over events.props (SURVEY §2.10 note:
-    from_json/get_json_object at the ingest boundary)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("k_value"),
-    )
-
-
-JSON_PROPS_EXTRACT_SQL = """
-SELECT event_id,
-       CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value
-FROM events
 """
 
 
@@ -1579,24 +1501,6 @@ FROM c ASOF LEFT JOIN v ON c.user_id = v.user_id AND c.ts <= v.ts
 """
 
 
-def distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregation (count-distinct surface)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_suppliers"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-DISTINCT_PARTS_SQL = """
-SELECT l_returnflag,
-       count(DISTINCT l_partkey) AS n_parts,
-       count(DISTINCT l_suppkey) AS n_suppliers,
-       count(*) AS n_items
-FROM lineitem GROUP BY l_returnflag
-"""
-
 _VALUE_BUCKETS = [
     (0.0, 50.0, "low"),
     (50.0, 150.0, "mid"),
@@ -1844,30 +1748,6 @@ SELECT 'click_no_purchase' AS cohort, user_id
 FROM (SELECT user_id FROM events WHERE event_type = 'click'
       EXCEPT
       SELECT user_id FROM events WHERE event_type = 'purchase')
-"""
-
-
-def value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile ranking (analytic surface): quartile of each event's
-    value within its type, deterministic tiebreak on event_id."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("value").asc(), F.col("event_id").asc()
-    )
-    return ev.select(
-        "event_id",
-        "event_type",
-        "value",
-        F.ntile(4).over(w).alias("quartile"),
-    )
-
-
-VALUE_QUARTILES_SQL = """
-SELECT event_id, event_type, value,
-       ntile(4) OVER (
-         PARTITION BY event_type ORDER BY value ASC, event_id ASC
-       ) AS quartile
-FROM events
 """
 
 
@@ -2666,40 +2546,6 @@ FROM documents
 """
 
 
-def docs_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return language_id(docs).select("doc_id", "lang", "pred_lang")
-
-
-def _lang_id_sql() -> str:
-    langs = sorted(LANG_MARKERS)
-    score_cols = ",\n       ".join(
-        f"len(list_filter(toks, x -> lower(x) IN "
-        f"({', '.join(repr(w) for w in LANG_MARKERS[lang])})))"
-        f" AS score_{lang}"
-        for lang in langs
-    )
-    best = f"greatest({', '.join('score_' + lang for lang in langs)})"
-    case_arms = "\n            ".join(
-        f"WHEN score_{lang} = best THEN '{lang}'" for lang in langs
-    )
-    return f"""
-WITH t AS (SELECT doc_id, lang, {_TOKS_SQL} AS toks FROM documents),
-s AS (SELECT doc_id, lang,
-       {score_cols}
-      FROM t),
-m AS (SELECT *, {best} AS best FROM s)
-SELECT doc_id, lang,
-       CASE WHEN best = 0 THEN 'und'
-            {case_arms}
-            ELSE 'und' END AS pred_lang
-FROM m
-"""
-
-
-DOCS_LANG_ID_SQL = _lang_id_sql()
-
-
 def docs_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-trigram language ID (Cavnar–Trenkle style; see
     operators/text.py:language_id_ngram)."""
@@ -2910,61 +2756,6 @@ FROM words LEFT JOIN bg ON words.id = bg.id
 DOCS_REPETITION_SQL = _repetition_sql()
 
 
-def docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return fingerprint(docs).select("doc_id", "fingerprint")
-
-
-DOCS_FINGERPRINT_SQL = f"""
-SELECT doc_id, {md5_long_sql(_NORM_SQL)} AS fingerprint
-FROM documents
-"""
-
-def docs_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_macropulse_br_spark.operators.dedup import (
-        minhash_signature_table,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return minhash_signature_table(docs, k=4).withColumnRenamed("id", "doc_id")
-
-
-def _minhash_sig_sql() -> str:
-    from etl_macropulse_br_spark.functions.hashing import (
-        _MASK32,
-        _MINHASH_P,
-        _lcg_constants,
-        base32_sql,
-    )
-    from etl_macropulse_br_spark.operators.dedup import (
-        token_shingle_hashes_sql,
-    )
-
-    cols = ",\n       ".join(
-        f"list_min(list_transform(bases, h -> ((h * {a} + {b}) % {_MINHASH_P}))) AS m{i}"
-        for i, (a, b) in enumerate(_lcg_constants(4))
-    )
-    return f"""
-WITH t AS (
-  SELECT doc_id, string_split_regex({_NORM_SQL}, '\\s+') AS ntoks
-  FROM documents
-), h_t AS (
-  SELECT doc_id, list_transform(ntoks, t -> {base32_sql('t')}) AS th FROM t
-), sh_t AS (
-  SELECT doc_id, {token_shingle_hashes_sql(3)} AS sh FROM h_t
-), b_t AS (
-  SELECT doc_id, list_transform(sh, x -> (x & {_MASK32})) AS bases
-  FROM sh_t
-)
-SELECT doc_id,
-       {cols}
-FROM b_t
-"""
-
-
-DOCS_MINHASH_SIG_SQL = _minhash_sig_sql()
-
-
 def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return simhash(docs, bits=16).select("doc_id", "simhash")
@@ -2990,52 +2781,6 @@ SELECT doc_id, CAST({terms} AS BIGINT) AS simhash FROM t
 
 
 DOCS_SIMHASH_SQL = _simhash_sql()
-
-
-def docs_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: pigeonhole banding (Hamming ≤ 3 ⇒
-    exact agreement on ≥1 of 4 bands) + bit_count(xor) verify on
-    colliding pairs only (operators/dedup.py:simhash_near_dups).
-    32-bit sketch — the 16-bit sketch `docs_simhash` declares is too
-    coarse for pairing (random docs collide within 3 bits); wider
-    sketches cost only more sum columns in the same single
-    aggregate."""
-    from etl_macropulse_br_spark.operators.dedup import (
-        simhash_near_dups,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    out = simhash_near_dups(docs, bits=32, max_hamming=3)
-    return out.select(
-        "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-def _simhash_near_dups_sql(bits: int = 16, max_hamming: int = 3) -> str:
-    n_bands = max_hamming + 1
-    width = bits // n_bands
-    mask = (1 << width) - 1
-    band_selects = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id AS id, simhash, {b} AS band,"
-        f" (simhash >> {b * width}) & {mask} AS band_bits FROM sk"
-        for b in range(n_bands)
-    )
-    return f"""
-WITH sk AS (
-{_simhash_sql(bits)}
-), banded AS (
-{band_selects}
-)
-SELECT DISTINCT l.id AS id_a, r.id AS id_b,
-       CAST(bit_count(xor(l.simhash, r.simhash)) AS INTEGER) AS hamming
-FROM banded l
-JOIN banded r
-  ON l.band = r.band AND l.band_bits = r.band_bits AND l.id < r.id
-WHERE bit_count(xor(l.simhash, r.simhash)) <= {max_hamming}
-"""
-
-
-DOCS_SIMHASH_NEAR_DUPS_SQL = _simhash_near_dups_sql(bits=32)
 
 
 def docs_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3483,137 +3228,6 @@ LEFT JOIN hits h USING (doc_id)
 
 
 DOCS_DECONTAMINATE_SQL = _decontaminate_sql()
-
-
-def docs_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audit trace behind docs_decontaminate's booleans: WHICH
-    eval docs each contaminated training doc collides with and the
-    size of the shared distinct-shingle set
-    (operators/dedup.py:contamination_report) — the evidence a
-    release review reads to separate verbatim benchmark leakage
-    from one-shingle idiom collisions. Same doc_id % 97 eval
-    stand-in as docs_decontaminate."""
-    from etl_macropulse_br_spark.operators.dedup import (
-        contamination_report,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    eval_df = docs.filter(F.col("doc_id") % 97 == 0)
-    train = docs.filter(F.col("doc_id") % 97 != 0)
-    return contamination_report(train, eval_df)
-
-
-def _contamination_report_sql(n_shingle: int = 3, mod: int = 97) -> str:
-    from etl_macropulse_br_spark.functions.hashing import base32_sql
-    from etl_macropulse_br_spark.operators.dedup import (
-        token_shingle_hashes_sql,
-    )
-
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         string_split_regex(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), '\\s+') AS ntoks
-  FROM documents
-), h_t AS (
-  SELECT doc_id, list_transform(ntoks, t -> {base32_sql("t")}) AS th FROM t
-), sh_t AS (
-  SELECT doc_id, {token_shingle_hashes_sql(n_shingle)} AS sh FROM h_t
-), eval_sh AS (
-  SELECT DISTINCT doc_id AS eval_id, unnest(sh) AS sh_h
-  FROM sh_t WHERE doc_id % {mod} = 0
-), tr_sh AS (
-  SELECT DISTINCT doc_id AS train_id, unnest(sh) AS sh_h
-  FROM sh_t WHERE doc_id % {mod} <> 0
-)
-SELECT tr.train_id, e.eval_id, count(*) AS n_shared_shingles
-FROM tr_sh tr JOIN eval_sh e USING (sh_h)
-GROUP BY tr.train_id, e.eval_id
-"""
-
-
-DOCS_CONTAMINATION_REPORT_SQL = _contamination_report_sql()
-
-
-def docs_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter decontamination — the scale path for when the
-    distinct eval-shingle set outgrows a broadcast: the eval suite
-    compresses to a fixed-size portable Bloom bitset (built from the
-    repo's md5 + 2-universal family, so unlike an engine-native
-    bloom the WHOLE operator replays bit-identically in the oracle);
-    the training side probes it map-side. No false negatives by
-    construction (differential-pinned against the exact variant);
-    false positives only over-remove
-    (operators/dedup.py:decontaminate_bloom)."""
-    from etl_macropulse_br_spark.operators.dedup import decontaminate_bloom
-
-    docs = _t(spark, sf_dir, "documents")
-    eval_df = docs.filter(F.col("doc_id") % 97 == 0)
-    train = docs.filter(F.col("doc_id") % 97 != 0)
-    return decontaminate_bloom(train, eval_df)
-
-
-def _decontaminate_bloom_sql(
-    n_shingle: int = 3,
-    mod: int = 97,
-    n_bits: int = 1 << 16,
-    n_hashes: int = 4,
-) -> str:
-    from etl_macropulse_br_spark.functions.hashing import (
-        _lcg_constants,
-        base32_sql,
-    )
-    from etl_macropulse_br_spark.operators.dedup import (
-        token_shingle_hashes_sql,
-    )
-
-    n_words = (n_bits + 59) // 60  # 60 usable bits/word (see operator)
-    m32 = 1 << 32
-
-    def pos(i, a, b):
-        base = f"(((sh_h % {m32}) + {m32}) % {m32})"
-        h = f"(({base} * {a} + {b}) >> 16)"
-        return f"((({h} % {n_bits}) + {n_bits}) % {n_bits})"
-
-    lcg = _lcg_constants(n_hashes)
-    pair_sql = ", ".join(
-        f"({pos(i, a, b)} // 60, CAST(1 AS BIGINT) << ({pos(i, a, b)} % 60))"
-        for i, (a, b) in enumerate(lcg)
-    )
-    hit_sql = " AND ".join(
-        f"(bf[{pos(i, a, b)} // 60 + 1] & "
-        f"(CAST(1 AS BIGINT) << ({pos(i, a, b)} % 60)))"
-        f" = (CAST(1 AS BIGINT) << ({pos(i, a, b)} % 60))"
-        for i, (a, b) in enumerate(lcg)
-    )
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         string_split_regex(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), '\\s+') AS ntoks
-  FROM documents
-), h_t AS (
-  SELECT doc_id, list_transform(ntoks, t -> {base32_sql("t")}) AS th FROM t
-), sh_t AS (
-  SELECT doc_id, {token_shingle_hashes_sql(n_shingle)} AS sh FROM h_t
-), eval_sh AS (
-  SELECT DISTINCT unnest(sh) AS sh_h FROM sh_t WHERE doc_id % {mod} = 0
-), wm AS (
-  SELECT p.* FROM eval_sh, LATERAL (VALUES {pair_sql}) AS p(word, mask)
-), words AS (
-  SELECT word, bit_or(mask) AS bits FROM wm GROUP BY word
-), dense AS (
-  SELECT list(coalesce(w2.bits, 0) ORDER BY g.w) AS bf
-  FROM (SELECT unnest(generate_series(0, {n_words - 1})) AS w) g
-  LEFT JOIN words w2 ON w2.word = g.w
-), tr_sh AS (
-  SELECT doc_id, unnest(sh) AS sh_h FROM sh_t WHERE doc_id % {mod} <> 0
-)
-SELECT tr.doc_id, max({hit_sql}) AS contaminated
-FROM tr_sh tr CROSS JOIN dense
-GROUP BY tr.doc_id
-"""
-
-
-DOCS_DECONTAMINATE_BLOOM_SQL = _decontaminate_bloom_sql()
 
 
 def docs_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4073,63 +3687,6 @@ FROM stats
 DOCS_BOILERPLATE_SQL = _boilerplate_sql()
 
 
-def docs_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-decile bucketing of the hashed-linear model score (the
-    curriculum/mixture-weighting stage: rank the corpus by classifier
-    score, then sample per decile), aggregated to order-free
-    per-decile stats (count + min/max — an avg of doubles would be
-    summation-order-dependent cross-engine).
-
-    Scale-right formulation: a global ``ntile(10)`` window would pin
-    the whole corpus to ONE task (the anti-pattern the
-    price_percentiles rewrite removed). But the per-decile AGGREGATE
-    needs only 20 order statistics — decile d of n rows covers ranks
-    [lo_d, hi_d] by pure arithmetic (base = n div 10, rem = n mod 10,
-    lo_d = (d-1)·base + min(d-1, rem) + 1, hi_d = lo_d + size_d - 1,
-    exactly ntile's allocation), and min/max of decile d ARE the
-    values at ranks lo_d / hi_d. So this reuses the histogram-refine
-    two-pass: (1) map-side-combined fixed-width score-bucket counts —
-    shuffle is |buckets| rows at any corpus size; (2) a window over
-    that tiny table finds buckets covering any of the 20 target
-    ranks; (3) one refine re-scan ranks only inside those buckets
-    (bounded sorts), conditional-min picks the 20 values; a literal
-    ``stack`` unpivots to (bucket, n_docs, min, max). n_docs is
-    arithmetic in n — no second count. Empty deciles (n < 10) drop
-    out, matching ntile. The oracle keeps the naive window-ntile
-    formulation — it checks semantics, not the plan."""
-    from etl_macropulse_br_spark.operators.features import exact_ntile_stats
-    from etl_macropulse_br_spark.operators.text import hashed_linear_score
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = hashed_linear_score(docs).select("doc_id", "model_score")
-    return exact_ntile_stats(scored, "model_score", n_tiles=10).select(
-        "bucket",
-        F.col("n_rows").alias("n_docs"),
-        F.round(F.col("min_val"), 9).alias("min_score"),
-        F.round(F.col("max_val"), 9).alias("max_score"),
-    )
-
-
-def _quality_buckets_sql() -> str:
-    score_sql = _model_score_sql()
-    return f"""
-WITH scored AS (
-  SELECT doc_id, model_score FROM ({score_sql})
-), b AS (
-  SELECT doc_id, model_score,
-         ntile(10) OVER (ORDER BY model_score, doc_id) AS bucket
-  FROM scored
-)
-SELECT bucket, count(*) AS n_docs,
-       round(min(model_score), 9) AS min_score,
-       round(max(model_score), 9) AS max_score
-FROM b GROUP BY bucket
-"""
-
-
-DOCS_QUALITY_BUCKETS_SQL = _quality_buckets_sql()
-
-
 def docs_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring span removal (disjoint-chunk approximation of
     the Lee et al. 2022 suffix-array dedup): delete every 10-token
@@ -4234,135 +3791,6 @@ GROUP BY m.doc_id
 DOCS_SPAN_DEDUP_SQL = _span_dedup_sql()
 
 
-def docs_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directional containment pairs (Broder's asymmetric
-    resemblance — sub-document duplication) under rare-shingle
-    blocking (operators/dedup.py:containment_pairs; candidate = a
-    shared shingle with df in 2..5, so the inverted-index self-join
-    is bounded at any corpus size and exactly SQL-replayable)."""
-    from etl_macropulse_br_spark.operators.dedup import containment_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return containment_pairs(docs)
-
-
-def _containment_sql(
-    n_shingle: int = 3, threshold: float = 0.5, max_df: int = 5
-) -> str:
-    from etl_macropulse_br_spark.functions.hashing import base32_sql
-    from etl_macropulse_br_spark.operators.dedup import (
-        token_shingle_hashes_sql,
-    )
-
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         string_split_regex(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), '\\s+') AS ntoks
-  FROM documents
-), h_t AS (
-  SELECT doc_id, list_transform(ntoks, tok -> {base32_sql("tok")}) AS th FROM t
-), sh AS (
-  SELECT doc_id, unnest({token_shingle_hashes_sql(n_shingle)}) AS sh_h FROM h_t
-), dfq AS (
-  SELECT sh_h, count(*) AS c FROM sh GROUP BY sh_h
-), rare AS (
-  SELECT sh_h FROM dfq WHERE c BETWEEN 2 AND {max_df}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sh a
-  JOIN rare r ON a.sh_h = r.sh_h
-  JOIN sh b ON b.sh_h = a.sh_h AND a.doc_id < b.doc_id
-), sizes AS (
-  SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT c.id_a, c.id_b, count(*) AS i
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_a
-  JOIN sh b ON b.doc_id = c.id_b AND b.sh_h = a.sh_h
-  GROUP BY c.id_a, c.id_b
-)
-SELECT i.id_a, i.id_b,
-       CAST(i.i AS DOUBLE) / na.n AS containment_a,
-       CAST(i.i AS DOUBLE) / nb.n AS containment_b
-FROM inter i
-JOIN sizes na ON na.doc_id = i.id_a
-JOIN sizes nb ON nb.doc_id = i.id_b
-WHERE greatest(CAST(i.i AS DOUBLE) / na.n, CAST(i.i AS DOUBLE) / nb.n) >= {threshold}
-"""
-
-
-DOCS_CONTAINMENT_SQL = _containment_sql()
-
-
-def docs_span_dedup_keep_first(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Keep-globally-first span removal (the Lee et al. deletion
-    policy at gram granularity — within-doc repeats deduplicated,
-    exactly one corpus copy of each duplicated run survives, and
-    winner ranges are protected from overlapping non-winner
-    removals so the surviving copy is always intact;
-    operators/dedup.py:span_dedup_keep_first)."""
-    from etl_macropulse_br_spark.operators.dedup import (
-        span_dedup_keep_first,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return span_dedup_keep_first(docs)
-
-
-def _span_keep_first_sql(k: int = 10, min_count: int = 2) -> str:
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         string_split_regex(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), '\\s+') AS toks
-  FROM documents
-), g0 AS (
-  SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks) - {k - 1}, 0))) AS p
-  FROM t
-), g AS (
-  SELECT doc_id, p, array_to_string(list_slice(toks, p, p + {k - 1}), ' ') AS gram
-  FROM g0
-), ranked AS (
-  SELECT doc_id, p,
-         count(*) OVER (PARTITION BY gram) AS occ,
-         row_number() OVER (PARTITION BY gram ORDER BY doc_id, p) AS rk
-  FROM g
-), hits AS (
-  SELECT doc_id, p FROM ranked WHERE occ >= {min_count} AND rk > 1
-), wins AS (
-  SELECT doc_id, p FROM ranked WHERE occ >= {min_count} AND rk = 1
-), spans AS (
-  SELECT doc_id, count(*) AS n_spans FROM hits GROUP BY doc_id
-), cov AS (
-  SELECT DISTINCT doc_id, unnest(generate_series(p, p + {k - 1})) AS i FROM hits
-), covw AS (
-  SELECT DISTINCT doc_id, unnest(generate_series(p, p + {k - 1})) AS i FROM wins
-), tk AS (
-  SELECT doc_id, toks, len(toks) AS n, unnest(generate_series(1, len(toks))) AS i
-  FROM t
-), m AS (
-  -- winner protection: a token inside the corpus-first (winner)
-  -- copy of a duplicated gram survives even when an overlapping
-  -- non-winner gram's removal range covers it
-  SELECT tk.doc_id, tk.n, tk.i, tk.toks[tk.i] AS tok,
-         (cov.i IS NOT NULL AND covw.i IS NULL) AS is_cov
-  FROM tk LEFT JOIN cov ON tk.doc_id = cov.doc_id AND tk.i = cov.i
-  LEFT JOIN covw ON tk.doc_id = covw.doc_id AND tk.i = covw.i
-)
-SELECT m.doc_id,
-       CAST(max(m.n) AS BIGINT) AS n_tokens,
-       CAST(coalesce(max(sp.n_spans), 0) AS BIGINT) AS n_spans_removed,
-       CAST(coalesce(sum(CASE WHEN m.is_cov THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_removed,
-       coalesce(string_agg(CASE WHEN NOT m.is_cov THEN m.tok END, ' ' ORDER BY m.i), '') AS clean_text
-FROM m LEFT JOIN spans sp ON sp.doc_id = m.doc_id
-GROUP BY m.doc_id
-"""
-
-
-DOCS_SPAN_KEEP_FIRST_SQL = _span_keep_first_sql()
-
-
 def docs_exact_dedup_collated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-4 COLLATION twin of the exact-dedup grouping: group the
     whitespace-normalized text under ``UTF8_LCASE`` instead of
@@ -4401,46 +3829,6 @@ FROM (
 )
 GROUP BY t
 """
-
-
-def docs_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc Shannon token entropy (operators/text.py:
-    token_entropy): integer count vector per doc (int-only
-    shuffles), deterministic-order float fold, 9dp-rounded gate."""
-    from etl_macropulse_br_spark.operators.text import token_entropy
-
-    docs = _t(spark, sf_dir, "documents")
-    return token_entropy(docs)
-
-
-def _token_entropy_sql() -> str:
-    from etl_macropulse_br_spark.functions.hashing import base32_sql
-
-    return f"""
-WITH t AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-  FROM documents
-), counts AS (
-  SELECT doc_id, {base32_sql("tok")} AS h, count(*) AS c
-  FROM t GROUP BY doc_id, h
-), per_doc AS (
-  SELECT doc_id, sum(c) AS n,
-         list({{'c': c, 'h': h}} ORDER BY c, h) AS cs
-  FROM counts GROUP BY doc_id
-)
-SELECT doc_id,
-       CAST(n AS BIGINT) AS n_tokens,
-       CAST(len(cs) AS BIGINT) AS n_distinct,
-       round(-list_reduce(
-         list_prepend(0.0, list_transform(cs,
-           s -> (CAST(s.c AS DOUBLE) / CAST(n AS DOUBLE))
-                * log2(CAST(s.c AS DOUBLE) / CAST(n AS DOUBLE)))),
-         (a, b) -> a + b), 9) AS token_entropy_bits
-FROM per_doc
-"""
-
-
-DOCS_TOKEN_ENTROPY_SQL = _token_entropy_sql()
 
 
 def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4541,57 +3929,6 @@ def docs_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def docs_mixture_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uniform-language training mixture over the documents table:
-    deterministic hash-prefix downsampling of every language to the
-    size of the rarest one (operators/features.py:mixture_balance
-    with equal weights). Output is (lang, doc_id, n_take) — the
-    balanced corpus plus the per-domain take for audit."""
-    from etl_macropulse_br_spark.operators.features import mixture_balance
-
-    docs = _t(spark, sf_dir, "documents")
-    out = mixture_balance(
-        docs, "lang", {la: 1 for la in ("en", "de", "es", "fr", "zh")}
-    )
-    return out.select("lang", "doc_id", "n_take")
-
-
-DOCS_MIXTURE_BALANCE_SQL = f"""
-WITH base AS (
-  SELECT doc_id, lang FROM documents
-  WHERE lang IN ('en', 'de', 'es', 'fr', 'zh')
-), counts AS (
-  SELECT lang, count(*) AS n FROM base GROUP BY lang
-), n_out AS (
-  -- a requested domain with zero rows limits the mixture to empty
-  SELECT CASE WHEN count(*) < 5 THEN 0
-         ELSE min(CAST(floor(n * 5.0 / 1) AS BIGINT)) END AS v
-  FROM counts
-), takes AS (
-  -- largest-remainder allocation: floors plus one extra row for the
-  -- (v - sum(floors)) domains with the largest remainder (all zero
-  -- here — equal weights divide v exactly — but the formulation
-  -- mirrors operators/features.py:mixture_balance)
-  SELECT lang,
-         CAST(floor(1 * v / 5.0) AS BIGINT)
-         + CASE WHEN row_number() OVER (ORDER BY (1 * v) % 5 DESC, lang ASC)
-                <= v - sum(CAST(floor(1 * v / 5.0) AS BIGINT)) OVER ()
-           THEN 1 ELSE 0 END AS n_take
-  FROM counts CROSS JOIN n_out
-), ranked AS (
-  SELECT doc_id, lang,
-         row_number() OVER (
-           PARTITION BY lang
-           ORDER BY {md5_long_sql("CAST(doc_id AS VARCHAR)", seed=0)}, doc_id
-         ) AS rk
-  FROM base
-)
-SELECT r.lang, r.doc_id, t.n_take
-FROM ranked r JOIN takes t ON t.lang = r.lang
-WHERE r.rk <= t.n_take
-"""
-
-
 DOCS_DSIR_SAMPLE_SQL = f"""
 WITH dw AS ({DOCS_DSIR_SQL}),
 keyed AS (
@@ -4657,66 +3994,6 @@ QUALIFY es_rk <= 20
 """
 
 
-def docs_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perplexity-filter shape: per-doc bits-per-token under a
-    corpus-trained add-one bigram LM (operators/text.py:
-    bigram_surprisal — int count tables, exact-rational log2 args,
-    position-pinned float fold, 9dp gate)."""
-    from etl_macropulse_br_spark.operators.text import bigram_surprisal
-
-    docs = _t(spark, sf_dir, "documents")
-    return bigram_surprisal(docs)
-
-
-def _bigram_surprisal_sql() -> str:
-    from etl_macropulse_br_spark.functions.hashing import base32_sql
-
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         string_split_regex(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), '\\s+') AS toks
-  FROM documents
-), r AS (
-  SELECT doc_id, unnest(generate_series(1, len(toks))) AS pos, toks FROM t
-), hashed AS (
-  SELECT doc_id, pos, {base32_sql("toks[pos]")} AS h1,
-         CASE WHEN pos < len(toks) THEN {base32_sql("toks[pos + 1]")} END AS h2
-  FROM r
-), uni AS (
-  SELECT h1, count(*) AS c1 FROM hashed GROUP BY h1
-), vocab AS (
-  SELECT count(*) AS v FROM uni
-), bi AS (
-  SELECT doc_id, pos, h1, h2 FROM hashed WHERE h2 IS NOT NULL
-), big AS (
-  SELECT h1, h2, count(*) AS c12 FROM bi GROUP BY h1, h2
-), scored AS (
-  SELECT bi.doc_id, bi.pos,
-         log2(CAST(big.c12 + 1 AS DOUBLE) / CAST(uni.c1 + vocab.v AS DOUBLE)) AS lp
-  FROM bi
-  JOIN big ON bi.h1 = big.h1 AND bi.h2 = big.h2
-  JOIN uni ON bi.h1 = uni.h1
-  CROSS JOIN vocab
-), per_doc AS (
-  SELECT doc_id, count(*) AS n_bigrams,
-         list(lp ORDER BY pos) AS lps
-  FROM scored GROUP BY doc_id
-), folded AS (
-  SELECT doc_id, n_bigrams,
-         round(-list_reduce(list_prepend(0.0, lps), (a, b) -> a + b)
-               / CAST(n_bigrams AS DOUBLE), 9) AS avg_surprisal_bits
-  FROM per_doc
-)
-SELECT d.doc_id,
-       CAST(coalesce(f.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       coalesce(f.avg_surprisal_bits, 0.0) AS avg_surprisal_bits
-FROM documents d LEFT JOIN folded f ON d.doc_id = f.doc_id
-"""
-
-
-DOCS_BIGRAM_SURPRISAL_SQL = _bigram_surprisal_sql()
-
-
 def docs_stratified_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic EXACT-k per-stratum sample (fixed-budget
     training-mix building — k docs per (lang, source) cell, chosen
@@ -4755,47 +4032,6 @@ FROM (
   FROM documents
 )
 WHERE rn <= 5
-"""
-
-
-def monthly_gapfill_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar gap-fill with carry-forward (operators/gold.py:
-    gapfill_monthly): monthly high-value-order revenue per priority,
-    missing months synthesized from each priority's first..last
-    month with the previous value carried forward and flagged. The
-    >480000 filter makes months genuinely sparse at small SFs, so
-    the fill path is exercised, not vacuous."""
-    from etl_macropulse_br_spark.operators.gold import gapfill_monthly
-
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice") > 480000
-    )
-    m = o.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-    ).agg((F.sum(_scaled("o_totalprice")) / F.lit(100.0)).alias("revenue"))
-    return gapfill_monthly(m, "priority", "month", "revenue")
-
-
-MONTHLY_GAPFILL_ORDERS_SQL = """
-WITH m AS (
-  SELECT o_orderpriority AS priority,
-         date_trunc('month', o_orderdate) AS month,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) / 100.0 AS revenue
-  FROM orders WHERE o_totalprice > 480000
-  GROUP BY 1, 2
-), b AS (
-  SELECT priority, min(month) AS mn, max(month) AS mx FROM m GROUP BY priority
-), cal AS (
-  SELECT priority, unnest(generate_series(mn, mx, INTERVAL 1 MONTH)) AS month
-  FROM b
-)
-SELECT cal.priority, cal.month,
-       last_value(m.revenue IGNORE NULLS) OVER (
-         PARTITION BY cal.priority ORDER BY cal.month
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS revenue,
-       (m.month IS NULL) AS is_filled
-FROM cal LEFT JOIN m ON m.priority = cal.priority AND m.month = cal.month
 """
 
 
@@ -5885,60 +5121,6 @@ WHERE {cos} >= {threshold}
 EMBEDDING_NEAR_DUPS_SQL = _embedding_near_dups_sql()
 
 
-def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive hard-negative mining: per-anchor top-3 most
-    similar DIFFERENT-label vectors via the shared banded-SRP
-    blocking (operators/similarity.py:knn_hard_negatives) — the
-    blocked batch-KNN shape, WindowGroupLimit-pruned."""
-    from etl_macropulse_br_spark.operators.similarity import (
-        knn_hard_negatives,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return knn_hard_negatives(emb)
-
-
-def _hard_negatives_sql(
-    k: int = 3, n_bands: int = 3, n_planes: int = 8, dim: int = 64
-) -> str:
-    # reuse the near-dup oracle's signs-matrix blocking verbatim;
-    # only the pairing (directed), label filter, and per-anchor
-    # QUALIFY differ
-    base = _embedding_near_dups_sql(n_bands, n_planes, 0.0, dim)
-    prefix, _ = base.rsplit("), cand AS (", 1)
-    cos = (
-        _DOT_SQL.format(a="a.v", b="b.v")
-        + f" / (sqrt({_DOT_SQL.format(a='a.v', b='a.v')})"
-        + f" * sqrt({_DOT_SQL.format(a='b.v', b='b.v')}))"
-    )
-    return f"""{prefix}), cand AS (
-  SELECT DISTINCT l.id AS anchor, r.id AS cand
-  FROM banded l JOIN banded r
-    ON l.band = r.band AND l.bucket = r.bucket AND l.id <> r.id
-), lbl AS (
-  SELECT vec_id AS id, label FROM embeddings
-), scored AS (
-  SELECT c.anchor, c.cand, lb.label AS neighbor_label, {cos} AS cosine
-  FROM cand c
-  JOIN e a ON a.id = c.anchor
-  JOIN e b ON b.id = c.cand
-  JOIN lbl la ON la.id = c.anchor
-  JOIN lbl lb ON lb.id = c.cand
-  WHERE la.label <> lb.label
-)
-SELECT anchor AS vec_id,
-       CAST(row_number() OVER (
-         PARTITION BY anchor ORDER BY cosine DESC, cand
-       ) AS INT) AS rn,
-       cand AS neighbor_id, neighbor_label, cosine
-FROM scored
-QUALIFY rn <= {k}
-"""
-
-
-EMBEDDING_HARD_NEGATIVES_SQL = _hard_negatives_sql()
-
-
 # --------------------------------------------------------------------
 # TPC-H completion (aux): every remaining TPC-H query shape that is
 # expressible over the provided tables. The testdata has no partsupp
@@ -6305,68 +5487,6 @@ ORDER BY cntrycode
 """
 
 
-def docs_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction pass (`operators/text.py:pii_scrub`) — the
-    compliance scrub a corpus runs before training. The synthetic
-    documents carry no PII, so the query plants deterministic
-    emails/phones/IPs derived from doc_id (the ptbr_roundtrip
-    pattern: construct → operate → verify), then audits counts and
-    redacted text. Pure regex expressions, codegen, no UDF."""
-    from etl_macropulse_br_spark.operators.text import pii_scrub
-
-    docs = _t(spark, sf_dir, "documents")
-    idc = F.col("doc_id").cast("string")
-    planted = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"), idc, F.lit("@example.com"),
-            F.lit(" or +55 (11) 9"), F.lpad(idc, 8, "0"),
-            F.lit(" from 10.0."), (F.col("doc_id") % 256).cast("string"),
-            F.lit("."), ((F.col("doc_id") * 7) % 256).cast("string"),
-        ).alias("text"),
-    )
-    return pii_scrub(planted).select(
-        "doc_id", "email_count", "ipv4_count", "phone_count", "text"
-    )
-
-
-def _pii_scrub_sql() -> str:
-    from etl_macropulse_br_spark.operators.text import PII_PATTERNS
-
-    pats = {kind: pat for kind, pat, _ in PII_PATTERNS}
-    toks = {kind: tok for kind, _, tok in PII_PATTERNS}
-    return f"""
-WITH planted AS (
-  SELECT doc_id,
-         text || ' contact user' || CAST(doc_id AS VARCHAR)
-              || '@example.com or +55 (11) 9'
-              || lpad(CAST(doc_id AS VARCHAR), 8, '0')
-              || ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-              || '.' || CAST((doc_id * 7) % 256 AS VARCHAR) AS text
-  FROM documents
-), s1 AS (
-  SELECT doc_id,
-         len(regexp_extract_all(text, '{pats["email"]}')) AS email_count,
-         regexp_replace(text, '{pats["email"]}', '{toks["email"]}', 'g')
-           AS text
-  FROM planted
-), s2 AS (
-  SELECT doc_id, email_count,
-         len(regexp_extract_all(text, '{pats["ipv4"]}')) AS ipv4_count,
-         regexp_replace(text, '{pats["ipv4"]}', '{toks["ipv4"]}', 'g') AS text
-  FROM s1
-)
-SELECT doc_id, email_count, ipv4_count,
-       len(regexp_extract_all(text, '{pats["phone"]}')) AS phone_count,
-       regexp_replace(text, '{pats["phone"]}', '{toks["phone"]}', 'g') AS text
-FROM s2
-"""
-
-
-DOCS_PII_SCRUB_SQL = _pii_scrub_sql()
-
-
 def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-stratum (language) downsampling — the
     data-mixing step of a corpus pipeline (e.g. upweight rare
@@ -6471,62 +5591,6 @@ ORDER BY shard, bin
 """
 
 
-def bucketed_orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed co-located join, END-TO-END (the write side of
-    ``skew.write_bucketed`` was previously pytest-only): write orders
-    and customer as bucketed catalog tables on the join key, then
-    join them bucket-to-bucket and roll up per market segment.
-
-    The join is hinted ``merge`` — the point is the SHUFFLE-FREE
-    sort-merge join over compatible bucket layouts (a broadcast of
-    the small side would be locally faster but demonstrates nothing);
-    the plan must contain exactly one hash exchange (the final
-    rollup), pinned by ``tests/test_skew.py``. At 100 TB this is the
-    standing trade for a fact joined on the same key by many
-    consumers: pay the shuffle once at write time, never again.
-
-    NOTE: plan construction WRITES the two bucketed tables into the
-    session warehouse (an action) — aux-only, never part of the
-    driver's 50-query contract.
-    """
-    from etl_macropulse_br_spark.operators.skew import write_bucketed
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    write_bucketed(
-        orders.select("o_custkey", "o_totalprice"),
-        "aux_bucketed_orders",
-        "o_custkey",
-        n_buckets=8,
-        sort_col="o_custkey",
-    )
-    write_bucketed(
-        cust.select("c_custkey", "c_mktsegment"),
-        "aux_bucketed_customer",
-        "c_custkey",
-        n_buckets=8,
-        sort_col="c_custkey",
-    )
-    bo = spark.table("aux_bucketed_orders")
-    bc = spark.table("aux_bucketed_customer")
-    joined = bc.hint("merge").join(bo, bc.c_custkey == bo.o_custkey)
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        (F.sum(_scaled("o_totalprice")) / F.lit(100.0)).alias(
-            "total_price"
-        ),
-    )
-
-
-BUCKETED_ORDERS_ROLLUP_SQL = """
-SELECT c_mktsegment,
-       count(*) AS n_orders,
-       sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) / 100.0 AS total_price
-FROM customer JOIN orders ON c_custkey = o_custkey
-GROUP BY c_mktsegment
-"""
-
-
 # --------------------------------------------------------------------
 # Registry
 # --------------------------------------------------------------------
@@ -6619,20 +5683,10 @@ QUERIES: dict[str, QueryFn] = {
     "embedding_cosine_topk_pandas": embedding_cosine_topk_pandas,
 }
 
-# Implemented-and-gated probes whose operator surface is a strict
-# subset of a declared query (the declared twin in parentheses).
-# tools/check_oracle.py gates these every run alongside QUERIES; they
-# are simply not part of the 50-entry driver contract.
+# Implemented-and-gated probes outside the driver contract.
+# tools/check_oracle.py gates these every run alongside QUERIES.
 AUX_QUERIES: dict[str, QueryFn] = {
     "docs_pack_sequences": docs_pack_sequences,
-    "status_filter": status_filter,  # ⊂ filter_range_project (P3)
-    "latest_event_global": latest_event_global,  # ⊂ recent_events_top10 (A6⊂O1)
-    "distinct_parts": distinct_parts,  # ⊂ user_set_ops (distinct)
-    "value_quartiles": value_quartiles,  # ntile ⊂ rank_orders_window family
-    "json_props_extract": json_props_extract,  # ⊂ props_struct_parse
-    "docs_lang_id": docs_lang_id,  # superseded by docs_lang_id_ngram
-    "docs_fingerprint": docs_fingerprint,  # same hash as docs_exact_dedup key
-    "docs_minhash_sig": docs_minhash_sig,  # replayed inside docs_near_dups sig stage
     # r3 TPC-H widening beyond the 50-entry driver contract (shapes
     # the declared q3/q5/q7/q10/q14/q17 family already exercises
     # piecewise; locally gated end-to-end here)
@@ -6649,8 +5703,6 @@ AUX_QUERIES: dict[str, QueryFn] = {
     "q19_disjunctive_revenue": q19_disjunctive_revenue,
     "q21_waiting_supplier": q21_waiting_supplier,
     "q22_sales_opportunity": q22_sales_opportunity,
-    # r3: PII redaction audit (training-data compliance pass)
-    "docs_pii_scrub": docs_pii_scrub,
     # r3: corpus mixing + packing (training-data pipeline surface)
     "docs_stratified_sample": docs_stratified_sample,
     "docs_token_packing": docs_token_packing,
@@ -6661,13 +5713,6 @@ AUX_QUERIES: dict[str, QueryFn] = {
     # r3: portable bottom-k distinct sketch (the oracle-gateable
     # alternative to HLL approx_count_distinct)
     "events_kmv_distinct": events_kmv_distinct,
-    # r3: the simhash PAIRING operator (docs_simhash declares the
-    # sketch; this gates banding + Hamming verify end-to-end)
-    "docs_simhash_near_dups": docs_simhash_near_dups,
-    # r4: bucketed-table co-located join, gated end-to-end (write
-    # two bucketed tables, shuffle-free SMJ, rollup) vs a plain-join
-    # oracle; plan shape pinned in tests/test_skew.py
-    "bucketed_orders_rollup": bucketed_orders_rollup,
     # r4: connected components over the near-dup pair graph
     # (iterative min-label propagation vs recursive-CTE closure)
     "docs_dup_clusters": docs_dup_clusters,
@@ -6683,9 +5728,8 @@ AUX_QUERIES: dict[str, QueryFn] = {
     # component — strictly stronger than the pair-loser policy)
     "docs_cc_survivors": docs_cc_survivors,
     "docs_curated_cc": docs_curated_cc,
-    # r5: boilerplate coverage + scale-right quality deciles
+    # r5: boilerplate coverage
     "docs_boilerplate": docs_boilerplate,
-    "docs_quality_buckets": docs_quality_buckets,
     "props_variant_parse": props_variant_parse,  # Spark-4 VARIANT twin of P-json
     "docs_curated_full": docs_curated_full,  # every curation stage, one plan
     # r5: exact-substring span removal (disjoint-chunk Lee et al.
@@ -6697,21 +5741,8 @@ AUX_QUERIES: dict[str, QueryFn] = {
     "docs_exact_dedup_collated": docs_exact_dedup_collated,
     # r5: deterministic exact-k per-stratum sample (WindowGroupLimit)
     "docs_stratified_exact_k": docs_stratified_exact_k,
-    # r5: Shannon token entropy (order-pinned float fold, 9dp gate)
-    "docs_token_entropy": docs_token_entropy,
-    # r5: bigram-LM surprisal (the perplexity-filter shape)
-    "docs_bigram_surprisal": docs_bigram_surprisal,
-    # r5: contrastive hard-negative mining (blocked batch-KNN)
-    "embedding_hard_negatives": embedding_hard_negatives,
-    # r5: directional containment (sub-document duplication)
-    "docs_containment": docs_containment,
-    # r5: keep-globally-first span removal (the Lee et al. policy)
-    "docs_span_dedup_keep_first": docs_span_dedup_keep_first,
     # r5: iterative Lloyd k-means with exact integer-lattice parity
     "embedding_kmeans": embedding_kmeans,
-    # r5: calendar gap-fill with carry-forward (time-series
-    # interpolation for the monthly gold marts)
-    "monthly_gapfill_orders": monthly_gapfill_orders,
     # r5: IVF serving over a k-means-trained codebook, train+serve
     # in one lazy plan, full hash gate
     "embedding_ivf_kmeans_topk": embedding_ivf_kmeans_topk,
@@ -6720,7 +5751,6 @@ AUX_QUERIES: dict[str, QueryFn] = {
     "embedding_pq_batch_topk": embedding_pq_batch_topk,
     "embedding_ivf_batch_topk": embedding_ivf_batch_topk,
     "docs_hybrid_rrf": docs_hybrid_rrf,
-    "docs_contamination_report": docs_contamination_report,
     "docs_dsir_sample_by_lang": docs_dsir_sample_by_lang,
     "embedding_cosine_batch_topk": embedding_cosine_batch_topk,
     "events_hll_distinct": events_hll_distinct,
@@ -6729,10 +5759,8 @@ AUX_QUERIES: dict[str, QueryFn] = {
     "embedding_pq_filtered_topk": embedding_pq_filtered_topk,
     "docs_incremental_near_dups": docs_incremental_near_dups,
     "docs_curated_semantic": docs_curated_semantic,
-    "docs_decontaminate_bloom": docs_decontaminate_bloom,
     "docs_dsir_weights": docs_dsir_weights,
     "docs_dsir_sample": docs_dsir_sample,
-    "docs_mixture_balance": docs_mixture_balance,
     "embedding_semdedup": embedding_semdedup,
     # r9: signature-agreement near-dup verify (an int-only verify
     # over k longs per doc)
@@ -6806,14 +5834,6 @@ ORACLES: dict[str, str] = {
 
 AUX_ORACLES: dict[str, str] = {
     "docs_pack_sequences": DOCS_PACK_SEQUENCES_SQL,
-    "status_filter": STATUS_FILTER_SQL,
-    "latest_event_global": LATEST_EVENT_GLOBAL_SQL,
-    "distinct_parts": DISTINCT_PARTS_SQL,
-    "value_quartiles": VALUE_QUARTILES_SQL,
-    "json_props_extract": JSON_PROPS_EXTRACT_SQL,
-    "docs_lang_id": DOCS_LANG_ID_SQL,
-    "docs_fingerprint": DOCS_FINGERPRINT_SQL,
-    "docs_minhash_sig": DOCS_MINHASH_SIG_SQL,
     "q8_market_share": Q8_MARKET_SHARE_SQL,
     "q13_customer_distribution": Q13_CUSTOMER_DISTRIBUTION_SQL,
     "q18_large_volume_customer": Q18_LARGE_VOLUME_CUSTOMER_SQL,
@@ -6823,14 +5843,11 @@ AUX_ORACLES: dict[str, str] = {
     "q19_disjunctive_revenue": Q19_DISJUNCTIVE_REVENUE_SQL,
     "q21_waiting_supplier": Q21_WAITING_SUPPLIER_SQL,
     "q22_sales_opportunity": Q22_SALES_OPPORTUNITY_SQL,
-    "docs_pii_scrub": DOCS_PII_SCRUB_SQL,
     "docs_stratified_sample": DOCS_STRATIFIED_SAMPLE_SQL,
     "docs_token_packing": DOCS_TOKEN_PACKING_SQL,
     "rollup_lineitem": ROLLUP_LINEITEM_SQL,
     "moving_avg_value": MOVING_AVG_VALUE_SQL,
     "events_kmv_distinct": EVENTS_KMV_DISTINCT_SQL,
-    "docs_simhash_near_dups": DOCS_SIMHASH_NEAR_DUPS_SQL,
-    "bucketed_orders_rollup": BUCKETED_ORDERS_ROLLUP_SQL,
     "docs_dup_clusters": DOCS_DUP_CLUSTERS_SQL,
     "docs_decontaminate": DOCS_DECONTAMINATE_SQL,
     "session_window_stats": SESSION_WINDOW_STATS_SQL,
@@ -6838,27 +5855,19 @@ AUX_ORACLES: dict[str, str] = {
     "docs_cc_survivors": DOCS_CC_SURVIVORS_SQL,
     "docs_curated_cc": DOCS_CURATED_CC_SQL,
     "docs_boilerplate": DOCS_BOILERPLATE_SQL,
-    "docs_quality_buckets": DOCS_QUALITY_BUCKETS_SQL,
     "props_variant_parse": PROPS_VARIANT_PARSE_SQL,
     "docs_curated_full": DOCS_CURATED_FULL_SQL,
     "docs_chunk_dedup": DOCS_CHUNK_DEDUP_SQL,
     "docs_span_dedup": DOCS_SPAN_DEDUP_SQL,
     "docs_exact_dedup_collated": DOCS_EXACT_DEDUP_COLLATED_SQL,
     "docs_stratified_exact_k": DOCS_STRATIFIED_EXACT_K_SQL,
-    "docs_token_entropy": DOCS_TOKEN_ENTROPY_SQL,
-    "docs_bigram_surprisal": DOCS_BIGRAM_SURPRISAL_SQL,
-    "embedding_hard_negatives": EMBEDDING_HARD_NEGATIVES_SQL,
-    "docs_containment": DOCS_CONTAINMENT_SQL,
-    "docs_span_dedup_keep_first": DOCS_SPAN_KEEP_FIRST_SQL,
     "embedding_kmeans": EMBEDDING_KMEANS_SQL,
-    "monthly_gapfill_orders": MONTHLY_GAPFILL_ORDERS_SQL,
     "embedding_ivf_kmeans_topk": EMBEDDING_IVF_KMEANS_SQL,
     "embedding_pq_rerank_topk": EMBEDDING_PQ_RERANK_SQL,
     "embedding_ivfadc_topk": EMBEDDING_IVFADC_SQL,
     "embedding_pq_batch_topk": EMBEDDING_PQ_BATCH_SQL,
     "embedding_ivf_batch_topk": EMBEDDING_IVF_BATCH_SQL,
     "docs_hybrid_rrf": DOCS_HYBRID_RRF_SQL,
-    "docs_contamination_report": DOCS_CONTAMINATION_REPORT_SQL,
     "docs_dsir_sample_by_lang": DOCS_DSIR_SAMPLE_BY_LANG_SQL,
     "embedding_cosine_batch_topk": EMBEDDING_COSINE_BATCH_SQL,
     "events_hll_distinct": EVENTS_HLL_DISTINCT_SQL,
@@ -6868,10 +5877,8 @@ AUX_ORACLES: dict[str, str] = {
     "docs_incremental_near_dups": DOCS_INCREMENTAL_NEAR_DUPS_SQL,
     "docs_sig_near_dups": DOCS_SIG_NEAR_DUPS_SQL,
     "docs_curated_semantic": DOCS_CURATED_SEMANTIC_SQL,
-    "docs_decontaminate_bloom": DOCS_DECONTAMINATE_BLOOM_SQL,
     "docs_dsir_weights": DOCS_DSIR_SQL,
     "docs_dsir_sample": DOCS_DSIR_SAMPLE_SQL,
-    "docs_mixture_balance": DOCS_MIXTURE_BALANCE_SQL,
     "embedding_semdedup": EMBEDDING_SEMDEDUP_SQL,
     "events_kmv_set_ops": EVENTS_KMV_SET_OPS_SQL,
     "price_hdr_quantiles": PRICE_HDR_QUANTILES_SQL,

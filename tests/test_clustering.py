@@ -416,8 +416,7 @@ def test_ivfadc_residual_matches_semantics(spark):
 
 
 def test_ivf_pq_recall_on_planted_neighbors(spark):
-    """ANN recall characterization (the same measured-bound
-    discipline as the containment-blocking recall test): plant 10
+    """ANN recall characterization (a measured bound): plant 10
     true near neighbors of the query among background noise and
     measure top-10 recall of the full IVF-PQ serving plan against
     brute-force cosine. Planted neighbors are tight around the
@@ -478,8 +477,7 @@ def test_semdedup_blocking_characterization(spark):
     landing in the SAME cluster are always found (within-cluster
     recall 1.0 on planted dups), while a pair split across a
     cluster boundary is structurally invisible — that is the
-    blocking bound (the paper's k-vs-recall knob), pinned here the
-    same way the containment df-cap miss is pinned."""
+    blocking bound (the paper's k-vs-recall knob), pinned here."""
     import random
 
     from etl_macropulse_br_spark.operators.clustering import (

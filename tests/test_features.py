@@ -78,52 +78,6 @@ def test_weighted_sample_matches_python_reference(spark):
     assert {0, 1, 2} <= {i for i, _ in got}
 
 
-def test_mixture_balance_equalizes_domains(spark):
-    """Equal target weights cut every domain to the rarest domain's
-    size; the surviving rows are the deterministic hash-prefix of
-    each domain (stable across runs); absent-from-target domains
-    drop entirely."""
-    from etl_macropulse_br_spark.operators.features import mixture_balance
-
-    rows = (
-        [(i, "en") for i in range(20)]
-        + [(100 + i, "de") for i in range(10)]
-        + [(200 + i, "fr") for i in range(5)]
-        + [(300 + i, "xx") for i in range(7)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = mixture_balance(
-        df, "lang", {"en": 1, "de": 1, "fr": 1}
-    ).collect()
-    by_lang = {}
-    for r in out:
-        by_lang.setdefault(r["lang"], set()).add(r["doc_id"])
-    assert {len(v) for v in by_lang.values()} == {5}
-    assert set(by_lang) == {"en", "de", "fr"}
-    assert by_lang["fr"] == {200, 201, 202, 203, 204}  # limiting: whole
-    again = mixture_balance(df, "lang", {"en": 1, "de": 1, "fr": 1}).collect()
-    assert {(r["lang"], r["doc_id"]) for r in again} == {
-        (r["lang"], r["doc_id"]) for r in out
-    }
-
-
-def test_mixture_balance_weighted_ratio(spark):
-    """A 2:1 target produces a 2:1 output bounded by the limiting
-    domain (floor arithmetic, exact)."""
-    from etl_macropulse_br_spark.operators.features import mixture_balance
-
-    rows = [(i, "en") for i in range(30)] + [
-        (100 + i, "de") for i in range(6)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = mixture_balance(df, "lang", {"en": 2, "de": 1}).collect()
-    n = {"en": 0, "de": 0}
-    for r in out:
-        n[r["lang"]] += 1
-    # de limits: N_out = min(30*3/2, 6*3/1) = 18 -> en 12, de 6
-    assert n == {"en": 12, "de": 6}
-
-
 def test_dsir_weights_match_python_reference(spark):
     """Full-formula differential: dsir_log_weights equals an
     independent pure-Python implementation of the same spec (md5
@@ -204,20 +158,6 @@ def test_weighted_sample_rejects_nonpositive_weights(spark):
     with pytest.raises(Exception) as e:
         weighted_sample(df, "w", k=2).collect()
     assert "must be > 0" in str(e.value)
-
-
-def test_mixture_balance_empty_when_target_domain_absent(spark):
-    """A requested domain with zero rows is the limiting domain with
-    n=0: the only output honoring the mixture is empty (previously
-    the absent domain was silently skipped and the output violated
-    the requested proportion)."""
-    from etl_macropulse_br_spark.operators.features import mixture_balance
-
-    df = spark.createDataFrame(
-        [(i, "en") for i in range(10)], "doc_id long, lang string"
-    )
-    out = mixture_balance(df, "lang", {"en": 2, "de": 1}).collect()
-    assert out == []
 
 
 def test_weighted_sample_log2_matches_linear_domain(spark):
@@ -317,32 +257,6 @@ def test_weighted_sample_rejects_null_weight(spark):
     assert "must be > 0" in str(e.value)
 
 
-def test_mixture_balance_hits_theoretical_max(spark):
-    """Largest-remainder allocation: the output size must EQUAL
-    N_out = min_g floor(n_g * W / w_g) — the true achievable
-    maximum — for a case where plain per-domain floors lose rows.
-    n = {a: 10, b: 7}, weights {a: 2, b: 1}: N_out = min(15, 21) =
-    15, ideal shares (10, 5) -> here floors already land exact; use
-    weights {a: 3, b: 2}: N_out = min(floor(10*5/3), floor(7*5/2))
-    = min(16, 17) = 16, ideal (48/5, 32/5) = (9.6, 6.4), floors
-    (9, 6) = 15 — one short. The larger remainder (a: rem 3 vs
-    b: rem 2) draws the extra row: takes (10, 6), total 16."""
-    from etl_macropulse_br_spark.operators.features import mixture_balance
-
-    rows = [(i, "a") for i in range(10)] + [(100 + i, "b") for i in range(7)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = mixture_balance(df, "lang", {"a": 3, "b": 2}).collect()
-    by_lang = {}
-    for r in out:
-        by_lang.setdefault(r["lang"], []).append(r["doc_id"])
-    assert len(out) == 16               # == N_out, not 15
-    assert len(by_lang["a"]) == 10      # floor 9 + largest remainder
-    assert len(by_lang["b"]) == 6
-    # mixture honored as closely as integers allow, never exceeded
-    # against the requested 3:2 proportion of the 16-row budget
-    assert len(by_lang["a"]) <= 10 and len(by_lang["b"]) <= 7
-
-
 def test_weighted_sample_log2_per_group(spark):
     """group_cols: k rows per group, ranked by the same log-domain
     keys as the global sampler — the union of per-group samples at
@@ -377,7 +291,6 @@ def test_weighted_sample_log2_per_group(spark):
             df.filter(F.col("g") == g), "log2_weight", k=1
         ).collect()[0]
         assert solo["doc_id"] == lst[0][1]
-
 
 
 def test_weighted_sample_log2_shift_invariant(spark):

@@ -186,31 +186,6 @@ def test_partitioned_gold_read_prunes_partitions(spark, tmp_path):
     assert sorted(r["value"] for r in read.collect()) == [1.0, 2.0]
 
 
-def test_gapfill_monthly_carries_forward_and_flags(spark):
-    import datetime as dt
-
-    from etl_macropulse_br_spark.operators.gold import gapfill_monthly
-
-    m = spark.createDataFrame(
-        [
-            ("A", dt.datetime(2024, 1, 1), 10.0),
-            ("A", dt.datetime(2024, 4, 1), 40.0),
-            ("B", dt.datetime(2024, 2, 1), 7.0),
-        ],
-        "key string, month timestamp, value double",
-    )
-    rows = {
-        (r["key"], r["month"].month): (r["value"], r["is_filled"])
-        for r in gapfill_monthly(m, "key").collect()
-    }
-    assert rows[("A", 1)] == (10.0, False)
-    assert rows[("A", 2)] == (10.0, True)   # synthesized, carried
-    assert rows[("A", 3)] == (10.0, True)
-    assert rows[("A", 4)] == (40.0, False)
-    assert rows[("B", 2)] == (7.0, False)   # single month: no fill
-    assert len(rows) == 5
-
-
 def test_dedup_keep_first_handles_dotted_column_names(spark):
     """Raw source headers with dots pass through dedup before role
     renaming; name resolution must be literal, not nested-field

@@ -388,6 +388,44 @@ def test_load_table_replace_takes_over_orphaned_location(spark):
     assert not spark.catalog.tableExists("orphan_t")
 
 
+def test_load_table_replace_restores_old_table_on_failure(spark):
+    """A failed replacement write must leave the previous table's
+    data restored, not destroyed."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from etl_macropulse_br_spark.sinks.writers import (
+        load_table_replace,
+        table_location,
+    )
+
+    name = "replace_safe_t"
+    good = spark.range(0, 100).withColumn("v", F.col("id") * 2)
+    load_table_replace(spark, good, name)
+    loc = table_location(spark, name)
+    try:
+        before = sorted(os.listdir(loc))
+
+        # a frame whose evaluation throws mid-write (UDF raising)
+        def boom(x):
+            raise RuntimeError("injected write failure")
+
+        bad = spark.range(0, 100).withColumn(
+            "v", F.udf(boom, LongType())(F.col("id"))
+        )
+        with pytest.raises(Exception):
+            load_table_replace(spark, bad, name)
+
+        # old location restored byte-for-byte file set; no backup left
+        assert sorted(os.listdir(loc)) == before
+        assert not os.path.isdir(f"{loc}.__replacing")
+        # a fresh successful replace works and reads back
+        load_table_replace(spark, good, name)
+        assert spark.table(name).count() == 100
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_write_parquet_partitioned_drops_stale_partitions(spark, tmp_path):
     """The partitioned gold sink is a full replace: a frame with fewer
     partitions than on disk drops the stale partition directory."""

@@ -169,14 +169,6 @@ def test_stratified_exact_k_plans_window_group_limit(small_spark):
     assert "WindowGroupLimit" in plan
 
 
-def test_hard_negatives_plans_window_group_limit(small_spark):
-    """`embedding_hard_negatives`: per-anchor top-k must pre-prune
-    via WindowGroupLimit; the blocked join must not be cartesian."""
-    plan = _plan(small_spark, "embedding_hard_negatives")
-    assert "WindowGroupLimit" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_dsir_weights_plan_broadcasts_count_tables(small_spark):
     """`docs_dsir_weights`: the <=B-row raw/target count tables
     must reach the per-doc stream as broadcast builds (never a
@@ -195,17 +187,6 @@ def test_dsir_sample_plans_take_ordered(small_spark):
     plan = _plan(small_spark, "docs_dsir_sample")
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_mixture_balance_plan_shape(small_spark):
-    """`docs_mixture_balance`: the takes table joins as a broadcast
-    with the data-dependent rank filter evaluated inside that join
-    (a non-literal limit can't WindowGroupLimit-prune); the domain
-    filter reaches the scan; nothing is cartesian."""
-    plan = _plan(small_spark, "docs_mixture_balance")
-    assert "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
-    assert "PushedFilters: [IsNotNull(lang)]" in plan
 
 
 def test_ivf_pq_and_semdedup_never_cartesian(small_spark):
@@ -252,7 +233,6 @@ def test_r7_aux_queries_never_cartesian(small_spark):
         "events_hll_distinct",
         "events_hll_by_type",
         "docs_cms_token_counts",
-        "docs_contamination_report",
         "docs_dsir_sample_by_lang",
         "embedding_cosine_batch_topk",
         "embedding_pq_filtered_topk",

@@ -246,52 +246,3 @@ def test_span_dedup_properties(docs):
         assert r["clean_text"] == " ".join(
             tok for j, tok in enumerate(toks) if j not in cov
         )
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    sizes=st.lists(
-        st.integers(min_value=0, max_value=40), min_size=2, max_size=4
-    ),
-    weights=st.lists(
-        st.integers(min_value=1, max_value=5), min_size=4, max_size=4
-    ),
-)
-def test_mixture_balance_properties(spark, sizes, weights):
-    """Largest-remainder mixture invariants over random corpora:
-    output size == N_out = min_g floor(n_g * W / w_g) exactly (the
-    docstring's MAXIMUM claim); no domain exceeds its corpus size;
-    per-domain take differs from its ideal real-valued share by < 1
-    row; a zero-size domain forces an empty mixture."""
-    import math
-
-    from etl_macropulse_br_spark.operators.features import mixture_balance
-
-    domains = [f"d{i}" for i in range(len(sizes))]
-    tw = {d: weights[i] for i, d in enumerate(domains)}
-    W = sum(tw.values())
-    rows, nid = [], 0
-    for d, n in zip(domains, sizes):
-        for _ in range(n):
-            rows.append((nid, d))
-            nid += 1
-    df = spark.createDataFrame(rows or [(0, "pad")], "doc_id long, lang string")
-    if not rows:
-        df = df.filter("doc_id < 0")
-    out = mixture_balance(df, "lang", tw).collect()
-
-    if any(n == 0 for n in sizes):
-        assert out == []
-        return
-    n_out = min(
-        math.floor(n * W / tw[d]) for d, n in zip(domains, sizes)
-    )
-    assert len(out) == n_out
-    by_d: dict[str, int] = {}
-    for r in out:
-        by_d[r["lang"]] = by_d.get(r["lang"], 0) + 1
-    for d, n in zip(domains, sizes):
-        take = by_d.get(d, 0)
-        assert take <= n, (d, take, n)
-        ideal = tw[d] * n_out / W
-        assert abs(take - ideal) < 1.0, (d, take, ideal)

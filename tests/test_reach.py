@@ -1,6 +1,7 @@
 """Static-reach gates: every package module is imported by an entry
-point, and every top-level package function or class is named by live
-code.
+point, every top-level package function or class is named by live
+code, and no package function outside the query registry is reached
+only through the aux oracle entries.
 
 The module pass walks ``Import``/``ImportFrom`` nodes (module-level,
 function-level and relative) from the CLIs, tools, benchmark harness,
@@ -9,7 +10,11 @@ live set from those files and the module-level code of every reached
 package module: a top-level ``def`` or ``class`` is live once live
 code names it (a ``Name``, an ``Attribute`` or an imported alias), and
 its body then counts as live code too. Code that only tests reach is
-dead to every user of the repo; each gate fails naming it. Pure AST —
+dead to every user of the repo; each gate fails naming it. The aux
+pass reruns the function pass with the ``AUX_QUERIES``/``AUX_ORACLES``
+assignments left out of the roots: an aux entry is a local oracle
+probe, and a package function that only such probes reach is not
+worth its lines unless the related work grounds it. Pure AST —
 starts no Spark.
 """
 
@@ -40,11 +45,28 @@ UNNAMED_BY_DESIGN = {
     "operators.features.zscore_pandas",
     "operators.features.weighted_sample",
     "functions.exprs.ptbr_format_number",
-    # a plan probe that tests use
-    "operators.skew.bucketed_join_is_shuffle_free",
     # ROADMAP "Blocked": the object-store lease provider and its fake
     "operators.statelock.ObjectStoreLockProvider",
     "operators.statelock.FakeConditionalStore",
+}
+
+AUX_REGISTRIES = {"AUX_QUERIES", "AUX_ORACLES"}
+
+AUX_ONLY_BY_DESIGN = {
+    # PAPERS.md: Continuously Adaptive Similarity Search (SIGMOD 2020)
+    # grounds IVF serving over a trained codebook
+    "operators.clustering.ivf_kmeans_topk",
+    # PAPERS.md: Incremental Based Framework for Efficient Top-K
+    # Similarity Search (EDBT 2020) grounds the fused top-k ranking
+    "operators.similarity.hybrid_rrf",
+    # PAPERS.md: Approximation Algorithms for Large Scale Data
+    # Analysis (PODS 2021) grounds the mergeable per-group quantiles
+    "operators.sketches.hdr_quantiles_by",
+    "operators.sketches.hdr_signed_quantiles_by",
+    # the iterative reference dup_clusters_plan is tested against, and
+    # the only connected-components path that raises on
+    # non-convergence
+    "operators.dedup.dup_clusters",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -135,9 +157,24 @@ def _names(nodes: list[ast.AST]) -> set[str]:
     return out
 
 
-def _unnamed() -> set[str]:
+def _is_aux_registry(mod: str, stmt: ast.stmt) -> bool:
+    if mod != "plans.queries":
+        return False
+    if isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    elif isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    else:
+        return False
+    return any(
+        isinstance(t, ast.Name) and t.id in AUX_REGISTRIES for t in targets
+    )
+
+
+def _unnamed(skip_aux: bool = False) -> set[str]:
     """``module.name`` of every top-level def or class in a reached
-    package module that no live code names."""
+    package module that no live code names; with ``skip_aux``, the
+    aux registries name nothing."""
     reached = _reached()
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     roots: set[str] = set()
@@ -148,7 +185,7 @@ def _unnamed() -> set[str]:
             for stmt in body:
                 if isinstance(stmt, _DEFS):
                     defs.setdefault(stmt.name, []).append((mod, stmt))
-                else:
+                elif not (skip_aux and _is_aux_registry(mod, stmt)):
                     roots |= _names([stmt])
         else:
             roots |= _names(body)
@@ -171,3 +208,16 @@ def test_every_package_function_is_named_by_live_code():
     assert not dead, f"only tests name: {', '.join(dead)}"
     # an exemption that live code now names (or that is gone) is stale
     assert UNNAMED_BY_DESIGN <= unnamed
+
+
+def test_no_package_function_is_reached_only_by_aux_queries():
+    aux_only = {
+        name
+        for name in _unnamed(skip_aux=True) - _unnamed()
+        if not name.startswith("plans.queries.")
+    }
+    dead = sorted(aux_only - AUX_ONLY_BY_DESIGN)
+    assert not dead, f"only aux oracle entries reach: {', '.join(dead)}"
+    # an exemption that non-aux code now reaches (or that is gone) is
+    # stale
+    assert AUX_ONLY_BY_DESIGN <= aux_only

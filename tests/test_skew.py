@@ -1,15 +1,8 @@
-"""Salted join equivalence + bucketed-table shuffle elimination."""
+"""Salted join equivalence."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from etl_macropulse_br_spark.operators.skew import (
-    bucketed_join_is_shuffle_free,
-    salted_join,
-    write_bucketed,
-)
+from etl_macropulse_br_spark.operators.skew import salted_join
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -36,115 +29,6 @@ def test_salted_left_join_keeps_unmatched(spark):
     rows = salted_join(skewed, dim, on="k", n_salt=4, how="left").collect()
     got = {(r["k"], r["name"]) for r in rows}
     assert got == {(1, "x"), (2, None)}
-
-
-def test_bucketed_join_plans_no_exchange(spark):
-    # warehouse.dir is a static conf — use the session default
-    # (./spark-warehouse, gitignored) and drop the tables after.
-    a = spark.range(0, 1000).withColumn("payload_a", F.col("id") * 2)
-    b = spark.range(0, 1000).withColumn("payload_b", F.col("id") * 3)
-    try:
-        write_bucketed(a, "bucketed_a", "id", n_buckets=8)
-        write_bucketed(b, "bucketed_b", "id", n_buckets=8)
-    except Exception as e:  # no writable warehouse in some environments
-        pytest.skip(f"warehouse unavailable: {e}")
-    try:
-        assert bucketed_join_is_shuffle_free(
-            spark, "bucketed_a", "bucketed_b", "id"
-        )
-        # sanity: the same join on plain (non-bucketed) frames shuffles
-        plan = a.join(b, "id")._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan or "Broadcast" in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bucketed_a")
-        spark.sql("DROP TABLE IF EXISTS bucketed_b")
-
-
-def test_bucketed_orders_rollup_query_plan_and_values(spark):
-    """The r4 aux query end-to-end: the join of the two bucketed
-    tables must be a sort-merge join with NO exchange between the
-    bucketed scans and the join — the only hash exchange in the plan
-    is the final rollup. Values must match the plain (non-bucketed)
-    join of the same inputs."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from etl_macropulse_br_spark.plans.queries import (
-        _scaled,
-        _t,
-        bucketed_orders_rollup,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    try:
-        df = bucketed_orders_rollup(spark, sf_dir)
-    except Exception as e:  # no writable warehouse in some environments
-        _pytest.skip(f"warehouse unavailable: {e}")
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-        assert "Bucketed: true" in plan
-
-        plain = (
-            _t(spark, sf_dir, "customer")
-            .join(
-                _t(spark, sf_dir, "orders"),
-                F.col("c_custkey") == F.col("o_custkey"),
-            )
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                (F.sum(_scaled("o_totalprice")) / F.lit(100.0)).alias(
-                    "total_price"
-                ),
-            )
-        )
-        got = {tuple(r) for r in df.collect()}
-        want = {tuple(r) for r in plain.collect()}
-        assert got == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS aux_bucketed_orders")
-        spark.sql("DROP TABLE IF EXISTS aux_bucketed_customer")
-
-
-def test_write_bucketed_replace_is_crash_safe(spark):
-    """A failed replacement write must leave the previous table's
-    data restored, not destroyed (r4 ADVICE on skew.py)."""
-    import os
-
-    from etl_macropulse_br_spark.sinks.writers import table_location
-
-    a = spark.range(0, 100).withColumn("v", F.col("id") * 2)
-    try:
-        write_bucketed(a, "bucketed_safe", "id", n_buckets=4)
-    except Exception as e:
-        pytest.skip(f"warehouse unavailable: {e}")
-    loc = table_location(spark, "bucketed_safe")
-    try:
-        before = sorted(os.listdir(loc))
-
-        # a frame whose evaluation throws mid-write (UDF raising)
-        from pyspark.sql.types import LongType
-
-        def boom(x):
-            raise RuntimeError("injected write failure")
-
-        bad = spark.range(0, 100).withColumn(
-            "v", F.udf(boom, LongType())(F.col("id"))
-        )
-        with pytest.raises(Exception):
-            write_bucketed(bad, "bucketed_safe", "id", n_buckets=4)
-
-        # old location restored byte-for-byte file set; no backup left
-        assert sorted(os.listdir(loc)) == before
-        assert not os.path.isdir(f"{loc}.__replacing")
-        # orphan-dir path still recoverable: a fresh successful
-        # replace works and reads back
-        write_bucketed(a, "bucketed_safe", "id", n_buckets=4)
-        assert spark.table("bucketed_safe").count() == 100
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bucketed_safe")
 
 
 def test_salted_join_rejects_right_full_and_spreads_dup_rows(spark):

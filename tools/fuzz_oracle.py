@@ -12,7 +12,7 @@ identical embedding vectors, resampled event distributions, and
 (r10) a referentially-consistent random SUB-CORPUS of the
 relational tables (sampled orders keys, lineitem filtered to them,
 dims verbatim) so the TPC-H-shaped queries fuzz too instead of
-skipping — the FULL registry now runs (122/122, 0 skipped) with
+skipping — the FULL registry runs (0 skipped) with
 per-seed fact cardinality/selectivity. Data-dependent divergence
 (normalization mismatches, tie-break drift, estimator branch
 flips, group-emptiness edges) fails loudly instead of hiding

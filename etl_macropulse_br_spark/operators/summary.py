@@ -122,26 +122,29 @@ def build_summary_text(bcb_silver: DataFrame, anp_silver: DataFrame) -> str:
         lines.append("BCB/SGS - sem dados para o período.")
 
     # ---- ANP: top MoM increases by UF/product (summary.py:51-88) ----
-    if anp_silver is not None and anp_silver.take(1):
+    # Movers imply a valid row and a valid row implies a row, so the
+    # take(1) probes run only on the fallback path, in that order.
+    movers = []
+    if anp_silver is not None:
         valid = anp_silver.filter(F.col("date_ref").isNotNull())
         anp_mom = mom_change(
             build_gold_anp_monthly(valid), ["uf_sigla", "product"], "avg_price"
         )
         movers = top_movers(anp_mom, k=3).collect()
-        if movers:
-            latest_month = movers[0]["month"]
-            lines.append(f"ANP - Destaques de {_as_date(latest_month)}:")
-            for r in movers:
-                lines.append(
-                    f"- {r['uf_sigla']} / {r['product']}: variação média "
-                    f"{r['mom_change']:+.2f} (vs mês anterior)."
-                )
-        elif valid.take(1):
+    if movers:
+        latest_month = movers[0]["month"]
+        lines.append(f"ANP - Destaques de {_as_date(latest_month)}:")
+        for r in movers:
             lines.append(
-                "ANP - Sem variação mensal suficiente para destacar no período."
+                f"- {r['uf_sigla']} / {r['product']}: variação média "
+                f"{r['mom_change']:+.2f} (vs mês anterior)."
             )
-        else:
-            lines.append("ANP - Sem dados válidos para o período.")
+    elif anp_silver is not None and valid.take(1):
+        lines.append(
+            "ANP - Sem variação mensal suficiente para destacar no período."
+        )
+    elif anp_silver is not None and anp_silver.take(1):
+        lines.append("ANP - Sem dados válidos para o período.")
     else:
         lines.append("ANP - sem dados para o período.")
 

@@ -6,7 +6,6 @@ the per-round BENCH artifacts."""
 
 from __future__ import annotations
 
-import json
 import os
 import subprocess
 import sys

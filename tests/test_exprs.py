@@ -6,7 +6,6 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_macropulse_br_spark.functions.exprs import (
     dayfirst_date,

@@ -5,8 +5,6 @@ the dedup/fingerprint oracles valid."""
 from __future__ import annotations
 
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 from etl_macropulse_br_spark.functions.hashing import (
     _MASK32,

@@ -3,11 +3,8 @@
 
 from __future__ import annotations
 
-import datetime
-
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from etl_macropulse_br_spark.functions.exprs import (
     parse_date_ddmmyyyy,

@@ -201,6 +201,24 @@ def test_run_pipeline_sink_jobs_carry_caller_job_group(spark, workspace):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
+def test_warm_run_pipeline_compiles_no_generated_class(spark, workspace):
+    """The codegen cache holds a whole call's generated classes, so the
+    third call in one session compiles none. At Spark's default cap of
+    100 a call's 134 classes cycle through the LRU cache and every warm
+    call recompiled over 100 of them."""
+    from etl_macropulse_br_spark.operators.util import unpersist_candidates
+
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    for _ in range(2):
+        _run(spark, workspace)
+        unpersist_candidates()
+    before = compiles.getCount()
+    _run(spark, workspace)
+    unpersist_candidates()
+    assert compiles.getCount() - before == 0
+
+
 # parquet output under data/ -> the result.tables frame it holds
 OUTPUTS = {
     "silver/bcb_sgs": "silver_bcb_sgs",

@@ -14,13 +14,17 @@ dead to every user of the repo; each gate fails naming it. The aux
 pass reruns the function pass with the ``AUX_QUERIES``/``AUX_ORACLES``
 assignments left out of the roots: an aux entry is a local oracle
 probe, and a package function that only such probes reach is not
-worth its lines unless the related work grounds it. Pure AST —
-starts no Spark.
+worth its lines unless the related work grounds it. Because an
+imported alias counts as a live name, the import pass keeps the
+function pass honest: every module-level import in the package, the
+CLIs, the tools, the tests and ``bench.py`` must be named by its own
+module outside its import statements. Pure AST — starts no Spark.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -221,3 +225,49 @@ def test_no_package_function_is_reached_only_by_aux_queries():
     # an exemption that non-aux code now reaches (or that is gone) is
     # stale
     assert AUX_ONLY_BY_DESIGN <= aux_only
+
+
+IMPORT_CHECKED = [
+    *sorted(p for p in (ROOT / PKG).rglob("*.py") if p.name != "__init__.py"),
+    *sorted((ROOT / "scripts").glob("*.py")),
+    *sorted((ROOT / "tools").glob("*.py")),
+    *sorted((ROOT / "tests").glob("*.py")),
+    ROOT / "bench.py",
+]
+
+
+_NOQA_F401 = re.compile(r"#\s*noqa:[^#]*\bF401\b")
+
+
+def _top_level_imports(body: list[ast.stmt]):
+    """Import statements of a module body, including those under a
+    top-level ``if``/``try``/``with``, but not inside a def or class."""
+    for stmt in body:
+        if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            yield stmt
+        elif not isinstance(stmt, _DEFS):
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                yield from _top_level_imports(getattr(stmt, field, []))
+
+
+def _unused_imports(path: Path) -> list[str]:
+    source = path.read_text()
+    lines = source.splitlines()
+    tree = ast.parse(source, filename=str(path))
+    named = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    unused = []
+    for stmt in _top_level_imports(tree.body):
+        if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+            continue
+        for alias in stmt.names:
+            bound = alias.asname or alias.name.split(".")[0]
+            noqa = lines[stmt.lineno - 1] + lines[alias.lineno - 1]
+            if bound in named or _NOQA_F401.search(noqa):
+                continue
+            unused.append(f"{path.relative_to(ROOT)}:{alias.lineno} {bound}")
+    return unused
+
+
+def test_every_module_level_import_is_used():
+    unused = [u for path in IMPORT_CHECKED for u in _unused_imports(path)]
+    assert not unused, f"imported, never named: {', '.join(unused)}"

@@ -15,7 +15,20 @@ from __future__ import annotations
 import datetime
 import os
 
-from etl_macropulse_br_spark.operators.summary import build_summary_text
+from pyspark.sql import functions as F
+
+from etl_macropulse_br_spark.operators.gold import (
+    build_gold_anp_monthly,
+    mom_change,
+)
+from etl_macropulse_br_spark.operators.summary import (
+    DEFAULT_TARGET_SERIES,
+    build_summary_text,
+    last_per_month,
+    latest_observation,
+    mom_delta_last_two,
+    top_movers,
+)
 
 REFERENCE_GOLDEN = "/root/reference/data/gold/summary.md"
 
@@ -118,3 +131,42 @@ def test_summary_fallback_lines_match_reference(spark):
         "BCB/SGS (série 11) - selic_sgs_11: último valor em 2026-01-09 = nan.\n"
         "ANP - sem dados para o período."
     )
+
+
+def _jobs(spark, group, fn) -> int:
+    """Spark jobs ``fn`` runs under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_summary_probes_anp_only_on_the_fallback_path(spark):
+    """With movers to report, the summary runs no ``take(1)`` probe:
+    its jobs are those of its three collects (latest value, MoM delta,
+    movers) and no more. Counted against the same collects in this
+    session, since the job count per collect follows its AQE and
+    partition settings."""
+    bcb, anp = _bcb(spark), _anp(spark)
+    anp_mom = mom_change(
+        build_gold_anp_monthly(anp.filter(F.col("date_ref").isNotNull())),
+        ["uf_sigla", "product"], "avg_price",
+    )
+    collects = [
+        latest_observation(bcb, DEFAULT_TARGET_SERIES),
+        mom_delta_last_two(last_per_month(bcb, DEFAULT_TARGET_SERIES)),
+        top_movers(anp_mom, k=3),
+    ]
+    expected = sum(
+        _jobs(spark, f"summary-collect-{i}", df.collect)
+        for i, df in enumerate(collects)
+    )
+    summary = _jobs(
+        spark, "summary-golden", lambda: build_summary_text(bcb, anp)
+    )
+    assert summary == expected

@@ -29,6 +29,7 @@ from etl_macropulse_br_spark.operators.summary import (
     mom_delta_last_two,
     top_movers,
 )
+from tests.test_pipeline import _jobs_in_group
 
 REFERENCE_GOLDEN = "/root/reference/data/gold/summary.md"
 
@@ -133,19 +134,6 @@ def test_summary_fallback_lines_match_reference(spark):
     )
 
 
-def _jobs(spark, group, fn) -> int:
-    """Spark jobs ``fn`` runs under job group ``group``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_summary_probes_anp_only_on_the_fallback_path(spark):
     """With movers to report, the summary runs no ``take(1)`` probe:
     its jobs are those of its three collects (latest value, MoM delta,
@@ -163,10 +151,10 @@ def test_summary_probes_anp_only_on_the_fallback_path(spark):
         top_movers(anp_mom, k=3),
     ]
     expected = sum(
-        _jobs(spark, f"summary-collect-{i}", df.collect)
+        len(_jobs_in_group(spark, f"summary-collect-{i}", df.collect)[1])
         for i, df in enumerate(collects)
     )
-    summary = _jobs(
+    _, jobs = _jobs_in_group(
         spark, "summary-golden", lambda: build_summary_text(bcb, anp)
     )
-    assert summary == expected
+    assert len(jobs) == expected
